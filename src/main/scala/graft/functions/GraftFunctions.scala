@@ -56,11 +56,6 @@ object GraftFunctions {
   def sorted_intersect_count(a: Column, b: Column): Column =
     col(SortedIntersectCount(expr(a), expr(b)))
 
-  /** Intersection size of two SORTED long arrays IF ≥ `need`, else -1
-    * (early-terminating merge — see [[SortedIntersectAtLeast]]). */
-  def sorted_intersect_atleast(a: Column, b: Column, need: Column): Column =
-    col(SortedIntersectAtLeast(expr(a), expr(b), expr(need)))
-
   /** Random-hyperplane LSH signature of a vector column (ANN bucketing). */
   def lsh_signature(v: Column, bits: Int, table: Int): Column =
     col(HyperplaneLshSignature(expr(v), bits, table))

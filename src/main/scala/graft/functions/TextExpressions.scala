@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
@@ -85,10 +84,10 @@ case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
   *
   * Linear-merge intersection size of two SORTED long arrays (duplicates
   * contribute min-multiplicity, like `array_intersect` on sets the arrays
-  * never have). The pair-verify hot path of prefix-filtered Jaccard: per
-  * candidate pair this replaces `array_intersect`/`array_union` over
-  * ~90-element string arrays (hash-probe + string equality per element)
-  * with one O(n_a + n_b) primitive merge — measured 7× on the verify
+  * never have). A pair-verify kernel: per candidate pair it replaces
+  * `array_intersect`/`array_union` over ~90-element string arrays
+  * (hash-probe + string equality per element) with one O(n_a + n_b)
+  * primitive merge — measured 7× on the verify
   * stage at sf0.1. Inputs MUST be sorted ascending (the caller sorts once
   * per document, not per pair).
   */
@@ -125,74 +124,3 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** sorted_intersect_atleast(array<long>, array<long>, int need) → int.
-  *
-  * [[SortedIntersectCount]] with EARLY TERMINATION at a required
-  * minimum: returns the exact intersection size when it is ≥ `need`,
-  * or -1 as soon as the remaining merge provably cannot reach `need`
-  * (count so far + min(remaining) < need). The PPJoin-family verify
-  * kernel: a candidate pair only matters if its overlap clears the
-  * threshold's equivalent-overlap bound α, and for a dissimilar pair
-  * the merge discovers that about halfway through instead of paying
-  * the full O(n_a + n_b). This is the role PPJoin+'s suffix filter
-  * plays (Xiao et al. 2008 §4) — in the DataFrame formulation the
-  * arrays are already attached when verification runs, so a bounded
-  * merge strictly dominates a separate divide-and-conquer suffix
-  * probe followed by the full merge the survivors still need.
-  * Callers must treat any negative result as "below threshold"; the
-  * exact sub-`need` count is never computed.
-  */
-case class SortedIntersectAtLeast(first: Expression, second: Expression,
-    third: Expression)
-    extends TernaryExpression with CodegenFallback with ExpectsInputTypes {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_atleast"
-  // array<long> (the full fnv64 verify) or array<int> (the truncated
-  // 32-bit pre-verify, r20 — half the attach bytes); both sides must
-  // agree — a mixed-width merge would compare different hash spaces.
-  override def inputTypes: Seq[Bridge.AbstractType] = Seq(
-    Bridge.typeCollection(ArrayType(LongType), ArrayType(IntegerType)),
-    Bridge.typeCollection(ArrayType(LongType), ArrayType(IntegerType)),
-    IntegerType)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (first.dataType != second.dataType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: both arrays must have the same element width, " +
-          s"got ${first.dataType.sql} and ${second.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  private lazy val elemIsInt = first.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(l: Any, r: Any, m: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val need = m.asInstanceOf[Int]
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var c = 0
-    // Same null-element skip as SortedIntersectCount: a null is no
-    // value; it matches nothing and never counts toward the bound.
-    while (i < na && j < nb) {
-      if (c + math.min(na - i, nb - j) < need) return -1
-      if (a.isNullAt(i)) i += 1
-      else if (b.isNullAt(j)) j += 1
-      else {
-        val x = if (elemIsInt) a.getInt(i).toLong else a.getLong(i)
-        val y = if (elemIsInt) b.getInt(j).toLong else b.getLong(j)
-        if (x < y) i += 1
-        else if (x > y) j += 1
-        else { c += 1; i += 1; j += 1 }
-      }
-    }
-    if (c >= need) c else -1
-  }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(first = f, second = s, third = t)
-}

@@ -404,10 +404,34 @@ object MqConsumerPool extends Logging {
     * could in principle saturate too (one armed prefetch per consumer,
     * unbounded consumers); depth ≥ 2 multiplies the exposure, so the
     * budget check comes with it.
+    *
+    * The budget is a RESERVATION on [[prefetchesInFlight]], not a read of
+    * `getActiveCount`: a read-then-submit lets concurrent submitters all
+    * pass the check and overshoot together. A slot is held from the
+    * reservation until the body's thread leaves `run` (a prefetch
+    * cancelled before it starts still passes through `run`, so no slot
+    * leaks), i.e. for exactly as long as it can occupy a fetch thread.
+    * The occupancy check stays in front: prefetches also stand aside
+    * while live fetches already fill half the pool.
     */
   private[mq] def tryPrefetchSubmit[A](body: () => A): java.util.concurrent.Future[A] =
     if (fetchPool.getActiveCount >= FetchPoolMaxThreads / 2) null
-    else trySubmit(body)
+    else if (prefetchesInFlight.incrementAndGet() > FetchPoolMaxThreads / 2) {
+      prefetchesInFlight.decrementAndGet(); null
+    } else {
+      val task = new java.util.concurrent.FutureTask[A](() => body()) {
+        override def run(): Unit =
+          try super.run() finally prefetchesInFlight.decrementAndGet()
+      }
+      try { fetchPool.execute(task); task }
+      catch {
+        case _: java.util.concurrent.RejectedExecutionException =>
+          prefetchesInFlight.decrementAndGet(); null
+      }
+    }
+
+  /** Prefetch bodies holding a fetch-pool slot (see [[tryPrefetchSubmit]]). */
+  private val prefetchesInFlight = new java.util.concurrent.atomic.AtomicInteger
 
   /** Await a fetch-pool future under a hard bound: timeout cancels the
     * body (interrupting its thread — a transport read that ignores the

@@ -18,4 +18,9 @@ private[graft] object ColNames {
 
   /** The column the quoted identifier resolves to. */
   def quotedCol(name: String): Column = col(quoted(name))
+
+  /** A working column name `<base><i>` that misses every name in `taken`
+    * — for operators that add scratch columns next to caller columns. */
+  def free(taken: Seq[String], base: String): String =
+    Iterator.from(0).map(i => s"$base$i").find(c => !taken.contains(c)).get
 }

@@ -46,8 +46,7 @@ object CurationOps {
     // Working id name chosen to MISS every caller column (a caller
     // column literally named "_id" used to collide with the fixed name
     // and break the rename-back join).
-    val tmpId = Iterator.from(0).map(i => s"_graft_decon_id$i")
-      .find(c => !train.columns.contains(c) && c != "gram").get
+    val tmpId = ColNames.free(train.columns.toSeq :+ "gram", "_graft_decon_id")
     // shinglesFromTokens is DISTINCT per document, so the post-join count
     // is "distinct shared grams" with a plain count(*) — no count(distinct).
     val evalGrams = evalSet
@@ -192,18 +191,24 @@ object CurationOps {
       salt: String = "dsir"): DataFrame = {
     require(buckets >= 2, s"dsirLogWeightsForSubset: buckets=$buckets must be >= 2")
     val id = ColNames.quotedCol(idCol)
+    // The id rides under a working name chosen to MISS every caller
+    // column, as in [[decontaminate]], and is renamed back at the end: a
+    // caller id named like one of the fixed working columns (`bk`, `c`,
+    // `w`, `_tgt`, `lam`) used to make the per-doc frame ambiguous.
+    val tmpId = ColNames.free(docs.columns.toSeq, "_graft_dsir_id")
     val perDocCounts = docs
-      .select(id, targetPred.as("_tgt"),
+      .select(id.as(tmpId), targetPred.as("_tgt"),
         explode(TextOps.tokens(ColNames.quotedCol(textCol))).as("w"))
-      .select(id, col("_tgt"), pmod(SamplingOps.hashOf(col("w"), salt),
+      .select(col(tmpId), col("_tgt"), pmod(SamplingOps.hashOf(col("w"), salt),
         lit(buckets.toLong)).as("bk"))
-      .groupBy(id, col("_tgt"), col("bk")).agg(count(lit(1)).as("c"))
+      .groupBy(col(tmpId), col("_tgt"), col("bk")).agg(count(lit(1)).as("c"))
     Caching.withCached(perDocCounts) {
       val rawCounts = perDocCounts.groupBy("bk").agg(sum("c").as("cr"))
       val tgtCounts = perDocCounts.filter(col("_tgt"))
         .groupBy("bk").agg(sum("c").as("ct"))
       val model = modelFromCounts(rawCounts, tgtCounts, buckets)
-      scoreFromDocCounts(perDocCounts.drop("_tgt"), model, id)
+      scoreFromDocCounts(perDocCounts.drop("_tgt"), model, col(tmpId))
+        .withColumnRenamed(tmpId, idCol)
     }
   }
 

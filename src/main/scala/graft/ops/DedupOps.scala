@@ -43,15 +43,6 @@ object DedupOps {
     * ≤ splitTarget² ≈ 4.2M element pairs, whatever the bucket size. */
   private[ops] val HotBucketSplitTarget = 2048L
 
-  /** Priced hash-order match volume above which [[jaccardPairsPrefix]]
-    * switches to df-ordered (rarest-first) prefixes: past ~8M candidate
-    * matches the array-attach verify exchange (≈1.2 KB/candidate)
-    * dwarfs the one corpus-linear ranking pass the df order costs, and
-    * rare prefixes typically cut candidates by an order of magnitude.
-    * Below it the ranking pass can't pay for itself (measured ~10× the
-    * savings at sf0.1). */
-  private[ops] val DfOrderMatchVol = 1L << 23
-
   /** Within-bucket candidate pairs with a HOT-BUCKET SKEW GUARD — the
     * shared self-join core of the three banded LSH pair generators
     * (simhash / minhash / embedding sign bands). Input: one row per
@@ -301,7 +292,7 @@ object DedupOps {
       .select(col("fp"), col(idName), col(payload), col("cnt"))
 
   private def withSetCollapse(base: DataFrame, threshold: Double,
-      scoreCol: String = "jaccard", priceExpr: Column = lit(0L))(
+      scoreCol: String = "jaccard")(
       run: (DataFrame, Long) => DataFrame): DataFrame = {
     // Per-shingle md5 BEFORE concatenation: shingles are arbitrary
     // strings (crawl text can contain any separator byte), so no in-band
@@ -315,14 +306,15 @@ object DedupOps {
     // carries the only array payload that must stay cached.
     val members = keyed.select(col("fp"), col("id"))
     Caching.withCached(members, reps) {
-      // ONE pricing job (r21): the caller's Σ price expression (posting /
-      // prefix volume — the volume-sized partitioning input) and the
-      // expansion switch's class-size max ride the same 1-row aggregate
+      // ONE pricing job (r21): the Σ posting count over the canonical
+      // sets (the volume-sized partitioning input handed to `run`) and
+      // the expansion switch's class-size max ride the same 1-row aggregate
       // over the cached reps frame, instead of one driver job each. The
       // job also populates the reps cache, so the op's main pass starts
       // from cached canonical sets exactly as before.
-      val (priced, maxCnt) = sumAndMax(reps, priceExpr, col("cnt"))
-      val repPairs = run(reps.select(col("id"), col("sh")), priced)
+      val (postings, maxCnt) =
+        sumAndMax(reps, size(col("sh")).cast("long"), col("cnt"))
+      val repPairs = run(reps.select(col("id"), col("sh")), postings)
       if (math.max(1L, maxCnt) <= 1L) repPairs
       else {
         val withinFps = reps
@@ -523,11 +515,11 @@ object DedupOps {
     * outgrows its share of execution memory, and the partial aggregate
     * degrades to sort-based spill with near-passthrough shuffle output
     * (ShuffleAudit r18: dedup_jaccard_exact wrote 18× the bytes for 10×
-    * the rows with 8 GB of sort spill at sf10; dedup_jaccard_prefix 86×
-    * with 11 GB). Pinning the join's partitioning to the POSTING count
-    * keeps per-task exploded volume — and the aggregate's map — bounded
-    * as the corpus grows: the in-operator analogue of sizing shuffle
-    * partitions to data volume on a real cluster. Capped at 4096 so a
+    * the rows with 8 GB of sort spill at sf10). Pinning the join's
+    * partitioning to the POSTING count keeps per-task exploded volume —
+    * and the aggregate's map — bounded as the corpus grows: the
+    * in-operator analogue of sizing shuffle partitions to data volume on
+    * a real cluster. Capped at 4096 so a
     * pathological count can't plan a million tasks.
     */
   private[ops] def explodedJoinPartitions(spark: org.apache.spark.sql.SparkSession,
@@ -553,10 +545,10 @@ object DedupOps {
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.5, shingleN: Int = 3,
       maxShingleDf: Int = Int.MaxValue,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    withSetCollapse(shingleSets(docs, shingleN, idCol, textCol), threshold,
-        priceExpr = size(col("sh")).cast("long")) { (base, postings) =>
-      jaccardFromCounts(pairIntersectionCounts(base, maxShingleDf, postings),
-        threshold)
+    withSetCollapse(shingleSets(docs, shingleN, idCol, textCol), threshold) {
+      (base, postings) =>
+        jaccardFromCounts(pairIntersectionCounts(base, maxShingleDf, postings),
+          threshold)
     }
 
   /** Overlap-coefficient near-dup pairs: |∩| / min(|A|, |B|) ≥ threshold
@@ -580,8 +572,7 @@ object DedupOps {
       maxShingleDf: Int = Int.MaxValue,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     withSetCollapse(shingleSets(docs, shingleN, idCol, textCol), threshold,
-        scoreCol = "overlap",
-        priceExpr = size(col("sh")).cast("long")) { (base, postings) =>
+        scoreCol = "overlap") { (base, postings) =>
       pairIntersectionCounts(base, maxShingleDf, postings)
         .withColumn("overlap", round(col("n_inter").cast("double") /
           least(col("n_a"), col("n_b")).cast("double"), 6))
@@ -668,9 +659,9 @@ object DedupOps {
 
   /** Shared scoring tail of the count-based Jaccard formulations:
     * jaccard = n_inter / (n_a + n_b − n_inter), rounded to 6 then
-    * thresholded — one place so the exact, prefix-filtered, and
-    * cross-corpus operators cannot silently diverge on rounding/threshold
-    * boundary semantics. `aCol`/`bCol` name the pair-id columns
+    * thresholded — one place so the exact and cross-corpus operators
+    * cannot silently diverge on rounding/threshold boundary semantics.
+    * `aCol`/`bCol` name the pair-id columns
     * (`doc_a`/`doc_b` for the symmetric family, `new_id`/`ref_id` for
     * the asymmetric reference join).
     */
@@ -1007,361 +998,6 @@ object DedupOps {
     }
   }
 
-  /** Exact Jaccard pairs with PPJoin-family prefix filtering (Xiao et
-    * al. 2008): under a fixed global total order on shingles, two sets
-    * with Jaccard ≥ t MUST share a shingle within bounded prefixes, and
-    * their sizes must satisfy `t ≤ min(n)/max(n)`. Indexing only
-    * prefixes (and joining under the length, role, and positional
-    * filters below) shrinks the candidate join while staying EXACT:
-    * candidates are verified with the full `|∩|/|∪|`.
-    *
-    * Three candidate filters beyond the basic prefix join (r18 — the
-    * prefix-only formulation was the registry's priciest row and the
-    * closest to its ×100 probe ceiling):
-    *
-    *  - SIZE-ROLE PREFIXES: every pair is generated with its SMALLER set
-    *    probing and its larger set indexed ((n, id)-lexicographic role).
-    *    The smaller side's overlap bound is α = ceil(2t/(1+t)·n), so its
-    *    probing prefix shrinks from `n − ceil(t·n) + 1` to
-    *    `n − ceil(2t/(1+t)·n) + 1` (at t = 0.5: n/3 + 1 vs n/2 + 1) —
-    *    the candidate space is (mid-prefix × standard-prefix), not
-    *    (standard × standard).
-    *  - POSITIONAL / CANDIDATE-MAP FILTER: the pair distinct becomes a
-    *    same-key groupBy carrying (match count mc, first/last matched
-    *    positions), and two overlap upper bounds prune post-agg:
-    *    `mc + min(n_a − last_a, n_b − last_b)` (every common element
-    *    NOT matched in the prefixes exceeds the last matched value —
-    *    it would otherwise be a prefix×prefix match itself — so it
-    *    sits after BOTH last positions) and
-    *    `min(first_a, first_b) + min(n_a − first_a, n_b − first_b)`
-    *    (common elements below the first matched value precede both
-    *    positions, those above follow both). Exact: both bounds
-    *    dominate the true overlap, and the bound-to-jaccard comparison
-    *    reuses the verify's own round(·, 6) ≥ t test, so monotonicity
-    *    never drops a true pair. The bounds deliberately do NOT run as
-    *    per-row join filters: dropping individual match rows would
-    *    undercount mc and silently invalidate the map bound.
-    *  - EARLY-TERMINATING VERIFY: survivors verify with
-    *    [[graft.functions.SortedIntersectAtLeast]] — the linear merge
-    *    bails (result -1, filtered by the shared threshold tail) the
-    *    moment the remaining elements cannot reach the pair's required
-    *    overlap α. This is PPJoin+'s suffix-filter role: with arrays
-    *    already attached, a bounded merge strictly dominates a separate
-    *    suffix probe plus the full merge survivors still need.
-    *
-    * All bound arithmetic uses t′ = t − 10⁻⁶: the verify admits pairs
-    * whose round(j, 6) crosses t from below, so every filter must too —
-    * the slack only ADMITS boundary candidates, never drops one, and the
-    * exact verify settles them.
-    *
-    * The global order is ADAPTIVE (r18): `fnv64(shingle)` ascending by
-    * default — a fixed pseudo-random order every document computes
-    * LOCALLY, so the prefix is a per-doc map-side `array_sort` + `slice`
-    * with no shuffle before the candidate join — switching to classic
-    * PPJoin ASCENDING-DF order (rarest shingles in the prefix) once the
-    * priced hash-order match volume crosses [[DfOrderMatchVol]]. The df
-    * order needs a corpus-linear ranking pass (postings ⋈ df, per-doc
-    * re-sort) that measured ~10× more than it saved at sf0.1, but at
-    * sf10 the hash order's 20.6M candidates carried an 11.6 GB verify
-    * attach for 25.6k true pairs — the regime where rare prefixes pay
-    * (measured: see §8). The theorems hold under ANY fixed total order,
-    * so both paths are exact and the switch is a pure cost decision;
-    * `dfOrderedPrefix` forces a path for specs/probes. Hash collisions
-    * could only merge two order keys (~|shingles|²/2⁶⁵ odds); candidates
-    * are verified exactly either way, and the join key being the 8-byte
-    * hash also halves the shuffle width vs. raw shingles.
-    */
-  def jaccardPairsPrefix(docs: DataFrame, threshold: Double = 0.5, shingleN: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      dfOrderedPrefix: Option[Boolean] = None,
-      twoPhaseVerify: Option[Boolean] = None): DataFrame = {
-    require(threshold > 0 && threshold <= 1)
-    val t = threshold - 1e-6 // round(·,6)-verify slack; see scaladoc
-    val midFrac = 2 * t / (1 + t)
-    // Priced by the wrapper's combined 1-row job (r21): Σ prefLen over
-    // the reps frame — see the PRICING note below; prefLen depends only
-    // on the set size, so the wrapper's `sh` column is all it needs.
-    val prefPrice = (size(col("sh")) -
-      ceil(size(col("sh")) * t - lit(1e-9)) + 1).cast("long")
-    withSetCollapse(shingleSets(docs, shingleN, idCol, textCol), threshold,
-        priceExpr = prefPrice) { (base, prefixRows) =>
-    val hashed = base.select(col("id"), size(col("sh")).as("n"),
-      array_sort(transform(col("sh"), s => GraftFunctions.fnv64(s))).as("hs"))
-    Caching.withCached(hashed) {
-    // Standard (index-role) prefix with 1-based positions: each doc's
-    // (n - ceil(t*n) + 1) smallest elements UNDER THE CHOSEN TOTAL ORDER.
-    // The probe side filters this SAME cached frame down to the
-    // mid-prefix — one explode, two roles. (The -1e-9 inside ceil guards
-    // double rounding UP across an integer boundary, which would shorten
-    // a prefix illegally; rounding down only lengthens it.)
-    val prefLen = (col("n") - ceil(col("n") * t - lit(1e-9)) + 1).cast("int")
-    val hashPrefixes = hashed
-      .select(col("id"), col("n"), posexplode(slice(col("hs"), lit(1), prefLen)))
-      .select(col("id"), col("n"), (col("pos") + 1).as("pos"),
-        col("col").as("shingle"))
-    // ADAPTIVE ORDER SWITCH (r18): the hash order is free (per-doc
-    // map-side sort, no shuffle) but blind — a prefix hash is as likely
-    // to be a stopword-run shingle shared by half the corpus as a rare
-    // one, so candidate volume grows with corpus density. The classic
-    // PPJoin order is ASCENDING DOCUMENT FREQUENCY (rarest shingles in
-    // the prefix — Xiao et al. 2008 §3): it costs a corpus-linear
-    // ranking pass (postings ⋈ df counts, one per-doc re-sort), which
-    // measured ~10× more than it saved at sf0.1 — but at sf10 the
-    // hash-order candidate stream reached 20.6M pairs carrying a
-    // 11.6 GB array-attach exchange for 25.6k true pairs (PlanMetrics,
-    // this round), exactly the "candidate volume dominates" regime the
-    // r17 scaladoc predicted. So: price the hash-order match volume
-    // (Σ df·(df−1)/2 over the prefix index — one aggregate over the
-    // cached frame) and switch to df-ordering once it crosses
-    // [[DfOrderMatchVol]]; `dfOrderedPrefix` forces either path for
-    // specs and probes. EXACTNESS is order-independent: the prefix
-    // theorems hold under ANY fixed total order, positions in the
-    // bounds are positions in the chosen order on both sides, and the
-    // verify runs on the hash-SORTED arrays either way (the merge needs
-    // its own order, not the prefix's).
-    // PRICING (r19: one mandatory job, not four; r21: zero — folded into
-    // the collapse wrapper's combined 1-row job): Σ prefLen over the
-    // per-doc reps frame is simultaneously (a) the volume gate, (b) the
-    // exact row count of the prefix frame under EITHER order (prefLen
-    // depends only on n, not on which shingles the order picks) — so no
-    // prefixes.count() job exists — and (c) the sizing input for the
-    // exploding-join repartition. The df·(df−1)/2 match-volume aggregate
-    // runs only above the gate, and its hash-order value is REUSED for
-    // the downstream agg guard (repartitioning doesn't change df counts).
-    val prefixVolGate = prefixRows >= (1L << 19)
-    lazy val hashMatchVol = if (!prefixVolGate) 0L
-      else totalOf(hashPrefixes.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .select((col("df") * (col("df") - lit(1)) / 2).cast("long").as("n")), "n")
-    // Order resolution: caller force > session conf pin (the audit
-    // tools set spark.graft.jaccardPrefix.dfOrder so both sides of a
-    // cross-scale byte/row comparison run the SAME regime — the adaptive
-    // switch is a cost decision that otherwise flips between scales and
-    // reads as a spurious super-linear ratio) > priced adaptive default.
-    val confPin = docs.sparkSession.conf
-      .getOption("spark.graft.jaccardPrefix.dfOrder").map(_.toBoolean)
-    // A session-conf pin is an AUDIT tool's measurement aid, not a tuning
-    // knob — surface it loudly so a query silently inheriting a leaked
-    // pin (ADVICE r19 #5) is visible in the logs; the audit tools also
-    // unset it after their runs (ShuffleAudit.unpinStrategies).
-    if (confPin.nonEmpty && dfOrderedPrefix.isEmpty)
-      org.slf4j.LoggerFactory.getLogger("graft.ops.DedupOps").warn(
-        s"graft: jaccardPrefix prefix order pinned to df=${confPin.get} by session conf " +
-          "spark.graft.jaccardPrefix.dfOrder (audit pin) — overriding the priced " +
-          "adaptive default; unset the conf to restore it")
-    val useDf = dfOrderedPrefix.orElse(confPin)
-      .getOrElse(hashMatchVol > DfOrderMatchVol)
-    val prefixes =
-      if (!useDf) hashPrefixes
-      else {
-        // Ranking pass: per-shingle df over the collapsed corpus (the
-        // global order is (df, hash) — deterministic, ties by hash),
-        // then each doc's shingles re-sorted by that order and cut to
-        // the prefix. collect_list per doc is set-sized (the same bound
-        // as the hs array itself), so the agg state is per-doc bounded;
-        // the df join is an equi-join of two corpus-linear frames.
-        val postings = hashed.select(col("id"), col("n"), explode(col("hs")).as("h"))
-        val dfc = postings.groupBy("h").agg(count(lit(1)).as("df"))
-        postings.join(dfc, "h")
-          .groupBy(col("id"), col("n"))
-          .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("o"))
-          .select(col("id"), col("n"), posexplode(slice(col("o"), lit(1), prefLen)))
-          .select(col("id"), col("n"), (col("pos") + 1).as("pos"),
-            col("col.h").as("shingle"))
-      }
-    Caching.withCached(prefixes) {
-    // Corpus-sized partitioning for the exploding prefix join (see
-    // [[explodedJoinPartitions]]; prefixRows was priced above from the
-    // per-doc frame — no count job here). The probe side is a FILTER of
-    // the repartitioned index side — filters preserve hash partitioning,
-    // so the roles stay co-partitioned and the join adds no exchange.
-    val idx = explodedJoinPartitions(docs.sparkSession, prefixRows)
-      .map(p => prefixes.repartition(p, col("shingle"))).getOrElse(prefixes)
-    val probe = idx.filter(col("pos") <=
-      (col("n") - ceil(col("n") * midFrac - lit(1e-9)) + 1).cast("int"))
-    val a = probe.as("a"); val b = idx.as("b")
-    // Join under the per-PAIR filters only (role + length — constant
-    // across a pair's match rows, so dropping is always sound); the
-    // positional bounds need the pair's FULL match statistics and run
-    // after the groupBy that replaces the old bare-pair distinct (same
-    // shuffle key, five small ints of carry instead of dedupe-only).
-    val joined = a.join(b,
-        col("a.shingle") === col("b.shingle") &&
-          // role: the probe is the strictly-smaller set (id breaks ties)
-          (col("a.n") < col("b.n") ||
-            (col("a.n") === col("b.n") && col("a.id") < col("b.id"))) &&
-          // length filter: t <= n_a/n_b (a is the smaller by role)
-          col("a.n").cast("double") >= col("b.n") * t)
-    // Volume-sized pair aggregation — same rationale as [[jaccardPairs]]'
-    // incidence agg (map-side combining is near-nil on a bucket-scattered
-    // pair stream; PlanMetrics at sf10 measured 8.4 GB of agg spill at
-    // input-sized task counts). The match volume is bounded by
-    // Σ df·(df−1)/2 over the PREFIX index (a slight overestimate of the
-    // mid×standard role join — only ever too many partitions, never too
-    // few), priced by one df-count pass over the cached repartitioned
-    // frame, only when the guard is active.
-    // Priced whenever the prefix frame carries real volume — the match
-    // volume can trip the agg guard even when the frame itself doesn't
-    // (13.4M prefix rows → 33M match rows at sf10). On the hash path the
-    // order-switch pricing already computed this exact value; only the
-    // df-ordered prefix (different shingle content) needs a fresh pass.
-    val matchVol = if (!prefixVolGate) 0L
-      else if (!useDf) hashMatchVol
-      else totalOf(idx.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .select((col("df") * (col("df") - lit(1)) / 2).cast("long").as("n")), "n")
-    val pre = explodedJoinPartitions(docs.sparkSession, matchVol)
-      .map(p => joined.repartition(p, col("a.id"), col("b.id"))).getOrElse(joined)
-    val matches = pre
-      .groupBy(col("a.id").as("id_s"), col("b.id").as("id_l"),
-        col("a.n").as("n_s"), col("b.n").as("n_l"))
-      .agg(count(lit(1)).as("mc"),
-        min(col("a.pos")).as("fps"), min(col("b.pos")).as("fpl"),
-        max(col("a.pos")).as("lps"), max(col("b.pos")).as("lpl"))
-    // Both overlap upper bounds, phrased as the verify's own jaccard
-    // test (monotone in the overlap, so never drops a true pair).
-    def jaccardUpper(u: Column) =
-      round(u.cast("double") / (col("n_s") + col("n_l") - u), 6) >= threshold
-    val mapBound = col("mc") +
-      least(col("n_s") - col("lps"), col("n_l") - col("lpl"))
-    val firstBound = least(col("fps"), col("fpl")) +
-      least(col("n_s") - col("fps"), col("n_l") - col("fpl"))
-    val candidates = matches
-      .filter(jaccardUpper(mapBound) && jaccardUpper(firstBound))
-      .select(least(col("id_s"), col("id_l")).as("doc_a"),
-        greatest(col("id_s"), col("id_l")).as("doc_b"))
-    // Verify on the per-doc SORTED hash arrays: |∩| by early-terminating
-    // merge against the pair's required overlap α = ceil(t(n_a+n_b)/(1+t)),
-    // |∪| = n_a + n_b − |∩|. Even with the candidate-map bounds (2.1×
-    // fewer verified pairs than the r17 prefix-only formulation at
-    // sf0.1: 428k → 204k) the join admits far more candidates than
-    // survivors, so per-pair verify cost dominates the whole operator —
-    // string-array array_intersect here measured 15 s at sf0.1 vs ~2 s
-    // for the primitive merge, and the α bail-out cuts the merge short
-    // on the dissimilar majority. A -1 bail-out yields a negative
-    // jaccard in the threshold tail and is filtered with the
-    // sub-threshold pairs.
-    // Attach joins as SHUFFLED HASH (same rationale as the r17 semantic
-    // attach fix): above the broadcast threshold the planner's SMJ SORTS
-    // the candidate stream — the second sort carrying the first join's
-    // ~1.2 KB hash-array payload per row — and ShuffleAudit priced that
-    // at 11 GB of sort spill / 12.5 GB shuffle at sf10. Hash attaches
-    // shuffle each stream once with no sort amplification; the build
-    // side is the per-doc hashed frame — corpus-bounded by construction.
-    //
-    // TWO-PHASE VERIFY (r20 — VERDICT r19 #6: the candidates×array
-    // attach was the registry's priciest exchange, 7.0 GB at sf10).
-    // Phase 1 attaches 32-BIT TRUNCATIONS of the sorted hashes — half
-    // the bytes on the candidate-sized exchange — and filters on the
-    // 32-bit jaccard. EXACT as an admitting filter: n stays the TRUE
-    // 64-bit set size, and for every 32-bit value v the merge counts
-    // min(mult_a(v), mult_b(v)) ≥ |A∩B ∩ preimages(v)|, so
-    // inter32 ≥ inter64 and j32 ≥ true jaccard — collisions can only
-    // ADMIT false survivors, never drop a true pair (the α bail-out is
-    // likewise safe: inter32 < α implies inter64 < α). Phase 2 settles
-    // the survivor-sized set exactly on the full 64-bit arrays — the
-    // stream side there is ~true-pair-sized (25.6k rows at sf10 vs the
-    // multi-million candidate stream), so its attach bytes are noise; it
-    // keeps the jaccardPairs 64-bit collision trade (~|shingles|²/2⁶⁵).
-    // (Delta+varint coding was rejected: sorted UNIFORM 64-bit hashes
-    // have ~2⁶⁴/n gaps, so varint deltas still need ~8 bytes — the
-    // entropy is irreducible without dropping bits, which is what the
-    // 32-bit phase does, recoverably.)
-    val alpha = ceil((col("n_a") + col("n_b")) * lit(t) / lit(1 + t) - lit(1e-9))
-      .cast("int")
-    // The exact 64-bit attach+merge tail both phases share: `side` is the
-    // per-doc frame the full arrays come from (the whole cached corpus on
-    // the single-phase path; the survivor-filtered corpus on the settle).
-    def exactAttach(pairs: DataFrame, side: DataFrame): DataFrame =
-      jaccardFromCounts(pairs
-        .join(side.select(col("id").as("doc_a"), col("n").as("n_a"),
-          col("hs").as("hs_a")).hint("shuffle_hash"), "doc_a")
-        .join(side.select(col("id").as("doc_b"), col("n").as("n_b"),
-          col("hs").as("hs_b")).hint("shuffle_hash"), "doc_b")
-        .withColumn("n_inter", GraftFunctions.sorted_intersect_atleast(
-          col("hs_a"), col("hs_b"), alpha)),
-        threshold)
-    // ADAPTIVE PHASE SWITCH (r21): the 32-bit first phase halves the
-    // bytes of the candidate-sized attach exchange — decisive at sf10
-    // (7.0 → 3.6 GB, −28% wall, r20) — but its fixed extra work (a
-    // second attach pass, the survivor count job, the id-broadcast
-    // build) dominates when the candidate stream is small: the r20
-    // watch item measured +14% at sf0.1, where candidates are ~200k
-    // rows and the attach exchange is already noise. matchVol — the
-    // ALREADY-PRICED Σ df·(df−1)/2 upper bound on candidate rows (0
-    // below the prefix volume gate) — prices the choice at no extra
-    // job. Both paths are exact (the 32-bit filter only ever ADMITS
-    // false survivors, and both settle with the same 64-bit merge), so
-    // the switch is a pure cost decision — same contract as the
-    // dfOrder switch, with the same audit conf pin so a cross-scale
-    // byte comparison runs ONE regime on both sides.
-    val phasePin = docs.sparkSession.conf
-      .getOption("spark.graft.jaccardPrefix.twoPhase").map(_.toBoolean)
-    if (phasePin.nonEmpty && twoPhaseVerify.isEmpty)
-      org.slf4j.LoggerFactory.getLogger("graft.ops.DedupOps").warn(
-        s"graft: jaccardPrefix verify phase pinned to twoPhase=${phasePin.get} by " +
-          "session conf spark.graft.jaccardPrefix.twoPhase (audit pin) — " +
-          "overriding the priced adaptive default; unset the conf to restore it")
-    val useTwoPhase = twoPhaseVerify.orElse(phasePin)
-      .getOrElse(matchVol > TwoPhaseMatchVol)
-    if (!useTwoPhase) exactAttach(candidates, hashed)
-    else {
-    // HIGH 32 bits: arithmetic shift is MONOTONE in the signed 64-bit
-    // order, so the truncated array inherits hs's sortedness — no
-    // re-sort pass — and the int cast is exact (ANSI-safe).
-    val h32 = transform(col("hs"), x => shiftright(x, 32).cast("int"))
-    val survivors32 = candidates
-      .join(hashed.select(col("id").as("doc_a"), col("n").as("n_a"),
-        h32.as("h32_a")).hint("shuffle_hash"), "doc_a")
-      .join(hashed.select(col("id").as("doc_b"), col("n").as("n_b"),
-        h32.as("h32_b")).hint("shuffle_hash"), "doc_b")
-      .withColumn("n_i32", GraftFunctions.sorted_intersect_atleast(
-        col("h32_a"), col("h32_b"), alpha))
-      .filter(round(col("n_i32").cast("double") /
-        (col("n_a") + col("n_b") - col("n_i32")).cast("double"), 6) >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-    Caching.withCached(survivors32) {
-      // Exact settle, survivor-sized end to end: the 32-bit filter's
-      // false admits are boundary-rare, so survivors ≈ true pairs (24.1k
-      // at sf10 vs the 12.3M-row candidate stream). The full arrays are
-      // re-attached from the corpus frame FILTERED by a broadcast of the
-      // survivor ids — a cached-corpus scan plus survivor-sized
-      // shuffles, never a corpus-sized build (an unfiltered hash attach
-      // here measured ~15% warm regression at sf10: two 500k-row ×
-      // 1.2 KB hash-table builds for a 24k-row probe). Guarded: a
-      // pathological threshold could make survivors corpus-scale, where
-      // the id broadcast stops being small and the r19 corpus-build
-      // attach is the safe fallback.
-      val exactSide =
-        if (survivors32.count() <= MaxIdBroadcastPairs) {
-          val ids = survivors32.select(col("doc_a").as("id"))
-            .union(survivors32.select(col("doc_b").as("id"))).distinct()
-          hashed.join(broadcast(ids), "id")
-        } else hashed
-      exactAttach(survivors32, exactSide)
-    }
-    }
-    }
-    }
-    }
-  }
-
-  /** Survivor-pair bound for the exact-settle id broadcast in
-    * [[jaccardPairsPrefix]]: below it the distinct survivor ids (≤ 2×
-    * pairs × 8 bytes — ≤ 64 MB here) broadcast safely on any cluster;
-    * above it the settle falls back to the corpus-build attach.
-    */
-  private val MaxIdBroadcastPairs: Long = 1L << 22
-
-  /** Priced match volume above which [[jaccardPairsPrefix]] verifies in
-    * two phases (32-bit truncated attach + survivor-sized exact settle):
-    * at ~2M candidates the truncation saves ~1.2 GB on the attach
-    * exchange (≈600 B of hash arrays per candidate halved), which is
-    * where it starts clearing the two-phase's fixed costs — one extra
-    * attach pass, the survivor count job, and the id-broadcast build,
-    * together ~0.5-1 s of stage overhead regardless of volume (the r20
-    * watch item: unconditional two-phase cost +14% at sf0.1's ~200k
-    * candidates while saving 28% at sf10's 12.3M). */
-  private[ops] val TwoPhaseMatchVol: Long = 1L << 21
-
   /** Per-document distinct shingle sets. Callers persist this (via
     * [[Caching.withCached]]): shingling is the expensive per-doc map, and
     * it is consumed multiple times (signature, band explode, and the
@@ -1394,8 +1030,8 @@ object DedupOps {
     * `minShared` winnowing fingerprints ([[TextOps.winnowFingerprints]] —
     * any pair sharing a token run of ≥ k + minShared·w - 1 IS a
     * candidate), verified with exact shingle Jaccard ≥ `threshold`. The
-    * fourth candidate-generation formulation next to MinHash-LSH banding,
-    * PPJoin prefixes, and the full inverted index, feeding the same
+    * third candidate-generation formulation next to MinHash-LSH banding
+    * and the full inverted index, feeding the same
     * verify: at scale the fingerprint index is ~2/(w+1) the size of the
     * full inverted index, and the join is an equi-join on the fingerprint
     * — no ranking shuffle, no banding.

@@ -94,21 +94,44 @@ object GraftQueries {
     * shared input frames are immutable. `get` rethrows a task failure as
     * itself. Used only where the branches are genuinely independent — a
     * dependent chain gains nothing.
+    *
+    * Every Spark job a task launches carries the pool's job tag, so
+    * [[abort]] — the failure path — can cancel the sibling branches'
+    * jobs instead of leaving them running after the caller has thrown.
     */
   private val ConcurrentJobs = 3
-  private final class JobPool {
+  private final class JobPool(sc: org.apache.spark.SparkContext) {
     private val pool =
       java.util.concurrent.Executors.newFixedThreadPool(ConcurrentJobs)
-    def submit[A](t: => A): java.util.concurrent.Future[A] =
-      pool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = t
+    private val tag = s"graft-job-pool-${java.util.UUID.randomUUID()}"
+    private val futures =
+      new java.util.concurrent.ConcurrentLinkedQueue[java.util.concurrent.Future[_]]()
+    def submit[A](t: => A): java.util.concurrent.Future[A] = {
+      val f = pool.submit(new java.util.concurrent.Callable[A] {
+        override def call(): A = {
+          sc.addJobTag(tag)
+          try t finally sc.removeJobTag(tag)
+        }
       })
+      futures.add(f)
+      f
+    }
     def get[A](f: java.util.concurrent.Future[A]): A =
       try f.get()
       catch {
         case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
     def shutdown(): Unit = pool.shutdown()
+    /** Stop every branch: cancel (interrupting) the outstanding tasks, stop
+      * the threads, then cancel whatever Spark jobs they left behind — a
+      * thread interrupted while it waits on a job returns, but the job
+      * itself keeps running until cancelled by tag. */
+    def abort(): Unit = {
+      futures.forEach(f => f.cancel(true))
+      pool.shutdownNow()
+      pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+      sc.cancelJobsWithTag(tag)
+    }
   }
 
   private val AnnDumpPath = "/tmp/graft_sim_ann_dump"
@@ -1089,8 +1112,16 @@ object GraftQueries {
       .orderBy("doc_a", "doc_b"),
     Some(jaccardOracle))
 
+  /** Kept registered under its name (the DuckDB oracle run and the
+    * perfbench query list name it); it serves the exact inverted index's
+    * answer ([[DedupOps.jaccardPairs]]). The PPJoin prefix-filtered
+    * formulation it used to run returned the same pairs with more jobs
+    * per call: slower at sf0.1, within run-to-run spread of the index at
+    * the ×10 MakeSf rung, so it was removed rather than kept as a second
+    * exact-Jaccard path.
+    */
   private val d09 = Q("dedup_jaccard_prefix",
-    (s, dir) => DedupOps.jaccardPairsPrefix(t(s, dir, "documents"), threshold = 0.5)
+    (s, dir) => DedupOps.jaccardPairs(t(s, dir, "documents"), threshold = 0.5)
       .orderBy("doc_a", "doc_b"),
     Some(jaccardOracle))
 
@@ -3202,6 +3233,42 @@ object GraftQueries {
         round(cos, 6) AS cosine
       FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""))
 
+  /** The sim_recall_ann fan-out: the ANN paths and the brute-force
+    * reference are INDEPENDENT pipelines over the same inputs, each
+    * materializing its own bounded intermediates (shortlists,
+    * signatures) eagerly during construction — built sequentially they
+    * serialize ~six sub-second jobs; the [[JobPool]] overlaps them
+    * (guide §2.6). Brute force is submitted FIRST (FIFO: it starts
+    * immediately) and harvested LAST (r22 — VERDICT r21 #8): the ANN
+    * union's checkpoint AND the oracle dump write overlap its compute
+    * instead of waiting on it. Returns (the `path`-tagged ANN union,
+    * brute force). If any branch throws, the pool is aborted — the other
+    * branches' Spark jobs are cancelled, not orphaned — and the failure
+    * propagates as itself.
+    */
+  private[queries] def overlapAnnPaths(s: SparkSession, brute: => DataFrame,
+      paths: Seq[(String, () => DataFrame)]): (DataFrame, DataFrame) = {
+    val pool = new JobPool(s.sparkContext)
+    try {
+      val bruteFut = pool.submit(brute)
+      val annFuts = paths.map { case (p, f) => p -> pool.submit(f()) }
+      val annUnion = annFuts
+        .map { case (p, fut) =>
+          pool.get(fut)
+            .select(lit(p).as("path"), col("query_id"), col("neighbor_id"))
+        }
+        .reduce(_ unionByName _)
+        // Eager checkpoint: the union is consumed by the dump and two
+        // joins downstream; without it each action re-runs every ANN
+        // pipeline.
+        .localCheckpoint(true)
+      verifyDump(annUnion, AnnDumpPath)
+      (annUnion, pool.get(bruteFut))
+    } catch {
+      case e: Throwable => pool.abort(); throw e
+    } finally pool.shutdown()
+  }
+
   /** Recall@k of every ANN path against brute force, as a VALUE-EXACT
     * correctness row (the `sim_topk_*` paths are themselves value-exact
     * via model dump-and-replay since r16 — this row additionally pins
@@ -3233,47 +3300,23 @@ object GraftQueries {
       // never race a model build.
       val cents = registeredIvfCentroids(s, dir)
       val pqIdx = registeredPqIndex(s, dir)
-      // The four ANN paths and the brute-force reference are INDEPENDENT
-      // pipelines over the same inputs, each materializing its own
-      // bounded intermediates (shortlists, signatures) eagerly during
-      // construction — built sequentially they serialize ~six sub-second
-      // jobs; the [[JobPool]] overlaps them (guide §2.6). Brute force is
-      // submitted FIRST (FIFO: it starts immediately) and harvested LAST
-      // (r22 — VERDICT r21 #8): the ANN union's checkpoint AND the
-      // oracle dump write below overlap its compute instead of waiting
-      // on it. Its checkpoint materializes the result consumed twice
+      // The brute-force checkpoint materializes the result consumed twice
       // downstream (hits join + expected count), replacing the old
       // persist.
-      val pool = new JobPool
-      val (ann, brute) =
-        try {
-          val bruteFut = pool.submit(SimilarityOps.bruteForceTopK(q, c, k = 5)
-            .select("query_id", "neighbor_id").localCheckpoint(true))
-          val annFuts = Seq[(String, () => DataFrame)](
-            "lsh" -> (() => SimilarityOps.lshTopK(q, c, k = 5, bits = 8,
-              tables = 8)),
-            "ivf" -> (() => SimilarityOps.ivfTopK(q, c, k = 5, nlist = 8,
-              nprobe = 2, trainFraction = 0.25, trainIters = 5,
-              centroids = Some(cents))),
-            "ivf_q8" -> (() => SimilarityOps.ivfTopKQ8(q, c, k = 5, nlist = 8,
-              nprobe = 2, trainFraction = 0.25, trainIters = 5, rerank = 4,
-              centroids = Some(cents))),
-            "ivf_pq" -> (() => SimilarityOps.ivfTopKPqIndexed(q,
-              pqIdx, c, k = 5, nprobe = 2, rerank = 4))
-          ).map { case (p, f) => p -> pool.submit(f()) }
-          val annUnion = annFuts
-            .map { case (p, fut) =>
-              pool.get(fut)
-                .select(lit(p).as("path"), col("query_id"), col("neighbor_id"))
-            }
-            .reduce(_ unionByName _)
-            // Eager checkpoint: the union is consumed by the dump and two
-            // joins below; without it each action re-runs all three ANN
-            // pipelines.
-            .localCheckpoint(true)
-          verifyDump(annUnion, AnnDumpPath)
-          (annUnion, pool.get(bruteFut))
-        } finally pool.shutdown()
+      val (ann, brute) = overlapAnnPaths(s,
+        SimilarityOps.bruteForceTopK(q, c, k = 5)
+          .select("query_id", "neighbor_id").localCheckpoint(true),
+        Seq[(String, () => DataFrame)](
+          "lsh" -> (() => SimilarityOps.lshTopK(q, c, k = 5, bits = 8,
+            tables = 8)),
+          "ivf" -> (() => SimilarityOps.ivfTopK(q, c, k = 5, nlist = 8,
+            nprobe = 2, trainFraction = 0.25, trainIters = 5,
+            centroids = Some(cents))),
+          "ivf_q8" -> (() => SimilarityOps.ivfTopKQ8(q, c, k = 5, nlist = 8,
+            nprobe = 2, trainFraction = 0.25, trainIters = 5, rerank = 4,
+            centroids = Some(cents))),
+          "ivf_pq" -> (() => SimilarityOps.ivfTopKPqIndexed(q,
+            pqIdx, c, k = 5, nprobe = 2, rerank = 4))))
       val hits = ann.join(brute, Seq("query_id", "neighbor_id"))
         .groupBy("path").agg(count(lit(1)).as("n_hits"))
       ann.select("path").distinct()

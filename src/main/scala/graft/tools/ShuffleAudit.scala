@@ -269,30 +269,16 @@ object ShuffleAudit {
 
   /** Strategy pinning (r19 — VERDICT r18 #2): a ratio compares EXECUTED
     * plans, so any cost-based flip between the two scales fabricates a
-    * super-linear reading. Two flips exist in this registry and both are
-    * pinned to their AT-SCALE side:
-    *
-    *  - auto-broadcast: disabled (-1), so a join never broadcasts at the
-    *    base scale and shuffles at the scaled one (3 of r18's 7 FAILs).
-    *    Explicit broadcast()/hint() calls in queries are untouched —
-    *    those are scale-independent design decisions the audit SHOULD
-    *    measure.
-    *  - dedup_jaccard_prefix's adaptive prefix order: forced to the
-    *    df-ordered path (the regime its match-volume pricing selects at
-    *    scale), so both sides pay the same ranking pass — unpinned, the
-    *    hash order at ×10 vs df order at ×100 read as rows 13.95× /
-    *    bytes 7.56× (r19 sweep), a flip signature, not a shape problem.
+    * super-linear reading. Auto-broadcast is the flip this registry has,
+    * so it is disabled (-1) on both sides: a join never broadcasts at the
+    * base scale and shuffles at the scaled one (3 of r18's 7 FAILs).
+    * Explicit broadcast()/hint() calls in queries are untouched — those
+    * are scale-independent design decisions the audit SHOULD measure.
+    * These are the confs [[pinStrategies]] sets, with their pinned values.
     */
-  /** Confs [[pinStrategies]] sets, with the pinned value each gets. The
-    * prefix verify-phase pin (r21) joins dfOrder for the same reason:
-    * the adaptive single-vs-two-phase switch is a priced cost decision
-    * that flips between scales, and an unpinned flip reads as a
-    * spurious byte-ratio step on the attach exchange. */
   private val PinnedConfs = Seq(
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-    "spark.graft.jaccardPrefix.dfOrder" -> "true",
-    "spark.graft.jaccardPrefix.twoPhase" -> "true")
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
   /** Pre-pin values captured by [[pinStrategies]] so [[unpinStrategies]]
     * RESTORES them instead of resetting to Spark defaults (ADVICE r20
@@ -308,13 +294,12 @@ object ShuffleAudit {
     prePinValues.put(spark,
       PinnedConfs.map { case (k, _) => k -> spark.conf.getOption(k) })
     PinnedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    println("[shuffle] strategy pin: autoBroadcastJoinThreshold=-1, " +
-      "jaccardPrefix.dfOrder=true, jaccardPrefix.twoPhase=true (both sides)")
+    println("[shuffle] strategy pin: autoBroadcastJoinThreshold=-1 (both sides)")
   }
 
-  /** Undo [[pinStrategies]] (r20 — ADVICE r19 #5: the dfOrder conf is a
-    * silent behavior override, so a session that ran an audit must not
-    * leak the pin into later production queries). RESTORES the pre-pin
+  /** Undo [[pinStrategies]] (r20 — ADVICE r19 #5: a pin is a silent
+    * behavior override, so a session that ran an audit must not leak it
+    * into later production queries). RESTORES the pre-pin
     * values captured by pinStrategies (set-back or unset-if-absent) so
     * a shared session's own settings survive an audit run; called
     * without a prior pin it falls back to unsetting. Tool mains call

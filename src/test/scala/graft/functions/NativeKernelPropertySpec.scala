@@ -60,66 +60,6 @@ class NativeKernelPropertySpec extends AnyFunSuite {
     assert(SortedIntersectCount(arr(null, 1L, 2L), arr(null, 2L)).eval(null) == 1)
   }
 
-  test("sorted_intersect_atleast on int arrays: exact at/above need, -1 below, multiset min") {
-    import org.apache.spark.sql.types.IntegerType
-    def arrI(xs: Int*) = Literal(new GenericArrayData(xs.toArray), ArrayType(IntegerType))
-    def run(a: Literal, b: Literal, need: Int): Any =
-      SortedIntersectAtLeast(a, b, Literal(need)).eval(null)
-    // Exact multiset-min counting on duplicates — the property that makes
-    // the 32-bit truncated pre-verify an UPPER bound on the true
-    // intersection (a collision duplicates a value; min(mult_a, mult_b)
-    // can only overcount the colliding preimages, never undercount).
-    assert(run(arrI(1, 5, 5, 9), arrI(5, 5, 7), 1) == 2)
-    assert(run(arrI(1, 5, 5, 9), arrI(5, 7), 1) == 1)
-    // Early termination below need, exact at need.
-    assert(run(arrI(1, 2, 3), arrI(4, 5, 6), 1) == -1)
-    assert(run(arrI(1, 2, 3), arrI(2, 3, 4), 2) == 2)
-    // Negative ints (the shifted-high-32 domain) merge in signed order.
-    assert(run(arrI(-7, -2, 3), arrI(-7, 3, 9), 2) == 2)
-    // Property: int-array result == long-array result on the same values.
-    val ints = Gen.listOf(Gen.choose(-40, 40)).map(_.sorted)
-    check(Prop.forAll(ints, ints, Gen.choose(1, 5)) { (a, b, need) =>
-      val viaInt = run(arrI(a: _*), arrI(b: _*), need)
-      val viaLong = SortedIntersectAtLeast(
-        Literal(new GenericArrayData(a.map(_.toLong).toArray), ArrayType(LongType)),
-        Literal(new GenericArrayData(b.map(_.toLong).toArray), ArrayType(LongType)),
-        Literal(need)).eval(null)
-      viaInt == viaLong
-    })
-    // Mixed widths are a type error, not a silent cross-space merge.
-    import org.apache.spark.sql.types.LongType
-    val mixed = SortedIntersectAtLeast(arrI(1),
-      Literal(new GenericArrayData(Array(1L)), ArrayType(LongType)), Literal(1))
-    assert(mixed.checkInputDataTypes().isFailure)
-  }
-
-  test("high-32 truncated intersect is an upper bound on the 64-bit intersect") {
-    import org.apache.spark.sql.types.IntegerType
-    // Arbitrary sorted long multisets; truncate via >> 32 (monotone, so
-    // the truncated arrays are sorted WITHOUT re-sorting) and check
-    // inter32 >= inter64 — the admitting-filter exactness argument of
-    // jaccardPairsPrefix's two-phase verify (values are crafted around
-    // 2^32 boundaries so high-32 collisions actually occur).
-    val longs = Gen.listOf(Gen.oneOf(
-      Gen.choose(-3L << 32, 3L << 32), // dense high-32 space → collisions
-      Gen.choose(Long.MinValue / 2, Long.MaxValue / 2)))
-      .map(_.distinct.sorted)
-    check(Prop.forAll(longs, longs) { (a: List[Long], b: List[Long]) =>
-      val inter64 = SortedIntersectAtLeast(
-        Literal(new GenericArrayData(a.toArray), ArrayType(LongType)),
-        Literal(new GenericArrayData(b.toArray), ArrayType(LongType)),
-        Literal(1)).eval(null).asInstanceOf[Int]
-      val a32 = a.map(x => (x >> 32).toInt)
-      val b32 = b.map(x => (x >> 32).toInt)
-      assert(a32 == a32.sorted && b32 == b32.sorted, "shift must preserve order")
-      val inter32 = SortedIntersectAtLeast(
-        Literal(new GenericArrayData(a32.toArray), ArrayType(IntegerType)),
-        Literal(new GenericArrayData(b32.toArray), ArrayType(IntegerType)),
-        Literal(1)).eval(null).asInstanceOf[Int]
-      math.max(inter32, 0) >= math.max(inter64, 0)
-    })
-  }
-
   test("int8_cosine == reference double-arithmetic cosine for arbitrary byte vectors") {
     import org.apache.spark.sql.types.ByteType
     val bytes = Gen.listOf(Gen.choose(-127, 127).map(_.toByte))

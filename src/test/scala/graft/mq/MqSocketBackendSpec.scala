@@ -567,6 +567,50 @@ class MqSocketBackendSpec extends SparkSuite {
     }
   }
 
+  test("racing prefetch submitters never hold more than half the fetch-thread cap") {
+    // Released together, every submitter can pass the occupancy check
+    // before any body has started; only the reservation bounds them.
+    val half = MqConsumerPool.FetchPoolMaxThreads / 2
+    val submitters = 4 * half
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val running = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val body = () => {
+      peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+      try gate.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      finally running.decrementAndGet()
+    }
+    val futs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.concurrent.Future[Boolean]]
+    val threads = (0 until submitters).map { _ =>
+      val t = new Thread(() => {
+        start.await()
+        val f = MqConsumerPool.tryPrefetchSubmit(body)
+        if (f != null) futs.add(f)
+      })
+      t.start(); t
+    }
+    try {
+      start.countDown()
+      threads.foreach(_.join(10000))
+      assert(futs.size >= 1 && futs.size <= half,
+        s"${futs.size} prefetches admitted against a budget of $half")
+      val deadline = System.nanoTime() + 5000000000L
+      while (running.get < futs.size && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(peak.get <= half, s"${peak.get} prefetch bodies ran at once (budget $half)")
+    } finally {
+      gate.countDown()
+      futs.forEach(f => f.get())
+    }
+    // Every slot is handed back once the bodies' threads leave them.
+    val deadline = System.nanoTime() + 5000000000L
+    var after = MqConsumerPool.tryPrefetchSubmit(() => 7)
+    while (after == null && System.nanoTime() < deadline) {
+      Thread.sleep(10); after = MqConsumerPool.tryPrefetchSubmit(() => 7)
+    }
+    assert(after != null && after.get() == 7)
+  }
+
   private def socketOpts(topic: String, pollTimeoutMs: Long = 120000L) =
     GraftMqOptions(topic = topic, backend = "socket", numPartitions = 1,
       rowsPerBatch = 10L, maxRowsPerBatch = None, minPartitions = None,

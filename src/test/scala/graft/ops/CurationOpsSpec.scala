@@ -658,6 +658,25 @@ class CurationOpsSpec extends SparkSuite {
     }
   }
 
+  test("dsirLogWeightsForSubset: caller columns named like its working columns") {
+    // The id is `bk` and the predicate reads a column `c`: both names the
+    // operator also uses internally. Weights must match the same corpus
+    // under neutral names, with the output keyed by the caller's id name.
+    val docs = Seq(
+      (1L, "good clean prose text", 1, "x"),
+      (2L, "alpha beta gamma", 1, "y"),
+      (3L, "spam spam spam spam", 0, "z"),
+      (4L, "good spam omega text", 0, "w")).toDF("doc_id", "text", "flag", "tag")
+    val want = CurationOps.dsirLogWeightsForSubset(docs, col("flag") === 1,
+        buckets = 16)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val clashing = docs.toDF("bk", "text", "c", "w")
+    val got = CurationOps.dsirLogWeightsForSubset(clashing, col("c") === 1,
+        buckets = 16, idCol = "bk")
+    assert(got.columns.toSeq == Seq("bk", "n_tokens", "dsir_logweight"))
+    assert(got.orderBy("bk").collect().map(_.toSeq).toSeq == want)
+  }
+
   test("dsirLogWeights: bit-identical under repartitioning") {
     val docs = Seq(
       (1L, "alpha beta gamma", "en"), (2L, "delta beta", "en"),

@@ -43,65 +43,48 @@ class OpsSpec extends SparkSuite {
       s"LSH missed ${(exact -- lsh).size}, extra ${(lsh -- exact).size}")
   }
 
-  test("prefix-filtered jaccard join equals the unfiltered exact join") {
-    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    val exact = DedupOps.jaccardPairs(docs, threshold = 0.5)
-      .select("doc_a", "doc_b", "jaccard").collect().toSet
-    val prefix = DedupOps.jaccardPairsPrefix(docs, threshold = 0.5)
-      .select("doc_a", "doc_b", "jaccard").collect().toSet
-    assert(exact.nonEmpty)
-    assert(prefix == exact,
-      s"prefix filtering must be exact: missed ${(exact -- prefix).size}, " +
-        s"extra ${(prefix -- exact).size}")
-  }
-
-  test("PPJoin filters (size-role prefixes, positional, α-bail verify) stay exact across thresholds") {
-    // The r18 candidate filters all carry exactness proofs keyed to
-    // prefix-length and overlap-bound arithmetic that rounds per (n,
-    // threshold); sweep thresholds (including ones where t·n and
-    // 2t/(1+t)·n land ON integer boundaries — the double-rounding edge
-    // the -1e-9 guards) over a deterministic corpus of tiny-to-mid
-    // random token bags, where every boundary case (n=1, equal sizes,
-    // overlap exactly α) actually occurs.
+  test("exact jaccard pairs == brute-force all-pairs Jaccard across thresholds") {
+    // Deterministic tiny-to-mid random token bags over a small vocabulary,
+    // swept over thresholds including the 1/3 and 2/3 that are not exact
+    // doubles and the identity t = 1. Random 3-gram bags almost never
+    // share a shingle, so the first 40 bags also get planted variants —
+    // an identical copy (a duplicate class), a two-thirds truncation and
+    // a one-token edit — which put pairs at every threshold, several
+    // exactly on it (a truncation keeping k of n shingles scores k/n).
+    // The reference shingles each text independently (distinct
+    // space-joined 3-grams of the space split), scores every pair by
+    // |∩|/|∪| under the operator's round(·, 6) (HALF_UP on the double's
+    // decimal form, as Spark rounds), and keeps pairs at/above t.
     import spark.implicits._
     val rnd = new scala.util.Random(41)
     val vocab = Vector.tabulate(60)(i => s"w$i")
-    val docs = (1L to 160L).map { id =>
+    val bags = (1L to 160L).map { id =>
       val len = 3 + rnd.nextInt(24)
-      (id, Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
-    }.toDF("doc_id", "text")
+      id -> Vector.fill(len)(vocab(rnd.nextInt(vocab.size)))
+    }
+    val planted = bags.take(40).flatMap { case (id, tk) =>
+      Seq(1000 + id -> tk, 2000 + id -> tk.take(math.max(3, tk.size * 2 / 3)),
+        3000 + id -> tk.updated(tk.size / 2, "zz"))
+    }
+    val texts = (bags ++ planted).map { case (id, tk) => id -> tk.mkString(" ") }
+    val docs = texts.toDF("doc_id", "text")
+    val sets = texts.map { case (id, text) =>
+      id -> text.split(" ", -1).sliding(3).filter(_.length == 3)
+        .map(_.mkString(" ")).toSet
+    }
+    val scored = for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      inter = (sa & sb).size if inter > 0
+    } yield (a, b, BigDecimal(inter.toDouble / (sa | sb).size.toDouble)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     for (t <- Seq(0.25, 1.0 / 3, 0.5, 2.0 / 3, 0.75, 0.9, 1.0)) {
-      val exact = DedupOps.jaccardPairs(docs, threshold = t)
-        .select("doc_a", "doc_b", "jaccard").collect().toSet
-      val prefix = DedupOps.jaccardPairsPrefix(docs, threshold = t)
-        .select("doc_a", "doc_b", "jaccard").collect().toSet
-      assert(prefix == exact,
-        s"t=$t: missed ${(exact -- prefix).size}, extra ${(prefix -- exact).size}")
-      // The df-ordered (rarest-first) prefix path is a different total
-      // order through the same theorems — forced on, it must stay exact
-      // at every threshold too (the adaptive switch is a pure cost
-      // decision, never a semantic one).
-      val dfOrdered = DedupOps.jaccardPairsPrefix(docs, threshold = t,
-          dfOrderedPrefix = Some(true))
-        .select("doc_a", "doc_b", "jaccard").collect().toSet
-      assert(dfOrdered == exact,
-        s"t=$t df-ordered: missed ${(exact -- dfOrdered).size}, " +
-          s"extra ${(dfOrdered -- exact).size}")
-      // Both verify phases forced (r21 — the adaptive phase switch, like
-      // the order switch, must be a pure cost decision): the two-phase
-      // 32-bit truncated attach + exact settle and the single-phase
-      // direct 64-bit attach must agree with the exact join at every
-      // threshold. At this corpus size the priced default picks
-      // single-phase, so the forced two-phase leg is what keeps the
-      // truncation/settle path exercised.
-      for (phase <- Seq(true, false)) {
-        val phased = DedupOps.jaccardPairsPrefix(docs, threshold = t,
-            twoPhaseVerify = Some(phase))
-          .select("doc_a", "doc_b", "jaccard").collect().toSet
-        assert(phased == exact,
-          s"t=$t twoPhase=$phase: missed ${(exact -- phased).size}, " +
-            s"extra ${(phased -- exact).size}")
-      }
+      val want = scored.filter(_._3 >= t).toSet
+      val got = DedupOps.jaccardPairs(docs, threshold = t)
+        .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)]
+        .collect().toSet
+      assert(want.nonEmpty, s"t=$t: no pair reaches the threshold")
+      assert(got == want,
+        s"t=$t: missed ${(want -- got).size}, extra ${(got -- want).size}")
     }
   }
 
@@ -335,17 +318,15 @@ class OpsSpec extends SparkSuite {
       6L -> "hi", 7L -> "hi",
       8L -> "completely different text with other words entirely"
     ).toDF("doc_id", "text")
-    for (pairs <- Seq(DedupOps.jaccardPairs(docs, threshold = 0.5),
-        DedupOps.jaccardPairsPrefix(docs, threshold = 0.5))) {
-      val got = pairs.select("doc_a", "doc_b", "jaccard")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      // Within-set: (1,2)(1,3)(2,3) and (4,5) at 1.0; never the short docs.
-      val within = Set((1L, 2L, 1.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (4L, 5L, 1.0))
-      // Cross-set: every A-copy × B-copy at jaccard(A,B) = 3/5 (shingle
-      // sets of size 4 sharing 3).
-      val cross = (for (a <- 1L to 3L; b <- 4L to 5L) yield (a, b, 0.6)).toSet
-      assert(got == within ++ cross, s"got $got")
-    }
+    val got = DedupOps.jaccardPairs(docs, threshold = 0.5)
+      .select("doc_a", "doc_b", "jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // Within-set: (1,2)(1,3)(2,3) and (4,5) at 1.0; never the short docs.
+    val within = Set((1L, 2L, 1.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (4L, 5L, 1.0))
+    // Cross-set: every A-copy × B-copy at jaccard(A,B) = 3/5 (shingle
+    // sets of size 4 sharing 3).
+    val cross = (for (a <- 1L to 3L; b <- 4L to 5L) yield (a, b, 0.6)).toSet
+    assert(got == within ++ cross, s"got $got")
   }
 
   test("duplicate collapse: text-keyed ops (simhash/winnow/edit) expand exactly") {

@@ -247,16 +247,15 @@ class PlanAssertionsSpec extends SparkSuite {
   }
 
   test("dedup hot paths run native expressions, not interpreted HOF trees") {
-    // The shingle/winnow/verify inner loops are native expressions
-    // (word_shingles / winnow_fps60 / sorted_intersect_count); a future
-    // refactor that reintroduces the interpreted higher-order formulation
-    // (lambda transform over sequence windows) or per-pair string-array
-    // intersection would be value-identical but 10-100x slower.
+    // The shingle/winnow inner loops are native expressions
+    // (word_shingles / winnow_fps60); a future refactor that reintroduces
+    // the interpreted higher-order formulation (lambda transform over
+    // sequence windows) or per-pair string-array intersection would be
+    // value-identical but 10-100x slower.
     val winnow = allExecutedPlans("dedup_winnow_pairs").mkString("\n===\n")
     assert(winnow.contains("winnow_fps60"), winnow)
     val prefix = allExecutedPlans("dedup_jaccard_prefix").mkString("\n===\n")
     assert(prefix.contains("word_shingles"), prefix)
-    assert(prefix.contains("sorted_intersect_atleast"), prefix) // α-bailing merge (r18)
     assert(!prefix.contains("array_intersect"), prefix)
   }
 
@@ -348,21 +347,16 @@ class PlanAssertionsSpec extends SparkSuite {
       s"text_top_boilerplate: expected per-partition top-k heaps:\n$p")
   }
 
-  test("jaccard prefix verify: hash-array attaches are shuffled-hash, never sort-merge") {
-    // The hints are best-effort (same pin rationale as the r17 semantic
-    // attach guard): without them, above the broadcast threshold the
-    // planner SMJ-sorts the candidate stream twice — the second time
-    // carrying the first attach's ~1.2 KB sorted-hash-array payload —
-    // measured at 11 GB of sort spill / 12.5 GB shuffle at sf10
-    // (ShuffleAudit r18). Pin the EXECUTED shape.
+  test("dedup_jaccard_prefix runs the exact inverted-index shape") {
+    // The registry row serves jaccardPairs' answer: native shingling, the
+    // intersection COUNTED on an fnv64 posting equi-join (never a per-pair
+    // array intersection), and no pair enumeration anywhere.
     GraftQueries.clearRunArtifacts() // observe the BUILD, not a memo read
     val p = allExecutedPlans("dedup_jaccard_prefix").mkString("\n===\n")
-    assert("ShuffledHashJoin \\[doc_a".r.findFirstIn(p).isDefined,
-      s"dedup_jaccard_prefix: doc_a hash-array attach is not shuffled-hash:\n$p")
-    assert("ShuffledHashJoin \\[doc_b".r.findFirstIn(p).isDefined,
-      s"dedup_jaccard_prefix: doc_b hash-array attach is not shuffled-hash:\n$p")
-    assert("SortMergeJoin \\[(doc_a|doc_b)".r.findFirstIn(p).isEmpty,
-      s"dedup_jaccard_prefix: a sort-merge join crept onto the candidate ids:\n$p")
+    assert(p.contains("word_shingles"), p)
+    assert(p.contains("fnv64"), s"dedup_jaccard_prefix: no fnv64 posting key:\n$p")
+    assert(!p.contains("array_intersect"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
   test("embedding pair ops (symmetric AND bipartite): cosine verify runs inside the bucket join, in-stage") {
