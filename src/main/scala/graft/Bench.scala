@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 
 /** Benchmark entry point. Prints exactly ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"n_queries":N,"errors":[...],
@@ -43,13 +42,6 @@ import org.apache.spark.sql.streaming.Trigger
   * equals "cold_total". A cold-path regression (a build that got
   * slower) is now attributable from the line alone; the warm map can't
   * show it because warm samples serve memoized run artifacts.
-  *
-  * The line also carries "mq_rows_per_sec":{"row":N,"columnar":N} — a
-  * fixed-workload AvailableNow drain of the generated MQ backend
-  * (SPARK_GRAFT_MQ_DRAIN_ROWS rows, default 8M since r16 — rebased from
-  * 2M, see the drainRows note in main; 0 disables), the
-  * streaming-throughput trend handle for the connector. See
-  * [[mqDrainRowsPerSec]].
   */
 object Bench {
   private[graft] val LineBudget = 1800 // chars; leaves room for the sbt trailer in a 2000-char tail
@@ -222,59 +214,6 @@ object Bench {
     line
   }
 
-  /** Streaming-throughput figure for the MQ source (the reference's core
-    * competency — round 11 shipped correctness + plan specs for it but no
-    * recorded performance number to trend). Drains a FIXED generated
-    * workload through the full micro-batch trigger loop — AvailableNow
-    * freezes `numPartitions x rowsPerBatch` rows at query start and
-    * admission control (`maxRowsPerBatch`) slices the drain into several
-    * real triggers — and reports rows/sec. Row and columnar reader modes
-    * are timed separately (same workload, one option flip), so the line
-    * carries the vectorization ratio, not just one number. Failures
-    * return Left and surface in "errors"; they never zero the line.
-    */
-  private[graft] def mqDrainRowsPerSec(spark: SparkSession, totalRows: Long,
-      columnar: Boolean,
-      source: Map[String, String] = Map("backend" -> "generated"))
-      : Either[String, Long] = {
-    val parts = 4
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-bench-mq-ckpt")
-    val tag = if (columnar) "columnar" else "row"
-    try {
-      val drained = new java.util.concurrent.atomic.LongAdder
-      val base = spark.readStream.format("graft-mq")
-        .option("numPartitions", parts.toString)
-        .option("rowsPerBatch", (totalRows / parts).toString)
-        .option("maxRowsPerBatch", math.max(totalRows / 8, 1L).toString)
-        .option("columnarReader", columnar.toString)
-      val df = source.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-      val t0 = System.nanoTime()
-      val q = df.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          drained.add(batch.count())
-        }
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val expected = (totalRows / parts) * parts
-      if (drained.sum() != expected) Left(s"mq_drain_$tag:rows=${drained.sum()}")
-      else Right(math.round(expected / sec))
-    } catch {
-      case e: Throwable => Left(s"mq_drain_$tag:${e.getClass.getSimpleName}")
-    } finally {
-      // Best-effort checkpoint cleanup: a leaked temp dir is harmless.
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val s = java.nio.file.Files.list(p)
-          try s.forEach(rm(_)) finally s.close()
-        }
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      try rm(ckptDir) catch { case _: Throwable => () }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -351,61 +290,13 @@ object Bench {
           s""""mode":"warm$warmN","cold_total":${fmt2(coldTotal)},"cold":${renderColdMap(coldOk)},"spread_med":${fmt2(spreadMed)}$escalated""")
       }
 
-    // MQ streaming-throughput figure (fixed generated workload through the
-    // full AvailableNow trigger loop, row and columnar reader modes). A
-    // small untimed drain first so streaming-engine init doesn't land in
-    // the row-mode figure.
-    //
-    // REBASED r15 → r16: 2M → 8M rows. DrainProbe attribution showed the
-    // 2M figure was ~90% fixed per-trigger cost (8 triggers × ~240 ms of
-    // micro-batch planning + checkpoint WAL), which buried the reader-mode
-    // seam; at 8M (same 8-trigger admission slicing) the figure measures
-    // streaming throughput — columnar visibly > row (~3.7M vs ~3.0M
-    // rows/s; marginal per-row rate ~2×). Cross-round comparisons of
-    // mq_rows_per_sec against r15-and-earlier lines must divide by ~3.3
-    // (the workload grew 4× against the fixed trigger cost).
-    val drainRows = sys.env.getOrElse("SPARK_GRAFT_MQ_DRAIN_ROWS", "8000000").toLong
-    val mqResults =
-      if (drainRows <= 0) Nil
-      else {
-        mqDrainRowsPerSec(spark, 20000, columnar = false)
-        // INTERLEAVED best-of-3 per mode, ALTERNATING mode-first order
-        // (r17; r16 shipped best-of-2 row-first and the driver line STILL
-        // reversed the controlled-DrainProbe ordering — VERDICT r16 #1).
-        // Alternating which mode leads each round cancels any monotone
-        // session drift (GC pressure, page-cache warmup) that a fixed
-        // order folds entirely into one mode; best-of-3 absorbs one bad
-        // sample per mode. The figure remains LOAD-SENSITIVE at the end
-        // of a 125-query session — DrainProbe's controlled interleaves
-        // are the adjudicating measurement for the row/columnar seam
-        // (SURVEY §8); this line is a trend handle, not the verdict.
-        // A mode that fails every sample reports its first error.
-        val samples = (0 until 3).flatMap { i =>
-          val pair = Seq(false, true)
-          (if (i % 2 == 0) pair else pair.reverse).map { columnar =>
-            (if (columnar) "columnar" else "row") ->
-              mqDrainRowsPerSec(spark, drainRows, columnar = columnar)
-          }
-        }
-        Seq("row", "columnar").map { tag =>
-          val s = samples.collect { case (t, r) if t == tag => r }
-          tag -> s.collect { case Right(v) => v }.maxOption
-            .map(Right(_): Either[String, Long]).getOrElse(s.head)
-        }
-      }
-    val mqMembers = mqResults.collect { case (tag, Right(rps)) => s""""$tag":$rps""" }
-    val mqPart =
-      if (mqMembers.isEmpty) ""
-      else s""","mq_rows_per_sec":${mqMembers.mkString("{", ",", "}")}"""
-    val mqErrors = mqResults.collect { case (_, Left(e)) => e }
-
     val calibEnd =
       try math.min(calibMs(), calibMs()) catch { case _: Throwable => -1.0 }
     val calibPart = s""","calib_ms":{"cold":${fmt2(calibCold)},"start":${fmt2(calibStart)},"end":${fmt2(calibEnd)}}"""
 
-    val errors = results.collect { case (_, Left(e)) => e } ++ mqErrors
+    val errors = results.collect { case (_, Left(e)) => e }
     val timed = results.collect { case (name, Right(t)) => (name, t) }
-    println(renderLine(timed, errors, sfDir, results.size, extra + mqPart + calibPart))
+    println(renderLine(timed, errors, sfDir, results.size, extra + calibPart))
     spark.stop()
   }
 }

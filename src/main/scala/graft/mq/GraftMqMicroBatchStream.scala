@@ -181,7 +181,7 @@ class GraftMqMicroBatchStream(opts: GraftMqOptions, checkpointLocation: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftMqPartitionReaderFactory(opts, readSchema)
+    GraftMqPartitionReaderFactory(readSchema)
 
   /** Progress reporting (StreamingQueryProgress "latestOffset"): broker's
     * true end offsets; null (unknown) for the generated firehose, whose
@@ -404,5 +404,5 @@ class GraftMqBatch(opts: GraftMqOptions,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftMqPartitionReaderFactory(opts, readSchema)
+    GraftMqPartitionReaderFactory(readSchema)
 }

@@ -56,16 +56,6 @@ import java.util.Locale
   *  - `defaultTimestampMicros` — sink: timestamp stamped on written
   *                           messages when the written schema has no
   *                           `timestamp` column (epoch micros)
-  *  - `columnarReader`     — vectorized scan (default true): fill on-heap
-  *                           column vectors instead of per-row
-  *                           InternalRows; schemas containing `headers`
-  *                           fall back to the row reader automatically
-  *  - `aggregatePushdown`  — batch reads: allow `count(*)`,
-  *                           `min/max(offset)`, and their `GROUP BY
-  *                           partition` forms to be answered from
-  *                           resolved offset ranges without fetching a
-  *                           single message (default true; disable for
-  *                           A/B verification)
   *  - `pollTimeoutMs`      — broker backend: per-fetch latency bound
   *                           (default 120000, the Kafka consumer default
   *                           the reference documents at README.md:367-370);
@@ -73,18 +63,15 @@ import java.util.Locale
   *                           [[MqPollTimeoutException]] (README.md:654) —
   *                           a contended broker fails the task loudly
   *                           instead of hanging the trigger loop
-  *  - `prefetch`           — transport backends: issue the next chunk's
-  *                           fetch when the cursor crosses mid-buffer so
-  *                           RPC latency overlaps compute (default true;
-  *                           disable for A/B attribution — DrainProbe's
-  *                           transport-tax interleave)
-  *  - `prefetchDepth`      — consecutive chunks to keep in flight ahead
-  *                           of the cursor (default 1, the r20 behavior;
-  *                           max 8). Deeper helps when compute drains a
-  *                           chunk faster than one RPC round-trips;
-  *                           armed fetches only ever occupy the lower
-  *                           half of the executor's fetch-thread cap, so
-  *                           live fetches cannot be starved
+  *
+  * Read-path choices are not options; each is made from what the code can
+  * observe: a transport backend (`supportsPrefetch`) prefetches one chunk
+  * ahead, every schema without `headers` is read columnar, and batch
+  * `count(*)`/`min/max(offset)` shapes that [[GraftMqScanBuilder]] can
+  * translate are answered from offset ranges.
+  *
+  * Malformed values fail at parse time with an IllegalArgumentException
+  * that names the option.
   */
 final case class GraftMqOptions(
     topic: String,
@@ -104,12 +91,8 @@ final case class GraftMqOptions(
     endingOffsets: String = "latest",
     minRowsPerBatch: Option[Long] = None,
     maxTriggerDelayMs: Long = 15L * 60 * 1000,
-    columnarReader: Boolean = true,
     pollTimeoutMs: Long = 120000L,
-    aggregatePushdown: Boolean = true,
-    brokerSocket: Option[String] = None,
-    prefetch: Boolean = true,
-    prefetchDepth: Int = 1) extends Serializable {
+    brokerSocket: Option[String] = None) extends Serializable {
   def isGenerated: Boolean = backend == "generated"
   def isSocket: Boolean = backend == "socket"
   /** Pool/stats namespace for this source's consumers: socket sessions
@@ -159,6 +142,24 @@ object GraftMqOptions {
       }
       res
     }
+    // Every number and boolean goes through here, so a malformed value
+    // names its option instead of surfacing as a bare
+    // NumberFormatException.
+    def parsed[A](k: String, expected: String)(parse: String => A): Option[A] =
+      get(k).map { v =>
+        try parse(v)
+        catch {
+          case _: IllegalArgumentException =>
+            throw new IllegalArgumentException(
+              s"graft-mq: $k must be $expected, got '$v'")
+        }
+      }
+    def int(k: String) = parsed(k, "an integer")(_.toInt)
+    def long(k: String) = parsed(k, "an integer")(_.toLong)
+    def bool(k: String) = parsed(k, "true or false")(_.toBoolean)
+    def check(ok: Boolean, k: String, rule: String, v: Any): Unit =
+      require(ok, s"graft-mq: $k must be $rule, got $v")
+
     val backend = get("backend").map(_.toLowerCase(Locale.ROOT)).getOrElse("broker")
     require(backend == "broker" || backend == "generated" || backend == "socket",
       s"graft-mq: unknown backend '$backend' (expected broker|generated|socket)")
@@ -174,7 +175,7 @@ object GraftMqOptions {
       else startingRaw.toLowerCase(Locale.ROOT)
     require(starting.startsWith("{") || starting == "earliest" || starting == "latest",
       s"graft-mq: unknown startingOffsets '$starting' (expected earliest|latest|{json})")
-    val startingTs = get("startingTimestampMicros").map(_.toLong)
+    val startingTs = long("startingTimestampMicros")
     require(startingTs.isEmpty || starting == "earliest",
       "graft-mq: startingTimestampMicros cannot be combined with startingOffsets")
     // Batch-only upper bound: "latest" (default) or specific-offsets JSON
@@ -187,29 +188,25 @@ object GraftMqOptions {
       s"graft-mq: unknown endingOffsets '$ending' (expected latest|{json})")
     // Numeric sanity up front: numPartitions=0 divides by zero in the
     // writer's round-robin and reads nothing; a non-positive rowsPerBatch
-    // would move the generated head BACKWARDS each trigger.
-    val numPartitions = get("numPartitions").map(_.toInt).getOrElse(4)
-    require(numPartitions > 0,
-      s"graft-mq: numPartitions must be positive, got $numPartitions")
-    val rowsPerBatch = get("rowsPerBatch").map(_.toLong).getOrElse(10L)
-    require(rowsPerBatch > 0,
-      s"graft-mq: rowsPerBatch must be positive, got $rowsPerBatch")
-    val maxRows = get("maxRowsPerBatch").map(_.toLong)
-    require(maxRows.forall(_ > 0),
-      s"graft-mq: maxRowsPerBatch must be positive, got ${maxRows.get}")
-    val minParts = get("minPartitions").map(_.toInt)
-    require(minParts.forall(_ > 0),
-      s"graft-mq: minPartitions must be positive, got ${minParts.get}")
-    val pollTimeout = get("pollTimeoutMs").map(_.toLong).getOrElse(120000L)
-    require(pollTimeout > 0,
-      s"graft-mq: pollTimeoutMs must be positive, got $pollTimeout")
-    // Bounded: each armed prefetch occupies a capped fetch-pool thread
-    // while in flight; 8 chunks is far past any measured latency-hiding
-    // benefit and keeps a single misconfigured source from monopolizing
-    // the prefetch half of the thread budget.
-    val prefetchDepth = get("prefetchDepth").map(_.toInt).getOrElse(1)
-    require(prefetchDepth >= 1 && prefetchDepth <= 8,
-      s"graft-mq: prefetchDepth must be in [1, 8], got $prefetchDepth")
+    // would move the generated head BACKWARDS each trigger; a negative
+    // wordsPerMessage would only fail on the executor, sizing its word
+    // array.
+    val numPartitions = int("numPartitions").getOrElse(4)
+    check(numPartitions > 0, "numPartitions", "positive", numPartitions)
+    val rowsPerBatch = long("rowsPerBatch").getOrElse(10L)
+    check(rowsPerBatch > 0, "rowsPerBatch", "positive", rowsPerBatch)
+    val maxRows = long("maxRowsPerBatch")
+    maxRows.foreach(v => check(v > 0, "maxRowsPerBatch", "positive", v))
+    val minRows = long("minRowsPerBatch")
+    minRows.foreach(v => check(v > 0, "minRowsPerBatch", "positive", v))
+    val maxDelay = long("maxTriggerDelayMs").getOrElse(15L * 60 * 1000)
+    check(maxDelay >= 0, "maxTriggerDelayMs", "non-negative", maxDelay)
+    val minParts = int("minPartitions")
+    minParts.foreach(v => check(v > 0, "minPartitions", "positive", v))
+    val pollTimeout = long("pollTimeoutMs").getOrElse(120000L)
+    check(pollTimeout > 0, "pollTimeoutMs", "positive", pollTimeout)
+    val words = int("wordsPerMessage").getOrElse(4)
+    check(words >= 0, "wordsPerMessage", "non-negative", words)
     GraftMqOptions(
       topic = get("topic").getOrElse("default"),
       backend = backend,
@@ -217,24 +214,18 @@ object GraftMqOptions {
       rowsPerBatch = rowsPerBatch,
       maxRowsPerBatch = maxRows,
       minPartitions = minParts,
-      seed = get("seed").map(_.toLong).getOrElse(42L),
-      wordsPerMessage = get("wordsPerMessage").map(_.toInt).getOrElse(4),
-      failOnDataLoss = get("failOnDataLoss").map(_.toBoolean).getOrElse(true),
-      includeMetadata = get("includeMetadata").map(_.toBoolean).getOrElse(false),
+      seed = long("seed").getOrElse(42L),
+      wordsPerMessage = words,
+      failOnDataLoss = bool("failOnDataLoss").getOrElse(true),
+      includeMetadata = bool("includeMetadata").getOrElse(false),
       startingOffsets = starting,
-      defaultTimestampMicros =
-        get("defaultTimestampMicros").map(_.toLong).getOrElse(1700000000000000L),
-      includeHeaders = get("includeHeaders").map(_.toBoolean).getOrElse(false),
+      defaultTimestampMicros = long("defaultTimestampMicros").getOrElse(1700000000000000L),
+      includeHeaders = bool("includeHeaders").getOrElse(false),
       startingTimestampMicros = startingTs,
       endingOffsets = ending,
-      minRowsPerBatch = get("minRowsPerBatch").map(_.toLong),
-      maxTriggerDelayMs =
-        get("maxTriggerDelayMs").map(_.toLong).getOrElse(15L * 60 * 1000),
-      columnarReader = get("columnarReader").map(_.toBoolean).getOrElse(true),
+      minRowsPerBatch = minRows,
+      maxTriggerDelayMs = maxDelay,
       pollTimeoutMs = pollTimeout,
-      aggregatePushdown = get("aggregatePushdown").map(_.toBoolean).getOrElse(true),
-      brokerSocket = brokerSocket,
-      prefetch = get("prefetch").map(_.toBoolean).getOrElse(true),
-      prefetchDepth = prefetchDepth)
+      brokerSocket = brokerSocket)
   }
 }

@@ -23,25 +23,25 @@ case class GraftMqInputPartition(
 /** Reader factory for both execution shapes. Row readers are always
   * available; COLUMNAR reads (`SupportsColumnarReads` via
   * `supportColumnarReads`) are offered for the flat Kafka-grade columns —
-  * key/value/topic/partition/offset/timestamp/timestampType — whenever
-  * `columnarReader` is on (the default). A schema carrying the nested
-  * `headers` column takes the row path: header reads are metadata-rare,
-  * and a hand-rolled array<struct> vector writer is complexity the flat
-  * hot path (payload analytics) doesn't need. The answer must be
-  * byte-identical either way — spec-asserted (GraftMqColumnarSpec).
+  * key/value/topic/partition/offset/timestamp/timestampType. A schema
+  * carrying the nested `headers` column takes the row path: header reads
+  * are metadata-rare, and a hand-rolled array<struct> vector writer is
+  * complexity the flat hot path (payload analytics) doesn't need. The
+  * answer must be byte-identical either way — spec-asserted
+  * (GraftMqColumnarSpec drives both readers over the same partition).
   *
   * The choice is per-SCAN, not per-partition (Spark requires every
   * partition of a scan to agree), and the columnar batch feeds the exact
   * same engine surface as any vectorized file source: a ColumnarToRow (or
   * whole-stage-codegen'd scan) boundary above the scan exec.
   */
-case class GraftMqPartitionReaderFactory(opts: GraftMqOptions,
-    readSchema: StructType) extends PartitionReaderFactory {
+case class GraftMqPartitionReaderFactory(readSchema: StructType)
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftMqPartitionReader(partition.asInstanceOf[GraftMqInputPartition], readSchema)
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    opts.columnarReader && !readSchema.fieldNames.contains("headers")
+    !readSchema.fieldNames.contains("headers")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -304,12 +304,12 @@ object GeneratedPayloads {
     "spark", "stream", "batch", "query", "shuffle", "merge", "window", "offset")
 
   // Pre-encoded vocab + the constant header pair: messageAt runs once per
-  // generated message on the drain hot path (DrainProbe attribution,
-  // r16), so payload bytes are assembled directly instead of via
-  // word-Seq → mkString → getBytes, and the per-message constants are
-  // hoisted. Output is BYTE-IDENTICAL to the original formulation (the
-  // mix64 draw chain, space-joined payload, "$partition-$offset" key,
-  // and header content are unchanged — spec- and oracle-pinned).
+  // generated message on the drain hot path (r16), so payload bytes are
+  // assembled directly instead of via word-Seq → mkString → getBytes, and
+  // the per-message constants are hoisted. Output is BYTE-IDENTICAL to
+  // the original formulation (the mix64 draw chain, space-joined payload,
+  // "$partition-$offset" key, and header content are unchanged — spec-
+  // and oracle-pinned).
   private val VocabBytes: Array[Array[Byte]] =
     Vocab.map(_.getBytes("UTF-8")).toArray
   private val GeneratedHeaderValue: Array[Byte] = "generated".getBytes("UTF-8")

@@ -180,7 +180,7 @@ class GraftMqScanBuilder(opts: GraftMqOptions) extends ScanBuilder
       case _ => None
     }
     val cols = agg.aggregateExpressions.toSeq.map(colOf)
-    if (opts.aggregatePushdown && !anyFilters && limit.isEmpty &&
+    if (!anyFilters && limit.isEmpty &&
         grouped.isDefined && cols.nonEmpty && cols.forall(_.isDefined))
       Some(MqPushedAggregation(grouped.get, cols.map(_.get)))
     else None

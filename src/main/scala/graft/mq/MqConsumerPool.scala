@@ -41,85 +41,53 @@ import org.apache.spark.internal.Logging
 final class MqConsumer private[mq] (
     val topic: String,
     val partition: Int,
-    private[mq] val state: MqBrokerSession,
-    // Refreshed at every borrow: a pooled consumer outlives the query
-    // (and its options) that created it.
-    private[mq] var prefetchEnabled: Boolean = true) {
-
-  /** Consecutive chunks to keep in flight ahead of the cursor
-    * ([[GraftMqOptions.prefetchDepth]], refreshed at borrow like
-    * [[prefetchEnabled]]). 1 = the r20 one-chunk-ahead behavior.
-    */
-  private[mq] var prefetchDepth: Int = 1
+    private[mq] val state: MqBrokerSession) {
 
   private[mq] val stats: MqPoolStats = MqConsumerPool.stats(topic, partition)
 
   private var chunk: IndexedSeq[MqMessage] = IndexedSeq.empty
   private var chunkStart: Long = 0L
 
-  // Chunk-ahead prefetch (r20 — VERDICT r19 #4; depth ≥ 2 r22 — VERDICT
-  // r21 #5): on a transport backend each synchronous refill pays a full
-  // RPC latency stall (the measured 10-30% socket tax); issuing the NEXT
-  // chunk's fetch when the cursor crosses mid-buffer overlaps network
-  // and compute. A prefetch is just an early refill — the
-  // retained-buffer contract and the pollTimeoutMs bound are unchanged
-  // (the bound applies at harvest, with the fetch already in flight).
-  // At `prefetchDepth` ≥ 2 up to that many CONSECUTIVE chunks are armed
-  // (entries form one contiguous run: each entry starts where the
-  // previous ends); deeper entries are speculative past a possible log
-  // end, and the existing harvest discipline already makes that safe —
-  // an empty result is discarded (termination decisions only ever come
-  // from a live fetch) and a `from` mismatch cancels the whole run.
-  private val prefetches =
-    new mutable.ArrayDeque[(Long, java.util.concurrent.Future[IndexedSeq[MqMessage]])]
+  // Chunk-ahead prefetch (r20 — VERDICT r19 #4): on a transport backend
+  // each synchronous refill pays a full RPC latency stall (the measured
+  // 10-30% socket tax); issuing the NEXT chunk's fetch when the cursor
+  // crosses mid-buffer overlaps network and compute. A prefetch is just
+  // an early refill — the retained-buffer contract and the pollTimeoutMs
+  // bound are unchanged (the bound applies at harvest, with the fetch
+  // already in flight). One slot: at most one chunk is armed, starting
+  // where the buffer ends.
+  private var prefetchFrom: Long = 0L
+  private var prefetched: java.util.concurrent.Future[IndexedSeq[MqMessage]] = null
   private var lastChunkSize: Int = 0
 
   /** The buffered message at `o`, or null if `o` is outside the cache.
     * Crossing the buffer midpoint on a prefetch-worthy backend arms the
-    * next chunks' fetches up to `prefetchDepth` (only after a FULL chunk
-    * — a partial chunk means the fetch reached the log end, so the next
-    * range is speculative).
+    * next chunk's fetch (only after a FULL chunk — a partial chunk means
+    * the fetch reached the log end, so the next range is speculative).
+    * A saturated fetch pool declines the prefetch; the synchronous
+    * refill still works.
     */
   def cached(o: Long): MqMessage =
     if (o >= chunkStart && o < chunkStart + chunk.size) {
-      if (prefetches.size < prefetchDepth && prefetchEnabled &&
-          state.supportsPrefetch && chunk.size == lastChunkSize &&
-          o - chunkStart >= (chunk.size >> 1))
-        armPrefetches()
+      if (prefetched == null && state.supportsPrefetch &&
+          chunk.size == lastChunkSize && o - chunkStart >= (chunk.size >> 1)) {
+        val (from, size) = (chunkStart + chunk.size, lastChunkSize)
+        prefetched = MqConsumerPool.tryPrefetchSubmit(
+          () => state.read(partition, from, from + size))
+        if (prefetched != null) {
+          prefetchFrom = from
+          stats.prefetches.incrementAndGet()
+        }
+      }
       chunk((o - chunkStart).toInt)
     } else null
 
-  /** Arm consecutive-chunk fetches until `prefetchDepth` are in flight
-    * (or the fetch pool declines — best-effort, the synchronous refill
-    * still works). Each armed range continues the previous one, so the
-    * deque is always one contiguous run starting at the buffer end.
+  /** Drop the armed prefetch, interrupting its thread (the session close
+    * that accompanies invalidation/eviction is what actually unblocks an
+    * interrupt-deaf transport read).
     */
-  private def armPrefetches(): Unit = {
-    val size = lastChunkSize
-    var next = prefetches.lastOption.map { case (f, _) => f + size }
-      .getOrElse(chunkStart + chunk.size)
-    while (prefetches.size < prefetchDepth) {
-      // Snapshot the loop cursor: a Scala closure over the `var` itself
-      // would see the post-increment value once the pool thread runs,
-      // fetching one range while the deque records another.
-      val from = next
-      val fut = MqConsumerPool.tryPrefetchSubmit(
-        () => state.read(partition, from, from + size))
-      if (fut == null) return // saturated pool: skip, never queue or fail
-      prefetches.append((from, fut))
-      stats.prefetches.incrementAndGet()
-      next = from + size
-    }
-  }
-
-  /** Drop every armed prefetch, interrupting their threads (the session
-    * close that accompanies invalidation/eviction is what actually
-    * unblocks an interrupt-deaf transport read).
-    */
-  private[mq] def cancelPrefetch(): Unit = {
-    prefetches.foreach { case (_, f) => f.cancel(true) }
-    prefetches.clear()
-  }
+  private[mq] def cancelPrefetch(): Unit =
+    if (prefetched != null) { prefetched.cancel(true); prefetched = null }
 
   /** Earliest retained offset — the `failOnDataLoss=false` resume point. */
   def earliestOffset: Long = state.earliestOffsets(partition)
@@ -154,15 +122,10 @@ final class MqConsumer private[mq] (
     */
   private def harvestPrefetch(from: Long,
       pollTimeoutMs: Long): IndexedSeq[MqMessage] = {
-    if (prefetches.isEmpty) return null
-    val (armedFrom, fut) = prefetches.removeHead()
-    if (armedFrom != from) {
-      // The whole deque is one contiguous run built on the head's
-      // assumption; a head mismatch invalidates every deeper entry too.
-      fut.cancel(true)
-      cancelPrefetch()
-      return null
-    }
+    val fut = prefetched
+    prefetched = null
+    if (fut == null) return null
+    if (prefetchFrom != from) { fut.cancel(true); return null }
     val res = MqConsumerPool.await(fut, pollTimeoutMs,
       s"prefetched fetch on $topic-$partition from $from")
     if (res.isEmpty) null
@@ -252,12 +215,9 @@ object MqConsumerPool extends Logging {
       // socket bound is the backstop for RPCs outside timedRead.
       val soTimeout = math.min(Int.MaxValue.toLong,
         math.max(MqSocketBroker.RpcTimeoutMs.toLong, 2L * opts.pollTimeoutMs)).toInt
-      val c = borrowWith(key, partition, cand => cand.state.transportAlive,
+      borrowWith(key, partition, cand => cand.state.transportAlive,
         () => new MqConsumer(key, partition,
           MqSocketBroker.connect(opts.brokerSocket.get, opts.topic, soTimeout)))
-      c.prefetchEnabled = opts.prefetch
-      c.prefetchDepth = opts.prefetchDepth
-      c
     }
 
   private def borrowWith(topicKey: String, partition: Int,
@@ -400,10 +360,8 @@ object MqConsumerPool extends Logging {
     * #5): speculative prefetches may only occupy the LOWER half of the
     * fetch-thread cap, so live fetches (timedRead/bounded, which FAIL
     * loudly at the cap) always have at least [[FetchPoolMaxThreads]]/2
-    * threads they never compete with prefetches for. Depth-1 prefetch
-    * could in principle saturate too (one armed prefetch per consumer,
-    * unbounded consumers); depth ≥ 2 multiplies the exposure, so the
-    * budget check comes with it.
+    * threads they never compete with prefetches for (one armed prefetch
+    * per consumer, but consumers are unbounded).
     *
     * The budget is a RESERVATION on [[prefetchesInFlight]], not a read of
     * `getActiveCount`: a read-then-submit lets concurrent submitters all

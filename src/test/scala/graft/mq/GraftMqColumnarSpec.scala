@@ -1,15 +1,20 @@
 package graft.mq
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The vectorized MQ read path (`SupportsColumnarReads`): the columnar
   * and row readers share one [[MqMessageCursor]], so these specs pin the
-  * contract that matters — identical ANSWERS either way, the columnar
-  * plan actually engaging (ColumnarToRow above the scan), the automatic
-  * row fallback for the nested `headers` column, and slab boundaries
-  * (ranges larger than one 4096-row batch).
+  * contract that matters — identical ANSWERS either way (both readers of
+  * [[GraftMqPartitionReaderFactory]] driven over the same input
+  * partition), the columnar plan actually engaging (ColumnarToRow above
+  * the scan), the automatic row fallback for the nested `headers` column,
+  * and slab boundaries (ranges larger than one 4096-row batch).
   */
 class GraftMqColumnarSpec extends SparkSuite {
 
@@ -25,11 +30,40 @@ class GraftMqColumnarSpec extends SparkSuite {
       s"p1k$i".getBytes("UTF-8"), s"n$i".getBytes("UTF-8"), base + i * 1000000L)))
   }
 
-  private def read(topic: String, columnar: Boolean, extra: (String, String)*): DataFrame = {
+  private def read(topic: String, extra: (String, String)*): DataFrame = {
     val r = spark.read.format("graft-mq")
       .option("topic", topic).option("numPartitions", "2")
-      .option("columnarReader", columnar.toString)
     extra.foldLeft(r) { case (b, (k, v)) => b.option(k, v) }.load()
+  }
+
+  /** Every row of the input partition `[from, until)` of `partition`,
+    * read once through the factory's row reader and once through its
+    * columnar reader, as cell values that compare by value (binary cells
+    * as byte sequences, strings copied out of the reused column vectors).
+    */
+  private def viaBothReaders(topic: String, partition: Int, from: Long, until: Long,
+      options: (String, String)*): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    val opts = GraftMqOptions.from((Map("topic" -> topic) ++ options).asJava)
+    val schema = opts.schema
+    val factory = GraftMqPartitionReaderFactory(schema)
+    val part = GraftMqInputPartition(topic, partition, from, until, opts)
+    assert(factory.supportColumnarReads(part))
+    def cells(r: InternalRow): Seq[Any] = schema.fields.indices.map { i =>
+      r.get(i, schema(i).dataType) match {
+        case b: Array[Byte] => b.toSeq
+        case u: UTF8String => u.toString
+        case v => v
+      }
+    }
+    val rows = Seq.newBuilder[Seq[Any]]
+    val rowReader = factory.createReader(part)
+    try while (rowReader.next()) rows += cells(rowReader.get())
+    finally rowReader.close()
+    val batches = Seq.newBuilder[Seq[Any]]
+    val colReader = factory.createColumnarReader(part)
+    try while (colReader.next()) colReader.get().rowIterator().asScala.foreach(batches += cells(_))
+    finally colReader.close()
+    (rows.result(), batches.result())
   }
 
   private def isColumnar(df: DataFrame): Boolean =
@@ -37,18 +71,19 @@ class GraftMqColumnarSpec extends SparkSuite {
 
   test("columnar batch equals the row path on the full metadata schema, incl. null keys") {
     freshTopic("col-full")
-    def rows(columnar: Boolean) =
-      read("col-full", columnar, "includeMetadata" -> "true")
-        .select(col("key").cast("string"), col("value").cast("string"),
-          col("topic"), col("partition"), col("offset"),
-          col("timestamp").cast("long"), col("timestampType"))
-        .orderBy("partition", "offset").collect().toSeq
-    val colDf = read("col-full", columnar = true, "includeMetadata" -> "true")
-    val rowDf = read("col-full", columnar = false, "includeMetadata" -> "true")
+    for ((partition, until) <- Seq(0 -> 10L, 1 -> 5L)) {
+      val (rows, cols) = viaBothReaders("col-full", partition, 0L, until,
+        "numPartitions" -> "2", "includeMetadata" -> "true")
+      assert(rows.size == until, s"partition $partition")
+      assert(cols == rows, s"partition $partition")
+    }
+    val colDf = read("col-full", "includeMetadata" -> "true")
     assert(isColumnar(colDf), colDf.queryExecution.executedPlan.toString)
-    assert(!isColumnar(rowDf), rowDf.queryExecution.executedPlan.toString)
-    val got = rows(columnar = true)
-    assert(got == rows(columnar = false))
+    val got = colDf
+      .select(col("key").cast("string"), col("value").cast("string"),
+        col("topic"), col("partition"), col("offset"),
+        col("timestamp").cast("long"), col("timestampType"))
+      .orderBy("partition", "offset").collect().toSeq
     assert(got.size == 15)
     // Null keys survive the vector null path; timestamps round-trip
     // (cast timestamp→long yields epoch SECONDS).
@@ -58,7 +93,7 @@ class GraftMqColumnarSpec extends SparkSuite {
 
   test("default minimal (value-only) scan is columnar — the wordcount hot path") {
     freshTopic("col-min")
-    val df = read("col-min", columnar = true)
+    val df = read("col-min")
     assert(isColumnar(df), df.queryExecution.executedPlan.toString)
     import spark.implicits._
     assert(df.select(col("value").cast("string")).as[String].collect().toSet ==
@@ -70,7 +105,7 @@ class GraftMqColumnarSpec extends SparkSuite {
     val state = InMemoryMqBroker.getOrCreate("col-hdr", 2)
     state.append(0, MqMessage(null, "x".getBytes("UTF-8"), base,
       Array("h" -> "v".getBytes("UTF-8"))))
-    val df = read("col-hdr", columnar = true, "includeHeaders" -> "true")
+    val df = read("col-hdr", "includeHeaders" -> "true")
     assert(!isColumnar(df), df.queryExecution.executedPlan.toString)
     val r = df.select(col("value").cast("string"),
       expr("headers[0].key"), expr("cast(headers[0].value as string)")).collect()
@@ -80,7 +115,7 @@ class GraftMqColumnarSpec extends SparkSuite {
 
   test("pushdown composes with the columnar path (pruned range, exact values)") {
     freshTopic("col-push")
-    val df = read("col-push", columnar = true, "includeMetadata" -> "true")
+    val df = read("col-push", "includeMetadata" -> "true")
       .filter(col("offset") >= 8)
     assert(isColumnar(df), df.queryExecution.executedPlan.toString)
     import spark.implicits._
@@ -97,16 +132,18 @@ class GraftMqColumnarSpec extends SparkSuite {
     // Explicitly request a truncated start ({"0":1} < earliest 4): that IS
     // data loss — the opt-out path must skip to earliest retained through
     // the columnar reader exactly as through the row reader.
-    def vals(columnar: Boolean) =
-      read("col-loss", columnar, "numPartitions" -> "1",
-          "startingOffsets" -> """{"0":1}""", "failOnDataLoss" -> "false")
-        .select(col("value").cast("string")).collect().map(_.getString(0)).sorted.toSeq
-    assert(vals(columnar = true) == (4 until 10).map(i => s"m$i"))
-    assert(vals(columnar = true) == vals(columnar = false))
+    val (rows, cols) = viaBothReaders("col-loss", 0, 1L, 10L,
+      "numPartitions" -> "1", "failOnDataLoss" -> "false", "includeMetadata" -> "true")
+    assert(rows.map(_(4)) == (4 until 10).map(_.toLong)) // offset column
+    assert(cols == rows)
+    val vals = read("col-loss", "numPartitions" -> "1",
+        "startingOffsets" -> """{"0":1}""", "failOnDataLoss" -> "false")
+      .select(col("value").cast("string")).collect().map(_.getString(0)).sorted.toSeq
+    assert(vals == (4 until 10).map(i => s"m$i"))
     // failOnDataLoss=true still aborts (the r6 honesty contract) with the
     // columnar reader selected.
     val err = intercept[Exception] {
-      read("col-loss", columnar = true, "numPartitions" -> "1",
+      read("col-loss", "numPartitions" -> "1",
         "startingOffsets" -> """{"0":1}""").count()
     }
     assert(err.getMessage.contains("earliest retained"), err.getMessage)
@@ -115,11 +152,23 @@ class GraftMqColumnarSpec extends SparkSuite {
   test("empty topic: columnar scan returns zero rows, no empty batch emitted") {
     InMemoryMqBroker.drop("col-empty")
     InMemoryMqBroker.getOrCreate("col-empty", 2)
-    val df = read("col-empty", columnar = true, "includeMetadata" -> "true")
+    val df = read("col-empty", "includeMetadata" -> "true")
     assert(df.count() == 0)
   }
 
   test("multi-slab ranges (beyond one 4096-row batch) stay offset-exact") {
+    // Broker-backed: one 5000-row range crosses both the cursor's 4096-row
+    // fetch chunk and the columnar reader's 4096-row slab.
+    InMemoryMqBroker.drop("col-slab")
+    val state = InMemoryMqBroker.getOrCreate("col-slab", 1)
+    (0 until 5000).foreach(i => state.append(0, MqMessage(
+      if (i % 7 == 0) null else s"k$i".getBytes("UTF-8"),
+      s"m$i".getBytes("UTF-8"), base + i)))
+    val (rows, cols) = viaBothReaders("col-slab", 0, 0L, 5000L,
+      "numPartitions" -> "1", "includeMetadata" -> "true")
+    assert(rows.map(_(4)) == (0 until 5000).map(_.toLong))
+    assert(cols == rows)
+
     val df = spark.read.format("graft-mq")
       .option("backend", "generated").option("numPartitions", "2")
       .option("rowsPerBatch", "5000").option("seed", "7")

@@ -73,7 +73,9 @@ class GraftMqHardeningSpec extends SparkSuite {
       GraftMqOptions.from(java.util.Map.of("topic", "t", k, v))
     for ((k, v) <- Seq("numPartitions" -> "0", "rowsPerBatch" -> "-1",
         "maxRowsPerBatch" -> "0", "minPartitions" -> "-2",
-        "pollTimeoutMs" -> "0")) {
+        "pollTimeoutMs" -> "0", "numPartitions" -> "abc",
+        "failOnDataLoss" -> "yes", "wordsPerMessage" -> "-1",
+        "minRowsPerBatch" -> "0", "maxTriggerDelayMs" -> "-1")) {
       val err = intercept[IllegalArgumentException] { opts(k, v) }
       assert(err.getMessage.contains(k), s"$k: ${err.getMessage}")
     }

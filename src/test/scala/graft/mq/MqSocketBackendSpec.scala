@@ -513,34 +513,6 @@ class MqSocketBackendSpec extends SparkSuite {
     assert(MqConsumerPool.idleCount(key, 0) == 1)
   }
 
-  test("prefetchDepth=2 keeps two consecutive chunks armed; results stay value-exact") {
-    import spark.implicits._
-    val topic = "sock-prefdepth"
-    fill(topic, 1, 10000) // chunk size 4096 → three refills
-    val key = s"${server.address}/$topic"
-    val st = MqConsumerPool.stats(key, 0)
-    val (p0, h0, f0) = (st.prefetches.get, st.prefetchHits.get, st.brokerFetches.get)
-    val got = reader(topic).load()
-      .select($"value".cast("string")).as[String].collect()
-    // prefetchDepth touches scheduling only — the drained values are the
-    // depth-1 spec's, byte for byte... but this reader ran depth 1; the
-    // depth-2 leg below must match it.
-    assert(got.length == 10000)
-    val d1Fetches = st.brokerFetches.get - f0
-    val got2 = reader(topic).option("prefetchDepth", "2").load()
-      .select($"value".cast("string")).as[String].collect()
-    assert(got2.sorted.toSeq == got.sorted.toSeq)
-    // Depth 2: chunk 1's midpoint crossing arms chunks 2 AND 3 at once;
-    // chunk 2's crossing re-fills the window with chunk 4's range (past
-    // the log end — discarded at the from-mismatch after the clamped
-    // chunk 3). Three prefetches vs depth-1's two, same refill count.
-    assert(st.brokerFetches.get - f0 - d1Fetches == 3,
-      s"fetches=${st.brokerFetches.get - f0 - d1Fetches}")
-    assert(st.prefetches.get - p0 == 5, // 2 (depth-1 run) + 3 (depth-2 run)
-      s"prefetches=${st.prefetches.get - p0}")
-    assert(st.prefetchHits.get - h0 == 4, s"hits=${st.prefetchHits.get - h0}")
-  }
-
   test("prefetch submits are refused once they would claim the live-fetch thread reserve") {
     // Fill the LOWER half of the fetch-thread cap with parked bodies (the
     // budget prefetches may occupy), then assert tryPrefetchSubmit
