@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-session recipe shared by every main-source entry point
-  * (Verify, Bench, TimeQuery, ScaleProbe, ExplainDump). Round 11's UTC
-  * retrofit showed the drift cost of copy-pasted builder blocks: a
-  * config fix that lands in one entry point and not the others makes
-  * tools disagree with the correctness gate (the session-timezone-
-  * dependent events normalization timed tz-shifted plans in Bench while
-  * Verify was correct). Config semantics:
+  * that runs queries (Verify, Capture, MakeSf, ScaleProbe, ShuffleAudit,
+  * LinearProbe). Round 11's UTC retrofit showed the drift cost of
+  * copy-pasted builder blocks: a config fix that lands in one entry point
+  * and not the others makes tools disagree with the correctness gate
+  * (the session-timezone-dependent events normalization timed tz-shifted
+  * plans in the old bench while Verify was correct). Config semantics:
   *  - `shuffle.partitions` / `files.minPartitionNum` = cpus: shuffles
   *    and single-file scans split across exactly the local cores;
   *  - `session.timeZone` UTC: matches DuckDB's naive-as-UTC reading of

@@ -17,7 +17,7 @@ object Verify {
     // (GraftQueries.verifyDump — the ANN dump, the MQ row dump, the
     // z-order roundtrip files) write it only under this flag, so the
     // artifacts the DuckDB compare reads are exactly the ones THIS run
-    // produced, and a later Bench run can't rewrite them underneath the
+    // produced, and a later Capture run can't rewrite them underneath the
     // oracle.
     System.setProperty("graft.verify.dump", "1")
     val spark = Sessions.local(cpus)

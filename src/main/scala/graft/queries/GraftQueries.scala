@@ -68,7 +68,7 @@ object GraftQueries {
     * data DuckDB has no table for, so during a Verify run (flag set by
     * [[graft.Verify]]) the query writes those rows to a FIXED /tmp path
     * and the oracle SQL reads them back with `read_parquet`. Outside
-    * Verify (Bench, ad-hoc use) nothing is written — the artifact the
+    * Verify (Capture, the benchmark, ad-hoc use) nothing is written — the artifact the
     * DuckDB compare reads is always the one the same Verify run produced.
     * The flow contract is run-Verify-then-compare, which is the driver's
     * (and the verify skill's) order anyway.
@@ -1431,7 +1431,7 @@ object GraftQueries {
     * service folds an epoch in ONCE and holds the appended index
     * RESIDENT across every subsequent batch serve; rebuilding the
     * two-epoch index per serve call is a bench artifact, not the
-    * workload. The cold sweep (per-query attributed on the bench line)
+    * workload. The cold run (per-query `cold_s` in graft.tools.Capture)
     * still prices the full build+append every round — the memo only
     * takes the warm sweeps from build+serve to serve, exactly the
     * trained-once/serve-many split the IVF/PQ/BPE artifacts use. The
@@ -2940,9 +2940,9 @@ object GraftQueries {
   // scoring/ranking bug hash-mismatches. (The splitmix64 signature itself
   // is not SQL-expressible — it is the trusted model artifact, exactly as
   // semdedup trusts its dumped cluster assignments.) Parameters come from
-  // the tools/LshTune grid at this SF: bucket population scales as
-  // N/2^bits, so bits must track log₂(N) — 12 bits over 5k
-  // near-orthogonal vectors leaves buckets near-empty (recall 0), while
+  // a recall@5-vs-brute-force grid over bits × tables at this SF: bucket
+  // population scales as N/2^bits, so bits must track log₂(N) — 12 bits
+  // over 5k near-orthogonal vectors leaves buckets near-empty (recall 0), while
   // 8 bits × 8 tables scans ~3% of the corpus per query for recall ≈ 0.2
   // on this structureless data (clustered real embeddings bucket far
   // better). At 100 TB the same grid is rerun with bits sized to the
@@ -3282,7 +3282,7 @@ object GraftQueries {
     *
     * The ABSOLUTE recall values reflect the synthetic testdata: the
     * generated embeddings are near-orthogonal random vectors, so the
-    * LSH row is tuned to this SF from the tools/LshTune grid (8 bits ×
+    * LSH row is tuned to this SF from a bits × tables recall grid (8 bits ×
     * 8 tables → recall ≈ 0.2 at ~3% candidate volume; bucket population
     * scales as N/2^bits, so bits tracks log₂(N) at scale) and IVF gets
     * no cluster structure to exploit (recall ≈ nprobe/nlist-ish). On

@@ -81,10 +81,7 @@ object LinearProbe {
       factor: Int, queries: Seq[String]): Seq[Result] = {
     val unknown = queries.filterNot(GraftQueries.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    // Untimed warmup (codegen/reader init), same as Bench.
-    try spark.read.parquet(s"$baseDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => () }
+    Capture.warmUp(spark, baseDir)
     queries.map { n =>
       val r = probeOne(spark, n, baseDir, scaledDir, factor)
       val tag = if (r.ok) "PASS" else "FAIL"

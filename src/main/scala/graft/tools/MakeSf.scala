@@ -73,28 +73,48 @@ object MakeSf {
     "documents.parquet" -> Seq("doc_id"),
     "embeddings.parquet" -> Seq("vec_id"))
 
-  def build(spark: SparkSession, baseDir: String, outDir: String, factor: Int): Unit = {
-    require(factor >= 2, s"factor must be >= 2, got $factor")
+  /** Claim `outDir` for a scale tool that marks the directories it owns
+    * with `marker`. An existing dir is wiped only when it is empty or
+    * carries the marker: stale tables or symlinks from a run against a
+    * different base would silently mix scale factors, while a typo'd or
+    * reused path (somebody's data dir) is refused loudly, not wiped.
+    * Then the dir's file store must have `needBytes` usable before any
+    * table is written, so a full disk stops the tool here with the
+    * figures instead of killing it (and whatever shares the disk)
+    * mid-write. The marker goes in before any table, so a crashed run's
+    * directory is still wipe-safe on retry.
+    */
+  private[tools] def claimOutDir(outDir: String, marker: String, tool: String,
+      needBytes: Long): Unit = {
     val out = Paths.get(outDir)
-    val marker = out.resolve(Marker)
     if (Files.exists(out)) {
       val empty = { val s = Files.list(out); try !s.findAny().isPresent finally s.close() }
-      require(empty || Files.exists(marker),
-        s"MakeSf: refusing to wipe non-empty '$outDir' — it lacks the $Marker marker")
+      require(empty || Files.exists(out.resolve(marker)),
+        s"$tool: refusing to wipe non-empty '$outDir' — it lacks the $marker marker, " +
+          "so it was not written by a previous run")
       Files.walk(out).sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(p => Files.deleteIfExists(p))
     }
     Files.createDirectories(out)
-    // Ownership marker up front (so a crashed build's directory is still
-    // wipe-safe on retry) — but the base=/factor= parameter lines a
-    // consumer matches against (LinearProbe --reuse) are appended only
-    // AFTER the table-build loop completes: an interrupted build leaves a
-    // marker that owns the directory without attesting to its contents,
-    // so --reuse rejects it and rebuilds instead of benching a partial
-    // corpus.
-    Files.writeString(marker,
-      "scaled test-data directory written by graft.tools.MakeSf\n")
+    val usable = Files.getFileStore(out).getUsableSpace
+    require(usable >= needBytes,
+      s"$tool: '$outDir' needs $needBytes bytes free for the scaled tables, but only $usable are usable")
+    Files.writeString(out.resolve(marker), s"directory owned by graft.tools.$tool\n")
+  }
 
+  /** On-disk bytes of `tables` under `dir`: the volume a ×factor
+    * explode multiplies. */
+  private[tools] def tableBytes(dir: String, tables: Iterable[String]): Long =
+    tables.iterator.map { t =>
+      val files = Files.walk(Paths.get(dir, t))
+      try files.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum
+      finally files.close()
+    }.sum
+
+  def build(spark: SparkSession, baseDir: String, outDir: String, factor: Int): Unit = {
+    require(factor >= 2, s"factor must be >= 2, got $factor")
+    claimOutDir(outDir, Marker, "MakeSf", factor * tableBytes(baseDir, keyShifts.keys))
+    val out = Paths.get(outDir)
     val base = Paths.get(baseDir).toAbsolutePath.normalize()
     val listing = Files.list(base)
     try listing.forEach { p =>
@@ -180,7 +200,7 @@ object MakeSf {
     }
     // Parameter attestation — only a COMPLETE build earns the lines
     // LinearProbe --reuse matches on.
-    Files.writeString(marker,
+    Files.writeString(out.resolve(Marker),
       s"base=${base}\nfactor=$factor\n",
       java.nio.file.StandardOpenOption.APPEND)
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
@@ -247,25 +247,11 @@ object ScaleProbe {
     require(factor >= 2, s"replication factor must be >= 2, got $factor")
     val replicated = Map("documents.parquet" -> "doc_id",
       "embeddings.parquet" -> "vec_id")
+    // The CLI reuses a fixed /tmp path: claimOutDir wipes it only when a
+    // previous probe run marked it (ADVICE r11) and checks free space.
+    MakeSf.claimOutDir(outDir, ProbeMarker, "ScaleProbe",
+      factor * MakeSf.tableBytes(baseDir, replicated.keys))
     val out = Paths.get(outDir)
-    // Wipe any previous probe output first: the CLI reuses a fixed /tmp
-    // path, and stale symlinks from a run against a DIFFERENT baseDir
-    // would silently mix scale factors (or, dangling, crash link
-    // creation). Recursive deletion is gated on the marker file a
-    // previous probe run dropped — "probe-owned by contract" is ENFORCED,
-    // so a typo'd or reused path (somebody's data dir) is refused loudly
-    // instead of silently wiped (ADVICE r11).
-    val marker = out.resolve(ProbeMarker)
-    if (Files.exists(out)) {
-      val empty = { val s = Files.list(out); try !s.findAny().isPresent finally s.close() }
-      require(empty || Files.exists(marker),
-        s"replicateDir: refusing to wipe non-empty '$outDir' — it lacks the " +
-          s"$ProbeMarker marker, so it was not written by a previous probe run")
-      Files.walk(out).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(out)
-    Files.writeString(marker, "scratch directory owned by graft.tools.ScaleProbe\n")
     // Absolute targets (a relative baseDir would make targets resolve
     // against outDir); the listing stream must be closed (it holds a
     // directory handle).
@@ -427,7 +413,7 @@ object ScaleProbe {
   }
 
   /** 1-row aggregate read for the sizing probe's pair-budget scalar —
-    * probe oracle, not an operator; allowlisted like LshTune's reads. */
+    * probe oracle, not an operator. */
   private def longScalar(df: DataFrame): Long = {
     val row = df.head()
     if (row.isNullAt(0)) 0L else row.getLong(0)

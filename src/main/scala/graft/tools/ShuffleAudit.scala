@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
 import graft.queries.GraftQueries
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query shuffle/spill audit: the byte-metric complement of
@@ -110,15 +107,14 @@ object ShuffleAudit {
   /** Aggregate ratios within this fraction BELOW their gate also trigger
     * the per-exchange descent (r20 — VERDICT r19 #5: the two semantic
     * rows at 13.09×/13.38× vs the 13.5 gate were pre-adjudicated by
-    * hand-run pinned PlanMetrics; the sweep now prints that attribution
-    * itself, so a marginal PASS ships with its own evidence).
+    * a hand-run pinned per-node dump; the sweep now prints that
+    * attribution itself, so a marginal PASS ships with its own evidence).
     */
   val NearGateBand = 0.15
 
-  /** Per-exchange floors for the composition descent (the PlanMetrics
-    * print thresholds): below these an exchange is job-overhead-sized
-    * and exempt — floor-exempt growth is exactly the composition
-    * artifact the descent exists to attribute.
+  /** Per-exchange floors for the composition descent: below these an
+    * exchange is job-overhead-sized and exempt — floor-exempt growth is
+    * exactly the composition artifact the descent exists to attribute.
     */
   val ExchangeByteFloor: Long = 8L << 20
   val ExchangeRecordFloor: Long = 10000L
@@ -137,48 +133,6 @@ object ShuffleAudit {
     * differently and no per-exchange claim is made).
     */
   final case class ExchangeStat(node: String, bytes: Long, records: Long)
-
-  /** Accumulates task metrics across the whole session; queries run
-    * sequentially, so per-query deltas are exact.
-    */
-  private final class Tally extends SparkListener {
-    val shuffleWrite = new LongAdder
-    val shuffleRead = new LongAdder
-    val diskSpill = new LongAdder
-    val memSpill = new LongAdder
-    val shuffleRecords = new LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
-        diskSpill.add(m.diskBytesSpilled)
-        memSpill.add(m.memoryBytesSpilled)
-        shuffleRecords.add(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    def snapshot: Metrics =
-      Metrics(shuffleWrite.sum, shuffleRead.sum, diskSpill.sum, memSpill.sum,
-        shuffleRecords.sum)
-  }
-
-  /** Snapshot once the listener bus has drained: totals are read twice
-    * [[QuiesceMs]] apart until two consecutive reads agree (the public
-    * API exposes no waitUntilEmpty; metric deltas must not bleed into
-    * the next query's window).
-    */
-  private def settled(t: Tally, quiesceMs: Long = 150, maxWaitMs: Long = 10000): Metrics = {
-    var prev = t.snapshot
-    var waited = 0L
-    while (waited < maxWaitMs) {
-      Thread.sleep(quiesceMs)
-      waited += quiesceMs
-      val cur = t.snapshot
-      if (cur == prev) return cur
-      prev = cur
-    }
-    prev
-  }
 
   final case class Audit(query: String, base: Metrics, scaled: Option[Metrics], factor: Int,
       baseEx: Seq[ExchangeStat] = Nil, scaledEx: Option[Seq[ExchangeStat]] = None) {
@@ -319,120 +273,80 @@ object ShuffleAudit {
       factor: Int, queries: Seq[String]): Seq[Audit] = {
     val unknown = queries.filterNot(GraftQueries.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val tally = new Tally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      // Untimed warmup (codegen/reader init), same as Bench/LinearProbe.
-      try spark.read.parquet(s"$baseDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
-      catch { case _: Throwable => () }
-      def measure(name: String, dir: String): (Metrics, Seq[ExchangeStat]) = {
-        // First run unmeasured: one-time artifacts (ANN index builds,
-        // trained models — SURVEY §8: they bill to the first consumer)
-        // would otherwise land on whichever SIDE builds them and bend the
-        // ratio. The second run is the steady-state serve path — the one
-        // a 100 TB deployment pays per query. It is also captured
-        // per-execution so the near-gate composition descent can read
-        // each exchange's write volume (r20 — VERDICT r19 #5).
-        GraftQueries.queries(name)(spark, dir).count()
-        // Reap the warmup run's (and the previous query's) shuffle files
-        // before measuring: ContextCleaner only deletes them when the
-        // dead ShuffleDependencies are GC'd, and at a ×1000 dir one
-        // query's leftovers (~40 GB) can exhaust the scratch disk under
-        // the NEXT run — the r22 prefix audit died of exactly this
-        // accumulation, not its own footprint. Dev-tool-only; no query
-        // path runs this.
-        System.gc()
-        Thread.sleep(500)
-        val before = settled(tally)
-        val captured = new java.util.concurrent.ConcurrentLinkedQueue[
-          org.apache.spark.sql.execution.QueryExecution]()
-        val l = new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(f: String,
-              qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-            captured.add(qe)
-          override def onFailure(f: String,
-              qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-        }
-        spark.listenerManager.register(l)
-        try GraftQueries.queries(name)(spark, dir).count()
-        finally {
-          org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-          spark.listenerManager.unregister(l)
-        }
-        val m = settled(tally) - before
-        import scala.jdk.CollectionConverters._
-        val exchanges = captured.asScala.toSeq.flatMap { qe =>
-          org.apache.spark.sql.graft.Bridge.flattenExecuted(qe.executedPlan).flatMap { node =>
-            val nm = org.apache.spark.sql.graft.Bridge.nodeMetrics(node)
-            val b = nm.getOrElse("shuffleBytesWritten", 0L)
-            val r = nm.getOrElse("shuffleRecordsWritten", 0L)
-            if (b > 0 || r > 0) Some(ExchangeStat(node.nodeName, b, r)) else None
-          }
-        }
-        (m, exchanges)
-      }
-      queries.map { n =>
-        val (base, baseEx) = measure(n, baseDir)
-        val scaledBoth = scaledDir.map(measure(n, _))
-        val a = Audit(n, base, scaledBoth.map(_._1), factor,
-          baseEx, scaledBoth.map(_._2))
-        val scaled = a.scaled
-        val tag = if (!a.ok) "FAIL" else if (a.byteWarn) "WARN" else "PASS"
-        val ratioPart = a.ratio.map { r =>
-          val rows = a.rowRatio.map { rr =>
-            val renf =
-              if (!a.rowEnforced) " (rows below signal floor)"
-              else if (!a.rowAggregateOk && a.compositionRowsOk.contains(true))
-                " (aggregate over gate; composition-adjudicated PASS)"
-              else ""
-            f"  rows $rr%6.2f$renf"
-          }.getOrElse("")
-          val enf =
-            if (!a.ratioEnforced) " (not enforced: base below signal floor)"
-            else if (!a.byteAggregateOk && a.compositionBytesOk.contains(true))
-              " (bytes over gate; composition-adjudicated PASS)"
-            else if (a.byteWarn) " (bytes over x" + Slack +
-              ", rows linear, no per-exchange verdict -> WARN at x" + WideByteSlack + ")"
+    Capture.warmUp(spark, baseDir)
+    def measure(name: String, dir: String): (Metrics, Seq[ExchangeStat]) = {
+      // First run unmeasured: one-time artifacts (ANN index builds,
+      // trained models — SURVEY §8: they bill to the first consumer)
+      // would otherwise land on whichever SIDE builds them and bend the
+      // ratio. The second run is the steady-state serve path — the one
+      // a 100 TB deployment pays per query. Its per-exchange write
+      // volumes feed the near-gate composition descent (r20 — VERDICT
+      // r19 #5).
+      GraftQueries.queries(name)(spark, dir).count()
+      val (t, _) = Capture.steadyTrace(spark)(GraftQueries.queries(name)(spark, dir).count())
+      (Metrics(t.shuffleWriteBytes, t.shuffleReadBytes, t.diskSpillBytes,
+        t.memSpillBytes, t.shuffleWriteRecords), t.exchanges)
+    }
+    queries.map { n =>
+      val (base, baseEx) = measure(n, baseDir)
+      val scaledBoth = scaledDir.map(measure(n, _))
+      val a = Audit(n, base, scaledBoth.map(_._1), factor,
+        baseEx, scaledBoth.map(_._2))
+      val scaled = a.scaled
+      val tag = if (!a.ok) "FAIL" else if (a.byteWarn) "WARN" else "PASS"
+      val ratioPart = a.ratio.map { r =>
+        val rows = a.rowRatio.map { rr =>
+          val renf =
+            if (!a.rowEnforced) " (rows below signal floor)"
+            else if (!a.rowAggregateOk && a.compositionRowsOk.contains(true))
+              " (aggregate over gate; composition-adjudicated PASS)"
             else ""
-          f"  x$factor write ${mb(scaled.get.shuffleWrite)}  ratio $r%6.2f$rows$enf"
+          f"  rows $rr%6.2f$renf"
         }.getOrElse("")
-        val spillPart =
-          if (base.diskSpill > 0 || scaled.exists(_.diskSpill > 0))
-            s"  diskSpill base=${mb(base.diskSpill)} scaled=${scaled.map(s => mb(s.diskSpill)).getOrElse("-")}"
-          else if (a.zeroSpillEnforced) "  diskSpill 0 (enforced)"
+        val enf =
+          if (!a.ratioEnforced) " (not enforced: base below signal floor)"
+          else if (!a.byteAggregateOk && a.compositionBytesOk.contains(true))
+            " (bytes over gate; composition-adjudicated PASS)"
+          else if (a.byteWarn) " (bytes over x" + Slack +
+            ", rows linear, no per-exchange verdict -> WARN at x" + WideByteSlack + ")"
           else ""
-        println(f"[shuffle] $tag $n%-32s write ${mb(base.shuffleWrite)}$ratioPart$spillPart")
-        // Near-gate (or over-gate) rows print their own per-exchange
-        // attribution — a marginal verdict ships with its evidence.
-        if ((a.rowNearGate || a.byteNearGate) && a.scaledEx.nonEmpty) {
-          a.matchedExchanges match {
-            case None =>
-              println(s"[shuffle]        near-gate descent: executed shapes differ " +
-                s"(${baseEx.size} vs ${a.scaledEx.map(_.size).getOrElse(0)} exchanges) — no per-exchange claim")
-            case Some(pairs) =>
-              pairs.foreach { case (b, s) =>
-                val br = if (b.bytes > 0) s.bytes.toDouble / b.bytes else 0.0
-                val rr = if (b.records > 0) s.records.toDouble / b.records else 0.0
-                // Label matches the ENFORCEMENT semantics (ADVICE r20
-                // #1): exempt only when the scaled side also sits under
-                // floor × factor × slack; a small base growing past that
-                // cap is marked as outgrown so the line never claims an
-                // exemption compositionRows/BytesOk would not grant.
-                val exempt =
-                  if (b.bytes < ExchangeByteFloor && b.records < ExchangeRecordFloor) {
-                    if (s.bytes < ExchangeByteFloor * factor * Slack &&
-                        s.records < ExchangeRecordFloor * factor * RowSlack)
-                      " (below floor, exempt)"
-                    else " (below floor, but OUTGREW the exemption cap)"
-                  } else ""
-                println(f"[shuffle]        ${b.node}%-24s bytes ${mb(b.bytes)} -> ${mb(s.bytes)} (x$br%5.2f)  rows ${b.records}%10d -> ${s.records}%12d (x$rr%5.2f)$exempt")
-              }
-          }
+        f"  x$factor write ${mb(scaled.get.shuffleWrite)}  ratio $r%6.2f$rows$enf"
+      }.getOrElse("")
+      val spillPart =
+        if (base.diskSpill > 0 || scaled.exists(_.diskSpill > 0))
+          s"  diskSpill base=${mb(base.diskSpill)} scaled=${scaled.map(s => mb(s.diskSpill)).getOrElse("-")}"
+        else if (a.zeroSpillEnforced) "  diskSpill 0 (enforced)"
+        else ""
+      println(f"[shuffle] $tag $n%-32s write ${mb(base.shuffleWrite)}$ratioPart$spillPart")
+      // Near-gate (or over-gate) rows print their own per-exchange
+      // attribution — a marginal verdict ships with its evidence.
+      if ((a.rowNearGate || a.byteNearGate) && a.scaledEx.nonEmpty) {
+        a.matchedExchanges match {
+          case None =>
+            println(s"[shuffle]        near-gate descent: executed shapes differ " +
+              s"(${baseEx.size} vs ${a.scaledEx.map(_.size).getOrElse(0)} exchanges) — no per-exchange claim")
+          case Some(pairs) =>
+            pairs.foreach { case (b, s) =>
+              val br = if (b.bytes > 0) s.bytes.toDouble / b.bytes else 0.0
+              val rr = if (b.records > 0) s.records.toDouble / b.records else 0.0
+              // Label matches the ENFORCEMENT semantics (ADVICE r20
+              // #1): exempt only when the scaled side also sits under
+              // floor × factor × slack; a small base growing past that
+              // cap is marked as outgrown so the line never claims an
+              // exemption compositionRows/BytesOk would not grant.
+              val exempt =
+                if (b.bytes < ExchangeByteFloor && b.records < ExchangeRecordFloor) {
+                  if (s.bytes < ExchangeByteFloor * factor * Slack &&
+                      s.records < ExchangeRecordFloor * factor * RowSlack)
+                    " (below floor, exempt)"
+                  else " (below floor, but OUTGREW the exemption cap)"
+                } else ""
+              println(f"[shuffle]        ${b.node}%-24s bytes ${mb(b.bytes)} -> ${mb(s.bytes)} (x$br%5.2f)  rows ${b.records}%10d -> ${s.records}%12d (x$rr%5.2f)$exempt")
+            }
         }
-        a
       }
-    } finally spark.sparkContext.removeSparkListener(tally)
+      a
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint for the two scale contracts prose can't enforce:
+/** Source lint for the contracts prose can't enforce:
   *
   *  1. NO Scala UDFs in main source — every per-row kernel is either a
   *     built-in function or a native Catalyst expression (the codegen
@@ -20,6 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the diff must then update the allowlist, making every new driver
   *     materialization a REVIEWED decision instead of a silent scale
   *     leak.
+  *  3. Spark and SQL listeners are installed only by the one capture
+  *     tool (graft.tools.Capture), so per-tool listener copies cannot
+  *     grow back.
   *
   * Matching is done on comment-stripped source so scaladoc may discuss
   * `collect()` freely; string literals in main source don't mention these
@@ -73,21 +76,12 @@ class CollectLintSpec extends AnyFunSuite {
     "graft/ops/CurationPipeline.scala" -> 1, // Run.load: the stage-count-
                                      // sized meta table (stage_idx →
                                      // name rows), never a stage frame
-    "graft/tools/LshTune.scala" -> 2, // offline tuning CLI, not an
-                                     // operator: both reads are top-k
-                                     // result sets (queries×k rows),
-                                     // bounded by the grid's fixed
-                                     // 10-query probe
-    "graft/tools/ScaleProbe.scala" -> 2, // longScalar (the sizing probe's
+    "graft/tools/ScaleProbe.scala" -> 2) // longScalar (the sizing probe's
                                      // 1-row pair-budget aggregate) and
                                      // checkTemperature's group-
                                      // cardinality counts (≤ #languages
                                      // rows) — probe oracles, not
                                      // operators
-    "graft/Bench.scala" -> 1)        // calib_ms: the calibration query's
-                                     // 1-row sum aggregate (r20 — the
-                                     // machine-speed divisor on the
-                                     // bench line)
 
   private val collectPattern =
     """\.(collect\(\)|collectAsList|head\(\)|first\(\)|toLocalIterator)""".r
@@ -135,5 +129,14 @@ class CollectLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"udf( found in $offenders — use a built-in function or a native expression")
+  }
+
+  test("listeners are installed only by the capture tool") {
+    val listenerPattern = """listenerManager\.register|addSparkListener""".r
+    val sites = mainSources.collect {
+      case (rel, src) if listenerPattern.findFirstIn(src).isDefined => rel
+    }
+    assert(sites == Seq("graft/tools/Capture.scala"),
+      s"listener registration found in $sites — trace through graft.tools.Capture instead")
   }
 }

@@ -134,4 +134,27 @@ class MakeSfSpec extends SparkSuite {
       }
     }
   }
+
+  test("claimOutDir: refuses an unmarked dir and a file store without the space, before claiming") {
+    import java.nio.file.{Files, Paths}
+    val root = tmp("graft-makesf-claim")
+    val foreign = Paths.get(root, "foreign")
+    Files.createDirectories(foreign)
+    Files.writeString(foreign.resolve("data.txt"), "not ours")
+    val refused = intercept[IllegalArgumentException](
+      MakeSf.claimOutDir(foreign.toString, MakeSf.Marker, "MakeSf", 1))
+    assert(refused.getMessage.contains("refusing to wipe"))
+    assert(Files.exists(foreign.resolve("data.txt")))
+
+    val dir = Paths.get(root, "scaled")
+    Files.createDirectories(dir)
+    val need = Files.getFileStore(dir).getUsableSpace + (1L << 30)
+    val e = intercept[IllegalArgumentException](
+      MakeSf.claimOutDir(dir.toString, MakeSf.Marker, "MakeSf", need))
+    assert(e.getMessage.contains(s"'$dir'") && e.getMessage.contains(s"needs $need bytes") &&
+      e.getMessage.contains("usable"), e.getMessage)
+    assert(!Files.exists(dir.resolve(MakeSf.Marker)))
+    MakeSf.claimOutDir(dir.toString, MakeSf.Marker, "MakeSf", 1)
+    assert(Files.exists(dir.resolve(MakeSf.Marker)))
+  }
 }
