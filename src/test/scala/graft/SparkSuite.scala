@@ -16,17 +16,13 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
+  /** `Sessions.local`'s configs on 4 cores (so every spec runs under the
+    * same recipe as the tools, streaming checkpoints included), plus the
+    * test-only temp warehouse and graft's planner extensions.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.files.minPartitionNum", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); Spark 4 refuses it unless
-      // read as long (nanos since epoch) — queries convert as needed.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
