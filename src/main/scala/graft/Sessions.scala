@@ -19,7 +19,16 @@ import org.apache.spark.sql.SparkSession
   *    streaming checkpoints on `file:` paths are written without forking
   *    `chmod`/`readlink` for every file; layout, modes, `.crc` sidecars
   *    and restart semantics are Spark's, and other schemes get Spark's
-  *    own manager.
+  *    own manager;
+  *  - `artifact.isolation.enabled` false: every session on the context,
+  *    including each streaming query's cloned session and graft's
+  *    `newSession()` children, runs its tasks under the executor's one
+  *    default classloader, and Spark's codegen cache is keyed by
+  *    (classloader, source), so identical generated code compiles once
+  *    per JVM instead of once per session. graft adds no session
+  *    artifacts (`addArtifact`, `ADD JAR`/`FILE`/`ARCHIVE`; pinned by
+  *    `CollectLintSpec`), so nothing isolation protects is in use; a tool
+  *    that does add them must not build on this recipe.
   * The tests' `SparkSuite` builds its session from the same [[configs]],
   * adding only its warehouse dir and `spark.sql.extensions`.
   */
@@ -47,7 +56,8 @@ object Sessions {
     "spark.ui.enabled" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      classOf[graft.streaming.LocalCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** A builder for a local[`cpus`] session with [[configs]]. */
   def builder(cpus: String): SparkSession.Builder =

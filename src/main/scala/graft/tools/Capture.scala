@@ -12,14 +12,14 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.{Sessions, SparkEntry}
 import graft.queries.GraftQueries
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, InputAdapter, QueryExecution,
   SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The per-query capture: what each registered query costs, end to end
   * and layer by layer, from one pass per query.
@@ -28,10 +28,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (artifact builds, codegen and IO init land here), [[WarmRuns]]
   * untraced warm runs (the wall-time samples), then a GC and one traced
   * STEADY run (the memoized serve path the warm runs time). A traced run
-  * records, per inner execution, its duration, root node, planning ms
-  * (`QueryExecution.tracker.phases`) and hot nodes; and over the run the
-  * job, stage and task counts, shuffle bytes and records both ways, disk
-  * and memory spill, and each shuffle exchange's write volume.
+  * records, per inner execution of any session on the context (the
+  * registry's child sessions included), its duration, root node,
+  * planning ms (`QueryExecution.tracker.phases`) and hot nodes; and over
+  * the run the job, stage and task counts, shuffle bytes and records both
+  * ways, disk and memory spill, each shuffle exchange's write volume, and
+  * `codegen_compiles`, the generated classes Janino compiled (a steady
+  * run that compiles is missing Spark's codegen cache).
   * `trace_overhead` is the steady traced wall over the warm median: the
   * cost of tracing itself, so a traced figure can be read against an
   * untraced one.
@@ -66,7 +69,7 @@ object Capture {
   final case class Trace(wallS: Double, rows: Long, jobs: Long, stages: Long, tasks: Long,
       shuffleWriteBytes: Long, shuffleWriteRecords: Long,
       shuffleReadBytes: Long, shuffleReadRecords: Long,
-      diskSpillBytes: Long, memSpillBytes: Long,
+      diskSpillBytes: Long, memSpillBytes: Long, codegenCompiles: Long,
       executions: Seq[Execution], exchanges: Seq[ShuffleAudit.ExchangeStat])
 
   sealed trait Record { def query: String }
@@ -74,9 +77,10 @@ object Capture {
       warmMedianS: Double, traceOverhead: Double, cold: Trace, steady: Trace) extends Record
   final case class Failed(query: String, error: String) extends Record
 
-  /** The one listener pair: jobs, stages and task metrics from the
-    * scheduler bus, inner executions from the SQL listener bus. */
-  private final class Recorder extends SparkListener with QueryExecutionListener {
+  /** The one listener: jobs, stages and task metrics from the scheduler
+    * events, inner executions from the SQL execution-end events of every
+    * session on the context. */
+  private final class Recorder extends SparkListener {
     val jobs, stages, tasks = new LongAdder
     val writeBytes, writeRecords, readBytes, readRecords, diskSpill, memSpill = new LongAdder
     val executions = new ConcurrentLinkedQueue[(QueryExecution, Long)]()
@@ -94,9 +98,8 @@ object Capture {
         memSpill.add(m.memoryBytesSpilled)
       }
     }
-    override def onSuccess(f: String, qe: QueryExecution, durationNs: Long): Unit =
-      executions.add((qe, durationNs))
-    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    override def onOtherEvent(e: SparkListenerEvent): Unit =
+      Bridge.succeededExecution(e).foreach(executions.add)
   }
 
   /** Untimed warm-up (codegen and parquet-reader init would otherwise land
@@ -118,18 +121,20 @@ object Capture {
     * the formatted plan of each inner execution. The listener bus is
     * drained before the recorder is installed (no earlier run's events
     * land in this window) and before it is removed (every event of this
-    * run has been delivered), so the counts are exactly this run's.
+    * run has been delivered), so the counts are exactly this run's. The
+    * compile count is the JVM-wide histogram's delta over the action:
+    * exact while nothing else runs on the context.
     */
   private def trace(spark: SparkSession)(action: => Long): (Trace, Seq[String]) = {
     val r = new Recorder
     Bridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(r)
-    spark.listenerManager.register(r)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (rows, wallS) = try timed(action) finally {
       Bridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(r)
-      spark.listenerManager.unregister(r)
     }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
     val captured = r.executions.asScala.toSeq
     val plans = captured.map(_._1.explainString(FormattedMode))
     val perExec = captured.map { case (qe, durationNs) =>
@@ -152,7 +157,7 @@ object Capture {
     }
     (Trace(wallS, rows, r.jobs.sum, r.stages.sum, r.tasks.sum,
       r.writeBytes.sum, r.writeRecords.sum, r.readBytes.sum, r.readRecords.sum,
-      r.diskSpill.sum, r.memSpill.sum, perExec.map(_._1), perExec.flatMap(_._2)), plans)
+      r.diskSpill.sum, r.memSpill.sum, compiles, perExec.map(_._1), perExec.flatMap(_._2)), plans)
   }
 
   /** [[trace]] of the steady-state serve path. The GC first reaps earlier
@@ -228,7 +233,8 @@ object Capture {
       record match {
         case c: Captured =>
           println(f"[capture] $name%-38s cold ${c.coldS}%7.2f s  warm ${c.warmMedianS}%7.2f s  " +
-            f"overhead ${c.traceOverhead}%5.2f  ${c.steady.executions.size} exec ${c.steady.jobs} jobs")
+            f"overhead ${c.traceOverhead}%5.2f  ${c.steady.executions.size} exec ${c.steady.jobs} jobs " +
+            s"${c.steady.codegenCompiles} compiles")
         case f: Failed => println(s"[capture] FAILED $name: ${f.error}")
       }
       records += record

@@ -73,8 +73,23 @@ object Bridge {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
-  /** Drain the async listener bus so tests can observe
-    * `QueryExecutionListener` events synchronously — `sparkContext
+  /** The query execution and its duration in ns when `e` ends a named,
+    * successful SQL execution of ANY session on the context — the set a
+    * `QueryExecutionListener` reports for its own session only, so a
+    * child session's (`newSession()`) executions are seen too. The end
+    * event's `qe`, `executionName` and `executionFailure` are
+    * `private[sql]`.
+    */
+  def succeededExecution(e: org.apache.spark.scheduler.SparkListenerEvent)
+      : Option[(org.apache.spark.sql.execution.QueryExecution, Long)] = e match {
+    case end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+        if end.qe != null && end.executionName.isDefined && end.executionFailure.isEmpty =>
+      Some((end.qe, end.duration))
+    case _ => None
+  }
+
+  /** Drain the async listener bus so tests and the capture tool can
+    * observe listener events synchronously — `sparkContext
     * .listenerBus` is `private[spark]`. Needed to assert on the INNER
     * query executions of operators that return an eager localCheckpoint
     * (the outer plan is just a `Scan ExistingRDD` stub).

@@ -23,11 +23,16 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. Spark and SQL listeners are installed only by the one capture
   *     tool (graft.tools.Capture), so per-tool listener copies cannot
   *     grow back.
+  *  4. NO session artifacts: `Sessions.configs` turns artifact isolation
+  *     off so every session shares the executor's one classloader (and
+  *     its compiled code); an artifact added to one session would then be
+  *     visible to all of them. `addArtifact(s)` calls and `ADD JAR`/
+  *     `FILE`/`ARCHIVE` in SQL strings are both refused.
   *
   * Matching is done on comment-stripped source so scaladoc may discuss
   * `collect()` freely; string literals in main source don't mention these
   * tokens today (and a false positive is a loud, fixable failure, never a
-  * silent pass).
+  * silent pass). Only the SQL check reads the string literals.
   */
 class CollectLintSpec extends AnyFunSuite {
 
@@ -87,34 +92,36 @@ class CollectLintSpec extends AnyFunSuite {
     """\.(collect\(\)|collectAsList|head\(\)|first\(\)|toLocalIterator)""".r
   private val udfPattern = """(^|[^\w.])udf\s*\(""".r
 
-  private def stripComments(src: String): String = {
-    // Order matters: string literals FIRST (the oracle SQL blocks contain
-    // `//` — DuckDB integer division — which a naive line-comment strip
-    // would treat as a comment, hiding anything after them on the same
-    // physical line), then block comments, then line comments. Triple-
-    // quoted before single-quoted so the quotes inside """…""" don't
-    // start a phantom string.
-    val noTriple = "(?s)\"\"\".*?\"\"\"".r.replaceAllIn(src, "\"S\"")
-    val noString = "\"(?:[^\"\\\\\\n]|\\\\.)*\"".r.replaceAllIn(noTriple, "\"S\"")
-    val noBlock = """(?s)/\*.*?\*/""".r.replaceAllIn(noString, "")
-    noBlock.linesIterator.map { l =>
-      val i = l.indexOf("//")
-      if (i >= 0) l.substring(0, i) else l
-    }.mkString("\n")
-  }
+  /** One left-to-right scan over string literals, char literals and
+    * comments, so a `//` inside a string (the oracle SQL blocks contain
+    * DuckDB integer division) starts no comment and a quote inside a
+    * comment or a char literal starts no string. Triple-quoted before
+    * single-quoted so the quotes inside """…""" don't start a phantom
+    * string.
+    */
+  private val lexeme =
+    "(?s)\"\"\".*?\"\"\"|\"(?:[^\"\\\\\\n]|\\\\.)*\"|'(?:[^'\\\\\\n]|\\\\.)'|/\\*.*?\\*/|//[^\\n]*".r
 
-  private def mainSources: Seq[(String, String)] = {
+  /** `src` without comments; string literals become "S" unless `keepStrings`. */
+  private def stripComments(src: String, keepStrings: Boolean): String =
+    lexeme.replaceAllIn(src, m => m.matched.charAt(0) match {
+      case '/' => ""
+      case '"' if !keepStrings => "\"S\""
+      case _ => scala.util.matching.Regex.quoteReplacement(m.matched)
+    })
+
+  private def mainSources(keepStrings: Boolean = false): Seq[(String, String)] = {
     val files = Files.walk(mainRoot).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     assert(files.nonEmpty, s"no sources under $mainRoot — lint running from wrong cwd?")
     files.map { p: Path =>
       (mainRoot.relativize(p).toString,
-        stripComments(new String(Files.readAllBytes(p), "UTF-8")))
+        stripComments(new String(Files.readAllBytes(p), "UTF-8"), keepStrings))
     }
   }
 
   test("driver materializations stay on the documented bounded sites") {
-    val counts = mainSources.map { case (rel, src) =>
+    val counts = mainSources().map { case (rel, src) =>
       rel -> collectPattern.findAllIn(src).size
     }.filter(_._2 > 0).toMap
     assert(counts == allowedCollects,
@@ -124,7 +131,7 @@ class CollectLintSpec extends AnyFunSuite {
   }
 
   test("no Scala UDFs anywhere in main source") {
-    val offenders = mainSources.collect {
+    val offenders = mainSources().collect {
       case (rel, src) if udfPattern.findFirstIn(src).isDefined => rel
     }
     assert(offenders.isEmpty,
@@ -133,10 +140,24 @@ class CollectLintSpec extends AnyFunSuite {
 
   test("listeners are installed only by the capture tool") {
     val listenerPattern = """listenerManager\.register|addSparkListener""".r
-    val sites = mainSources.collect {
+    val sites = mainSources().collect {
       case (rel, src) if listenerPattern.findFirstIn(src).isDefined => rel
     }
     assert(sites == Seq("graft/tools/Capture.scala"),
       s"listener registration found in $sites — trace through graft.tools.Capture instead")
+  }
+
+  test("no session artifacts: every session shares one classloader") {
+    val apiPattern = """\baddArtifacts?\b""".r
+    val sqlPattern = """(?i)\bADD\s+(JAR|FILE|ARCHIVE)S?\b""".r
+    val apiSites = mainSources().collect {
+      case (rel, src) if apiPattern.findFirstIn(src).isDefined => rel
+    }
+    val sqlSites = mainSources(keepStrings = true).collect {
+      case (rel, src) if sqlPattern.findFirstIn(src).isDefined => rel
+    }
+    assert(apiSites.isEmpty && sqlSites.isEmpty,
+      s"session artifacts added in ${apiSites ++ sqlSites} — graft sessions run with " +
+        "artifact isolation off (Sessions.configs), so an artifact would reach every session")
   }
 }

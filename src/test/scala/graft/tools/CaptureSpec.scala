@@ -13,6 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cold, warm and steady figures, traced counts that agree with each
   * other, a plan file per captured query, a capture.json that parses,
   * and a query that throws recorded as an error without ending the pass.
+  * A query that runs its SQL in a child session (`newSession()`) shows
+  * its executions, and no steady run compiles generated code.
   */
 class CaptureSpec extends SparkSuite {
 
@@ -20,7 +22,7 @@ class CaptureSpec extends SparkSuite {
     val out = tmp("graft-capture")
     val boom: (SparkSession, String) => DataFrame =
       (_, _) => throw new IllegalStateException("boom")
-    val names = Seq("q01_pricing_summary", "boom", "dedup_jaccard_exact")
+    val names = Seq("q01_pricing_summary", "boom", "dedup_jaccard_exact", "q30_scalar_subquery")
     val records = Capture.run(spark, sf(), out, names.map {
       case "boom" => "boom" -> boom
       case n => n -> GraftQueries.queries(n)
@@ -28,13 +30,16 @@ class CaptureSpec extends SparkSuite {
     assert(records.map(_.query) == names)
     assert(records(1) == Capture.Failed("boom", "java.lang.IllegalStateException: boom"))
     val captured = records.collect { case c: Capture.Captured => c.query -> c }.toMap
-    assert(captured.keySet == Set("q01_pricing_summary", "dedup_jaccard_exact"))
+    assert(captured.keySet == Set("q01_pricing_summary", "dedup_jaccard_exact", "q30_scalar_subquery"))
 
     // A group-by over lineitem writes shuffle in both traced runs.
     val q01 = captured("q01_pricing_summary")
     assert(q01.cold.shuffleWriteBytes > 0 && q01.steady.shuffleWriteBytes > 0)
     // The pair op checkpoints intermediates: several inner executions.
     assert(captured("dedup_jaccard_exact").steady.executions.size > 1)
+    // q30's SQL runs in a child session: its executions are recorded too.
+    val q30 = captured("q30_scalar_subquery")
+    assert(q30.cold.executions.nonEmpty && q30.steady.executions.nonEmpty)
 
     for (c <- captured.values) {
       assert(c.warmS.size == Capture.WarmRuns && c.warmS.contains(c.warmMedianS))
@@ -46,11 +51,14 @@ class CaptureSpec extends SparkSuite {
         // checkpointed frames shuffle inside no captured execution.
         assert(t.exchanges.map(_.records).sum <= t.shuffleWriteRecords, s"${c.query} $label")
         assert(t.executions.forall(e => e.durationMs >= 0 && e.root.nonEmpty))
+        assert(t.codegenCompiles >= 0)
         // One non-empty formatted plan per inner execution.
         val sections = plan.split(s"---------- $label execution \\d+ ----------\n").drop(1)
         assert(sections.length == t.executions.size, s"${c.query} $label")
         assert(sections.forall(_.trim.nonEmpty))
       }
+      // The warm runs compiled everything the steady run needs.
+      assert(c.steady.codegenCompiles == 0, s"${c.query} steady")
     }
 
     val root = new ObjectMapper().readTree(Paths.get(out, "capture.json").toFile)
@@ -59,5 +67,6 @@ class CaptureSpec extends SparkSuite {
     assert(qs(1).get("error").asText.contains("boom"))
     assert(qs(0).get("steady").get("shuffle_write_bytes").asLong == q01.steady.shuffleWriteBytes)
     assert(qs(2).get("trace_overhead").asDouble > 0)
+    assert(qs(3).get("cold").get("codegen_compiles").asLong == q30.cold.codegenCompiles)
   }
 }
