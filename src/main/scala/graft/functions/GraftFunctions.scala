@@ -52,10 +52,6 @@ object GraftFunctions {
   def word_ngrams(tokens: Column, n: Int, distinct: Boolean = false): Column =
     col(WordNgrams(expr(tokens), n, distinct))
 
-  /** Intersection size of two SORTED long arrays (linear merge). */
-  def sorted_intersect_count(a: Column, b: Column): Column =
-    col(SortedIntersectCount(expr(a), expr(b)))
-
   /** Random-hyperplane LSH signature of a vector column (ANN bucketing). */
   def lsh_signature(v: Column, bits: Int, table: Int): Column =
     col(HyperplaneLshSignature(expr(v), bits, table))

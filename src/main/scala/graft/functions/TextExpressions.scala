@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
@@ -79,48 +79,3 @@ case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
-
-/** sorted_intersect_count(array<long>, array<long>) → int.
-  *
-  * Linear-merge intersection size of two SORTED long arrays (duplicates
-  * contribute min-multiplicity, like `array_intersect` on sets the arrays
-  * never have). A pair-verify kernel: per candidate pair it replaces
-  * `array_intersect`/`array_union` over ~90-element string arrays
-  * (hash-probe + string equality per element) with one O(n_a + n_b)
-  * primitive merge — measured 7× on the verify
-  * stage at sf0.1. Inputs MUST be sorted ascending (the caller sorts once
-  * per document, not per pair).
-  */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_count"
-  override def inputTypes: Seq[Bridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var c = 0
-    // Null ELEMENTS are skipped, not read: the input type admits
-    // containsNull arrays, and ArrayData.getLong on a null slot silently
-    // yields 0 — which would count a phantom intersection against a real
-    // hash value of 0. A null is no value; it matches nothing.
-    while (i < na && j < nb) {
-      if (a.isNullAt(i)) i += 1
-      else if (b.isNullAt(j)) j += 1
-      else {
-        val x = a.getLong(i); val y = b.getLong(j)
-        if (x < y) i += 1
-        else if (x > y) j += 1
-        else { c += 1; i += 1; j += 1 }
-      }
-    }
-    c
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-

@@ -68,7 +68,7 @@ import org.apache.spark.internal.Logging
   *
   * ADMIN ops (100+) exist because the forked-server fixture (VERDICT
   * r19 #2) needs the in-memory test hooks — drop, retention truncation,
-  * injected fetch/meta latency — across the process boundary. This
+  * injected fetch latency — across the process boundary. This
   * broker is explicitly the test double for the connector (the unit
   * under test is the connector, not the broker); a production broker
   * would not expose these.
@@ -192,9 +192,9 @@ object MqSocketBroker {
             }
           }
           // Per-op errors respond with a typed status; PROTOCOL errors
-          // (bad magic, capped lengths) rethrow past this handler — a
-          // desynced stream cannot carry further frames, so the session
-          // dies instead of answering garbage.
+          // (bad magic, unknown op, capped lengths) rethrow past this
+          // handler — a desynced stream cannot carry further frames, so
+          // the session dies instead of answering garbage.
           try op match {
             case 1 => // CREATE
               val n = in.readInt()
@@ -251,12 +251,11 @@ object MqSocketBroker {
                 else st.injectFetchDelay(p, ms)
                 ok(st)
               }
-            case 103 => // ADMIN META_DELAY ms
-              injectMetaDelay(in.readLong())
-              status(StatusOk); out.writeLong(-1L)
             case other =>
-              status(StatusError)
-              out.writeUTF(s"graft-mq: unknown op $other")
+              // Its payload is unknown, so it cannot be skipped: the
+              // stream is desynced, as after a bad magic.
+              throw new MqProtocolException(
+                s"graft-mq server: unknown op $other; closing connection")
           } catch {
             case e: MqProtocolException => throw e // desynced — kill the session
             case e: MqOffsetOutOfRangeException =>
@@ -530,12 +529,6 @@ object MqSocketBroker {
         out.writeByte(102); out.writeUTF(t)
         out.writeInt(partition); out.writeLong(ms); out.writeBoolean(stubborn)
       } {
-        case StatusOk => in.readLong(); ()
-        case s => fail(s)
-      }
-
-    private[mq] def adminMetaDelay(ms: Long): Unit =
-      rpc { out.writeByte(103); out.writeUTF(""); out.writeLong(ms) } {
         case StatusOk => in.readLong(); ()
         case s => fail(s)
       }

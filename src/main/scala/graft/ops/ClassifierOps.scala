@@ -100,22 +100,6 @@ object ClassifierOps {
     finally feat.unpersist(blocking = false)
   }
 
-  /** Train THEN score over one shared persisted feature frame — the
-    * registered-query shape (training and scoring each need the full
-    * hashed-bag build; sharing it halves the corpus passes). Returns the
-    * scored frame; the Caching contract eagerly materializes it before
-    * the feature blocks release.
-    */
-  def trainAndScorePerceptron(docs: DataFrame, labelCol: String,
-      numBuckets: Int = 64, steps: Int = 3, learningRate: Double = 1.0,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val feat = features(docs, labelCol, numBuckets, idCol, textCol)
-    Caching.withCached(feat) {
-      val model = trainOn(feat, numBuckets, steps, learningRate)
-      scoreFeatures(feat, model, idCol)
-    }
-  }
-
   private def trainOn(feat: DataFrame, numBuckets: Int, steps: Int,
       learningRate: Double): PerceptronModel = {
     require(numBuckets >= 1 && numBuckets <= 65536,

@@ -214,9 +214,9 @@ object CurationOps {
 
   /** Train side of [[dsirLogWeights]]: the per-bucket log-ratio model as
     * a `buckets`-row DataFrame (`bk` long, `lam` decimal(18,12)) — the
-    * persistable unit ([[ModelIO.saveDsirModel]]) of the train-once /
-    * persist / serve-later lifecycle. The caller serves later batches
-    * with [[dsirScore]] under the SAME `buckets` and `salt` (they define
+    * trained unit of the train-once / serve-many lifecycle. The caller
+    * serves later batches with [[dsirScore]] under the SAME `buckets`
+    * and `salt` (they define
     * the feature space; the model rows don't re-encode them).
     */
   def trainDsirModel(raw: DataFrame, target: DataFrame, buckets: Int = 64,
@@ -230,9 +230,9 @@ object CurationOps {
       buckets)
   }
 
-  /** Serve side of [[dsirLogWeights]]: weigh `docs` under a trained (or
-    * [[ModelIO.loadDsirModel]]-loaded) model. `buckets` and `salt` must
-    * match training — they define the hash feature space.
+  /** Serve side of [[dsirLogWeights]]: weigh `docs` under a trained
+    * model. `buckets` and `salt` must match training — they define the
+    * hash feature space.
     */
   def dsirScore(docs: DataFrame, model: DataFrame, buckets: Int = 64,
       idCol: String = "doc_id", textCol: String = "text",

@@ -718,17 +718,15 @@ object DedupOps {
       buildJaccardRefIndex(refDocs, shingleN, idCol, textCol),
       threshold, shingleN, maxShingleDf, idCol, textCol, refGateBits)
 
-  /** Persistable REFERENCE INDEX for incremental dedup — the accumulated
-    * corpus side of [[jaccardPairsAgainstIndex]] (shingle-set
-    * representatives) or [[embeddingPairsAgainstIndex]] (vector-value
-    * representatives) as two plain DataFrames: collapsed `reps` and the
-    * fp→id `members` mapping. This is the artifact a CONTINUOUS-INGEST
-    * deployment persists: [[ModelIO.saveRefIndex]] writes both tables as
-    * parquet (distributed write — the index is corpus-sized, never
-    * driver-materialized), and every daily batch then serves from the
-    * LOADED index, dropping per-batch cost from corpus-linear (the
-    * against-Ref convenience forms re-shingle/re-fingerprint the whole
-    * reference on every call) to batch-sized work plus an index scan.
+  /** REFERENCE INDEX for incremental dedup — the accumulated corpus
+    * side of [[jaccardPairsAgainstIndex]] (shingle-set representatives)
+    * or [[embeddingPairsAgainstIndex]] (vector-value representatives) as
+    * two plain DataFrames: collapsed `reps` and the fp→id `members`
+    * mapping. This is the artifact a CONTINUOUS-INGEST deployment keeps:
+    * built once, it serves every batch, dropping per-batch cost from
+    * corpus-linear (the against-Ref convenience forms
+    * re-shingle/re-fingerprint the whole reference on every call) to
+    * batch-sized work plus an index scan.
     * Between epochs, fold new batches' survivors in via
     * [[appendToRefIndex]] — the ONLY supported mutation: hand-unioning
     * the tables corrupts rep counts and leaves `maxClass` stale when a
@@ -738,7 +736,7 @@ object DedupOps {
     */
   /** @param postings build-time Σ set sizes over `reps` (lexical axis
     *                  only — the posting-row total that sizes the serve
-    *                  join's partitioning): priced once at build/save,
+    *                  join's partitioning): priced once by [[priceRefIndex]],
     *                  maintained by [[appendToRefIndex]], so a batch
     *                  serve never re-scans the corpus-sized reps table
     *                  just to size its exchanges (r21). None (unpriced)
@@ -756,8 +754,8 @@ object DedupOps {
   /** Build the lexical (shingle-set) reference index of `refDocs`.
     * `materialized = true` eagerly pins the keyed corpus pass (the
     * Caching seam) before deriving the two tables — do this when the
-    * index is about to be SAVED, otherwise [[ModelIO.saveRefIndex]]'s
-    * two writes each re-derive the full corpus lineage; the lazy
+    * index will serve more than one batch, otherwise every consumer of
+    * the two tables re-derives the full corpus lineage; the lazy
     * default keeps the delegating against-Ref convenience forms
     * allocation-free. */
   def buildJaccardRefIndex(refDocs: DataFrame, shingleN: Int = 3,
@@ -772,9 +770,8 @@ object DedupOps {
   /** Price the stored class-size max of an in-session index — ONE
     * corpus aggregate over `reps`, after which every serve call's
     * expansion switch reads the constant instead of re-aggregating the
-    * corpus per batch (the same pricing [[ModelIO.saveRefIndex]] bakes
-    * into the persisted meta). Use when an UNSAVED index will serve
-    * more than one batch — a resident index in a long-lived session;
+    * corpus per batch. Use when an index will serve more than one
+    * batch — a resident index in a long-lived session;
     * pointless for the one-shot against-Ref convenience forms, whose
     * single serve pays the lazy aggregate exactly once anyway. The
     * aggregate RUNS A SPARK JOB in this call; price AFTER materializing
@@ -813,21 +810,20 @@ object DedupOps {
     * is max(stored max, exact post-append count of every class the
     * batch TOUCHED) — one batch-sized aggregate that probes the corpus
     * reps once on the batch's fingerprints, never a corpus-wide
-    * re-aggregate. An index whose maxClass is None (built in-session,
-    * never saved) stays None: the serve path already computes the exact
-    * max lazily, and pricing it here would pay the corpus aggregate the
-    * laziness exists to avoid.
+    * re-aggregate. An index whose maxClass is None (never priced) stays
+    * None: the serve path already computes the exact max lazily, and
+    * pricing it here would pay the corpus aggregate the laziness exists
+    * to avoid.
     *
     * `idCol`/`valueCol` default per axis when left empty: ("doc_id",
     * "text") lexical, ("vec_id", "embedding") semantic. Cost per epoch:
     * batch keying plus one merge groupBy over reps ∪ batch keys —
     * corpus-linear ONCE per epoch (the per-batch serve calls stay
     * batch-sized). `materialized = true` pins the batch keying before
-    * the two derived tables consume it — use it when saving the result
-    * via [[ModelIO.saveRefIndex]] (which re-prices maxClass from the
-    * written table), mirroring the builders' flag.
+    * the two derived tables consume it — use it when the result will
+    * serve more than one batch, mirroring the builders' flag.
     *
-    * When `maxClass` is Some (every loaded index), the touched-class
+    * When `maxClass` is Some (every priced index), the touched-class
     * probe RUNS A SPARK JOB inside this call (the 1-row max read), and
     * the batch keying is pinned regardless of `materialized` so the
     * probe, `reps`, and `members` share one computation of the batch
@@ -896,9 +892,9 @@ object DedupOps {
       index.postings.flatMap(p => mergedPriced.map(p + _._2)))
   }
 
-  /** [[jaccardPairsAgainstRef]] served from a prebuilt (typically
-    * loaded) [[DedupRefIndex]] — result-identical to the convenience
-    * form by construction (it delegates here). */
+  /** [[jaccardPairsAgainstRef]] served from a prebuilt [[DedupRefIndex]]
+    * — result-identical to the convenience form by construction (it
+    * delegates here). */
   def jaccardPairsAgainstIndex(newDocs: DataFrame, refIndex: DedupRefIndex,
       threshold: Double = 0.5, shingleN: Int = 3,
       maxShingleDf: Int = Int.MaxValue,
@@ -948,9 +944,9 @@ object DedupOps {
       // Serve-path pricing in ONE batch-sized job (r21): the batch
       // side's Σ sizes and class max ride one 1-row aggregate; the ref
       // side's constants come from the index when it is PRICED
-      // (priceRefIndex / a loaded index / a maintained append) — so a
-      // priced serve never scans the corpus-sized reps table just to
-      // size its exchanges. An unpriced in-session index folds both
+      // (priceRefIndex / a maintained append) — so a priced serve
+      // never scans the corpus-sized reps table just to size its
+      // exchanges. An unpriced in-session index folds both
       // sides into one union aggregate instead of two driver jobs.
       val (postings, bothMax) = (refIndex.maxClass, refIndex.postings) match {
         case (Some(refMax), Some(refPostings)) =>
@@ -1398,9 +1394,9 @@ object DedupOps {
   private def vectorRepsOf(k: DataFrame): DataFrame =
     repsByMinId(k, "id", "v", lit(1L))
 
-  /** [[embeddingPairsAgainstRef]] served from a prebuilt (typically
-    * loaded) [[DedupRefIndex]] — result-identical to the convenience
-    * form by construction (it delegates here). */
+  /** [[embeddingPairsAgainstRef]] served from a prebuilt
+    * [[DedupRefIndex]] — result-identical to the convenience form by
+    * construction (it delegates here). */
   def embeddingPairsAgainstIndex(newEmb: DataFrame, refIndex: DedupRefIndex,
       threshold: Double, dims: Int,
       bands: Int = 8, bitsPerBand: Int = 8,

@@ -5,50 +5,17 @@ import org.apache.spark.sql.functions._
 
 /** Output layout for pipeline results — at 100 TB the WRITE side decides
   * the read performance of every downstream consumer (a training job
-  * reading one language, one date, one source shouldn't scan the rest).
+  * reading one date range or one source shouldn't scan the rest).
   *
-  * Two layouts:
-  *  - hive-partitioned (`partitionBy`): low-cardinality selector columns
-  *    become directories; readers get partition PRUNING (directories never
-  *    listed) rather than row-group skipping.
-  *  - range-sharded: `repartitionByRange` + `sortWithinPartitions` on a
-  *    high-cardinality key → each file covers a tight key range, so
-  *    min/max footer stats skip whole files on key-range predicates
-  *    (the poor man's clustering index; same mechanics Z-ordering
-  *    generalizes to multiple dimensions).
-  *
-  * `maxRecordsPerFile` bounds file sizes in both layouts — hot partitions
-  * split instead of producing one giant file (small-file storms are the
-  * other failure mode; choose the bound ≈ target_file_bytes / row_width).
+  * [[writeZOrdered]] range-shards on an interleaved multi-column key, so
+  * every file covers a tight range of each column and parquet footer
+  * min/max stats skip whole files on range predicates. Its
+  * `maxRecordsPerFile` bounds file sizes — hot ranges split instead of
+  * producing one giant file (choose the bound ≈ target_file_bytes /
+  * row_width); [[compactParquet]] remedies the other failure mode,
+  * small-file storms.
   */
 object LayoutOps {
-
-  /** Hive-partitioned parquet: one directory tree level per column in
-    * `partitionCols` (order = nesting order; keep cardinality low and
-    * leading columns most-filtered).
-    */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-      maxRecordsPerFile: Long = 0L): Unit = {
-    require(partitionCols.nonEmpty, "writePartitioned: no partition columns")
-    df.write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-  }
-
-  /** Range-sharded parquet: `shards` files, each covering a contiguous
-    * `sortCol` range, rows sorted within — footer min/max then prune
-    * whole files for range predicates on `sortCol`.
-    */
-  def writeRangeSharded(df: DataFrame, path: String, sortCol: String,
-      shards: Int, maxRecordsPerFile: Long = 0L): Unit = {
-    require(shards > 0, s"writeRangeSharded: shards must be positive, got $shards")
-    df.repartitionByRange(shards, df(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
-  }
 
   /** Z-order (Morton) layout: each of `zCols` is min/max-scaled to a
     * `bitsPerDim`-bit integer, the bits are interleaved into one z-value,
@@ -56,9 +23,9 @@ object LayoutOps {
     * covers a compact HYPER-RECTANGLE of the key space and parquet
     * footer min/max stats prune files for range predicates on ANY of the
     * z columns, not just a single sort key (the multi-dimensional
-    * generalization of [[writeRangeSharded]]; same mechanics Delta/
-    * Iceberg OPTIMIZE ZORDER uses). The locality guarantee is what makes
-    * multi-tenant scans cheap at 100 TB: a reader filtering on the
+    * generalization of range sharding on one column; same mechanics
+    * Delta/Iceberg OPTIMIZE ZORDER uses). The locality guarantee is
+    * what makes multi-tenant scans cheap at 100 TB: a reader filtering on the
     * SECOND dimension of a range-sharded layout scans everything, while
     * z-order bounds every file's span in every indexed dimension.
     *
@@ -72,7 +39,7 @@ object LayoutOps {
   def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
       shards: Int, bitsPerDim: Int = 16, maxRecordsPerFile: Long = 0L): Unit = {
     require(zCols.size >= 2,
-      s"writeZOrdered: need >= 2 z columns (got $zCols) — use writeRangeSharded for one")
+      s"writeZOrdered: need >= 2 z columns (got $zCols) — range-shard on one column instead")
     require(bitsPerDim >= 1 && bitsPerDim * zCols.size <= 62,
       s"writeZOrdered: bitsPerDim=$bitsPerDim x ${zCols.size} dims must fit a long")
     require(shards > 0, s"writeZOrdered: shards must be positive, got $shards")
@@ -264,9 +231,9 @@ object LayoutOps {
     *
     * With `sortCol` the rewrite is `repartitionByRange` +
     * `sortWithinPartitions`, so compaction PRESERVES (or installs) the
-    * range-sharded prunability [[writeRangeSharded]] documents — each
-    * output file covers a tight disjoint key range. Without it the
-    * rewrite is an even round-robin repartition (pure size goal).
+    * range-sharded prunability — each output file covers a tight
+    * disjoint key range, so footer min/max stats skip whole files.
+    * Without it the rewrite is an even round-robin repartition (pure size goal).
     *
     * Returns (input file count, output partition count).
     */

@@ -573,18 +573,17 @@ object SimilarityOps {
     * corpus inside every call; building the index once and serving via
     * [[ivfTopKPqIndexed]] amortizes that corpus-linear pass across every
     * query batch, exactly as [[DedupOps.DedupRefIndex]] does for the
-    * dedup serve. Persist with [[ModelIO.savePqIndex]]; grow between
-    * epochs with [[appendToPqIndex]].
+    * dedup serve.
     */
   final case class PqIndex(encoded: DataFrame,
       centroids: Seq[(Int, Array[Double])], codebooks: PqCodebooks,
       dims: Int, m: Int)
 
   /** Train (or accept) the models and encode the corpus once.
-    * `materialized = true` pins the encoded table (use before
-    * [[ModelIO.savePqIndex]] or a multi-batch serve loop so the encode
-    * lineage prices once). Serving [[ivfTopKPqIndexed]] against the
-    * result is result-identical to [[ivfTopKPq]] with the same models
+    * `materialized = true` pins the encoded table (use before a
+    * multi-batch serve loop so the encode lineage prices once). Serving
+    * [[ivfTopKPqIndexed]] against the result is result-identical to
+    * [[ivfTopKPq]] with the same models
     * (spec-pinned): encoding is a deterministic per-row map, so WHEN it
     * runs cannot change any score.
     */
@@ -616,41 +615,22 @@ object SimilarityOps {
         col("vec_id"), typedLit(Seq.empty[Byte]).as("codes"))
     else encodePqCorpus(corpus, cents, cbs)
 
-  /** EPOCH APPEND for the PQ index: encode the new vectors under the
-    * index's FROZEN models and union them in — batch-sized work, and
-    * exactly `buildPqIndex(A ∪ B, centroids = Some(...), codebooks =
-    * Some(...))` because encoding is per-row under fixed models
-    * (spec-pinned). The models deliberately do NOT retrain: stored
-    * codes are only comparable under the codebooks that produced them —
-    * retraining is a rebuild, not an append (same contract as FAISS's
-    * add-after-train).
-    */
-  def appendToPqIndex(index: PqIndex, newVecs: DataFrame,
-      materialized: Boolean = false): PqIndex = {
-    val enc = index.encoded.unionByName(
-      encodedOrEmpty(newVecs, index.centroids, index.codebooks))
-    index.copy(encoded =
-      if (materialized) Caching.materialize(enc) else enc)
-  }
-
-  /** [[ivfTopKPq]] served from a prebuilt (typically loaded)
-    * [[PqIndex]] — the per-batch serve call of the encode-once
-    * lifecycle. `corpus` supplies the fp32 vectors for the exact
-    * re-rank of the ADC shortlist (the classic IVF-PQ split: codes in
-    * memory, full vectors fetched by id — the shortlist is k·rerank
-    * per query, so the fetch is a broadcast join into the vector
-    * table, never a scan) and MUST be the table the index encoded.
-    * A persisted, appended, multi-session index makes generation skew
-    * the realistic operator error, so it fails LOUDLY (the
-    * loadPqIndex/loadRefIndex contract): a shortlisted vec_id absent
-    * from `corpus` raises at CALL time naming the miss count and a
-    * sample id, instead of silently dropping from the re-rank. The
-    * check compares two materialized BOUNDED frames (the shortlist and
-    * its corpus fetch, ≤ k·rerank·queries rows each — the probe and the
-    * fetch join run exactly once), so this serve entry point is EAGER;
-    * the fetch itself stays an inner broadcast-shortlist join (an
-    * outer-join guard cannot broadcast the preserved small side and
-    * would flip the build onto the corpus at scale).
+  /** [[ivfTopKPq]] served from a prebuilt [[PqIndex]] — the per-batch
+    * serve call of the encode-once lifecycle. `corpus` supplies the
+    * fp32 vectors for the exact re-rank of the ADC shortlist (the
+    * classic IVF-PQ split: codes in memory, full vectors fetched by id —
+    * the shortlist is k·rerank per query, so the fetch is a broadcast
+    * join into the vector table, never a scan) and MUST be the table the
+    * index encoded. An index built once and served many times makes
+    * generation skew the realistic operator error, so it fails LOUDLY: a
+    * shortlisted vec_id absent from `corpus` raises at CALL time naming
+    * the miss count and a sample id, instead of silently dropping from
+    * the re-rank. The check compares two materialized BOUNDED frames (the
+    * shortlist and its corpus fetch, ≤ k·rerank·queries rows each — the
+    * probe and the fetch join run exactly once), so this serve entry
+    * point is EAGER; the fetch itself stays an inner broadcast-shortlist
+    * join (an outer-join guard cannot broadcast the preserved small side
+    * and would flip the build onto the corpus at scale).
     */
   def ivfTopKPqIndexed(queries: DataFrame, index: PqIndex,
       corpus: DataFrame, k: Int, nprobe: Int = 2,

@@ -26,9 +26,6 @@ object TextOps {
     */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Distinct token set (dedup/jaccard building block). */
-  def tokenSet(text: Column): Column = array_distinct(tokens(text))
-
   /** Word n-grams (space-joined) WITH multiplicity — repetition signals
     * need duplicates kept. Docs shorter than n yield empty. Native
     * [[graft.functions.WordNgrams]] expression (one straightline eval per

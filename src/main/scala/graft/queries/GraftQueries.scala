@@ -1437,8 +1437,7 @@ object GraftQueries {
     * trained-once/serve-many split the IVF/PQ/BPE artifacts use. The
     * index artifacts are PRICED at build ([[DedupOps.priceRefIndex]])
     * so each serve's expansion switch reads the stored class max
-    * instead of re-aggregating corpus reps per batch — the same
-    * constant a ModelIO-loaded index carries. */
+    * instead of re-aggregating corpus reps per batch. */
   private val lexAppendIndexCache = new RunArtifactCache[DedupOps.DedupRefIndex]
 
   private def lexAppendedIndexFor(s: SparkSession, dir: String): DedupOps.DedupRefIndex =
@@ -1450,7 +1449,7 @@ object GraftQueries {
         ref.filter(col("doc_id") % 2 =!= 0))
       // Price maxClass AFTER the checkpoint: the resident index serves
       // many batches, and the priced constant keeps each serve's
-      // expansion switch batch-sized (the ModelIO-load parity).
+      // expansion switch batch-sized.
       DedupOps.priceRefIndex(idx.copy(
         reps = idx.reps.localCheckpoint(true),
         members = idx.members.localCheckpoint(true)))
@@ -2809,9 +2808,9 @@ object GraftQueries {
   /** ONE trained IVF quantizer per (session, input dir) at the registered
     * parameters (nlist=8, 5 Lloyd passes, 25% hash-sample) — the
     * train-once/serve-many production model the ops already expose via
-    * their `centroids` parameter and ModelIO persistence: the four ANN
-    * rows (ivf / ivf_q8 / ivf_pq / recall_ann) serve from the same fit
-    * instead of each re-running an identical deterministic k-means.
+    * their `centroids` parameter: the four ANN rows (ivf / ivf_q8 /
+    * ivf_pq / recall_ann) serve from the same fit instead of each
+    * re-running an identical deterministic k-means.
     * Determinism (spec-asserted) makes the shared fit bit-identical to
     * per-query fits, so every consumer's value-exact result — the four
     * dump-and-replay ANN rows and the recall row — is unchanged. Same
@@ -2840,11 +2839,10 @@ object GraftQueries {
     * (list_id, vec_id, codes) table of [[SimilarityOps.buildPqIndex]]
     * at the registered parameters, shared by sim_topk_ivfpq and
     * sim_recall_ann's ivf_pq path: encode-once/serve-many within a run,
-    * the same lifecycle the public PqIndex artifact persists across
-    * sessions via ModelIO. Checkpointed at build so both consumers are
-    * block reads; encoding is a deterministic per-row map under the
-    * shared models, so serves are result-identical to inline encoding
-    * (spec-pinned by PqIndexSpec). */
+    * the lifecycle of the public PqIndex artifact. Checkpointed at
+    * build so both consumers are block reads; encoding is a
+    * deterministic per-row map under the shared models, so serves are
+    * result-identical to inline encoding (spec-pinned by PqIndexSpec). */
   private val pqEncodedCache = new RunArtifactCache[DataFrame]
 
   private def registeredPqIndex(s: SparkSession, dir: String)

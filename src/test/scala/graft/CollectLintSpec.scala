@@ -28,6 +28,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     its compiled code); an artifact added to one session would then be
   *     visible to all of them. `addArtifact(s)` calls and `ADD JAR`/
   *     `FILE`/`ARCHIVE` in SQL strings are both refused.
+  *  5. Every top-level object or class in `graft.ops` is named by some
+  *     other main or perfbench source, so a module that only its own
+  *     specs reach cannot come back unreviewed.
   *
   * Matching is done on comment-stripped source so scaladoc may discuss
   * `collect()` freely; string literals in main source don't mention these
@@ -70,17 +73,6 @@ class CollectLintSpec extends AnyFunSuite {
     "graft/ops/ClassifierOps.scala" -> 1, // trainPerceptron: the
                                      // (numBuckets+1)-row per-step
                                      // gradient — the model fit
-    "graft/ops/ModelIO.scala" -> 7,  // the four model LOADERS (each
-                                     // reads a config-sized persisted
-                                     // model table, never data) + the
-                                     // ref-index meta: saveRefIndex's
-                                     // 1-row max-class aggregate over
-                                     // the written reps table and
-                                     // loadRefIndex's 1-row meta read
-                                     // + loadPqIndex's 1-row meta read
-    "graft/ops/CurationPipeline.scala" -> 1, // Run.load: the stage-count-
-                                     // sized meta table (stage_idx →
-                                     // name rows), never a stage frame
     "graft/tools/ScaleProbe.scala" -> 2) // longScalar (the sizing probe's
                                      // 1-row pair-budget aggregate) and
                                      // checkTemperature's group-
@@ -110,12 +102,15 @@ class CollectLintSpec extends AnyFunSuite {
       case _ => scala.util.matching.Regex.quoteReplacement(m.matched)
     })
 
-  private def mainSources(keepStrings: Boolean = false): Seq[(String, String)] = {
-    val files = Files.walk(mainRoot).iterator().asScala
+  private def mainSources(keepStrings: Boolean = false): Seq[(String, String)] =
+    sourcesUnder(mainRoot, keepStrings)
+
+  private def sourcesUnder(root: Path, keepStrings: Boolean): Seq[(String, String)] = {
+    val files = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-    assert(files.nonEmpty, s"no sources under $mainRoot — lint running from wrong cwd?")
+    assert(files.nonEmpty, s"no sources under $root — lint running from wrong cwd?")
     files.map { p: Path =>
-      (mainRoot.relativize(p).toString,
+      (root.relativize(p).toString,
         stripComments(new String(Files.readAllBytes(p), "UTF-8"), keepStrings))
     }
   }
@@ -159,5 +154,22 @@ class CollectLintSpec extends AnyFunSuite {
     assert(apiSites.isEmpty && sqlSites.isEmpty,
       s"session artifacts added in ${apiSites ++ sqlSites} — graft sessions run with " +
         "artifact isolation off (Sessions.configs), so an artifact would reach every session")
+  }
+
+  test("every graft.ops module has a caller outside its own file") {
+    val topLevel =
+      """(?m)^(?:(?:final|sealed|abstract|case|private(?:\[\w+\])?)\s+)*(?:object|class)\s+(\w+)""".r
+    val sources = mainSources().map { case (rel, src) => s"main/$rel" -> src } ++
+      sourcesUnder(Paths.get("perfbench/src"), keepStrings = false)
+        .map { case (rel, src) => s"perfbench/$rel" -> src }
+    val uncalled = for {
+      (rel, src) <- sources if rel.startsWith("main/graft/ops/")
+      name <- topLevel.findAllMatchIn(src).map(_.group(1)).toSeq.distinct
+      named = s"\\b$name\\b".r
+      if !sources.exists { case (other, o) => other != rel && named.findFirstIn(o).isDefined }
+    } yield s"$name ($rel)"
+    assert(uncalled.isEmpty,
+      s"graft.ops modules no other main or perfbench source names: $uncalled — " +
+        "delete them, or give them a caller (a registered query or a tool)")
   }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.PropCheck
 import org.scalacheck.{Gen, Prop}
@@ -37,27 +37,6 @@ class NativeKernelPropertySpec extends AnyFunSuite {
           ts.map(_.getBytes("UTF-8")).toArray, k, w).toSeq
         got == want
     })
-  }
-
-  test("sorted_intersect_count == set intersection for arbitrary sorted arrays") {
-    val longs = Gen.listOf(Gen.choose(-50L, 50L)).map(_.distinct.sorted)
-    check(Prop.forAll(longs, longs) { (a: List[Long], b: List[Long]) =>
-      val e = SortedIntersectCount(
-        Literal(new GenericArrayData(a.toArray), ArrayType(LongType)),
-        Literal(new GenericArrayData(b.toArray), ArrayType(LongType)))
-      e.eval(null) == a.toSet.intersect(b.toSet).size
-    })
-  }
-
-  test("sorted_intersect_count skips null elements instead of reading them as 0") {
-    // ArrayData.getLong on a null slot yields 0 — unchecked, a null would
-    // count as a phantom match against a genuine hash value of 0.
-    def arr(xs: Any*) = Literal.create(
-      new GenericArrayData(xs.toArray), ArrayType(LongType, containsNull = true))
-    assert(SortedIntersectCount(arr(null), arr(0L)).eval(null) == 0)
-    assert(SortedIntersectCount(arr(null, 0L), arr(0L)).eval(null) == 1)
-    assert(SortedIntersectCount(arr(null), arr(null)).eval(null) == 0)
-    assert(SortedIntersectCount(arr(null, 1L, 2L), arr(null, 2L)).eval(null) == 1)
   }
 
   test("int8_cosine == reference double-arithmetic cosine for arbitrary byte vectors") {

@@ -1,7 +1,7 @@
 package graft.mq
 
 import graft.SparkSuite
-import graft.ops.{ModelIO, SimilarityOps}
+import graft.ops.SimilarityOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.Trigger
 /** STREAMING ANN SERVE (SURVEY §8 round 15): the similarity-search
   * sibling of the streaming incremental-dedup loop — an MQ stream of
   * query vectors is served top-k against a static corpus through a
-  * TRAINED-ONCE coarse quantizer loaded from [[ModelIO]] persistence,
-  * the train-once/serve-many production shape the batch ANN rows
+  * TRAINED-ONCE coarse quantizer (or a PQ index built once), the
+  * train-once/serve-many production shape the batch ANN rows
   * (sim_topk_ivf & co.) already use session-side. Per-query top-k is
   * independent of how admission control slices the query stream, so
   * the union of per-trigger results must equal the one-shot batch call
@@ -35,7 +35,7 @@ class GraftMqAnnServeSpec extends SparkSuite {
     df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
       r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine"))).toSet
 
-  test("MQ query-vector stream served from a loaded IVF model ≡ the one-shot batch call") {
+  test("MQ query-vector stream served from a trained-once IVF model ≡ the one-shot batch call") {
     val src = "ann-serve"
     InMemoryMqBroker.drop(src)
     val state = InMemoryMqBroker.getOrCreate(src, 1)
@@ -47,15 +47,12 @@ class GraftMqAnnServeSpec extends SparkSuite {
     import spark.implicits._
     val corpus = corpusVecs.toDF("vec_id", "cv")
 
-    // Train ONCE, persist, serve from the LOADED model — the artifact
-    // lifecycle a fleet of serving executors runs (the model is
-    // centroid-sized, so loading it per consumer is free; the corpus
-    // frame itself never re-shuffles per trigger).
-    val modelPath = tmp("ann-serve-model")
-    ModelIO.saveIvfCentroids(spark, modelPath,
-      SimilarityOps.trainIvfCentroids(corpus, nlist = 4, trainIters = 5,
-        trainFraction = 1.0))
-    val loaded = ModelIO.loadIvfCentroids(spark, modelPath)
+    // Train ONCE, serve every trigger from the same model — the
+    // artifact lifecycle a fleet of serving executors runs (the model is
+    // centroid-sized; the corpus frame itself never re-shuffles per
+    // trigger).
+    val model = SimilarityOps.trainIvfCentroids(corpus, nlist = 4,
+      trainIters = 5, trainFraction = 1.0)
 
     val got = scala.collection.mutable.Set.empty[(Long, Int, Long, Double)]
     val gotQ8 = scala.collection.mutable.Set.empty[(Long, Int, Long, Double)]
@@ -73,12 +70,12 @@ class GraftMqAnnServeSpec extends SparkSuite {
         got.synchronized {
           got ++= rows(SimilarityOps.ivfTopK(queries, corpus, k = 3,
             nlist = 4, nprobe = 2, excludeSelf = false,
-            centroids = Some(loaded)))
+            centroids = Some(model)))
         }
         gotQ8.synchronized {
           gotQ8 ++= rows(SimilarityOps.ivfTopKQ8(queries, corpus, k = 3,
             nlist = 4, nprobe = 2, excludeSelf = false,
-            centroids = Some(loaded)))
+            centroids = Some(model)))
         }
         nBatches.incrementAndGet(); ()
       }
@@ -90,11 +87,11 @@ class GraftMqAnnServeSpec extends SparkSuite {
       s"admission control should split into >= 3 micro-batches, got ${nBatches.get}")
     val allQ = queryVecs.toDF("query_id", "qv")
     val oneShot = rows(SimilarityOps.ivfTopK(allQ, corpus, k = 3,
-      nlist = 4, nprobe = 2, excludeSelf = false, centroids = Some(loaded)))
+      nlist = 4, nprobe = 2, excludeSelf = false, centroids = Some(model)))
     assert(got.toSet == oneShot,
       s"streamed IVF serve ${got.toSet} != one-shot $oneShot")
     val oneShotQ8 = rows(SimilarityOps.ivfTopKQ8(allQ, corpus, k = 3,
-      nlist = 4, nprobe = 2, excludeSelf = false, centroids = Some(loaded)))
+      nlist = 4, nprobe = 2, excludeSelf = false, centroids = Some(model)))
     assert(gotQ8.toSet == oneShotQ8,
       s"streamed int8 IVF serve ${gotQ8.toSet} != one-shot $oneShotQ8")
     // Every query produced a full top-3: the serve actually answered.
@@ -102,7 +99,7 @@ class GraftMqAnnServeSpec extends SparkSuite {
       queryVecs.map(_._1).toSet)
   }
 
-  test("MQ stream served from a persisted PqIndex ≡ the one-shot indexed call") {
+  test("MQ stream served from a built PqIndex ≡ the one-shot indexed call") {
     val src = "ann-serve-pq"
     InMemoryMqBroker.drop(src)
     val state = InMemoryMqBroker.getOrCreate(src, 1)
@@ -114,14 +111,12 @@ class GraftMqAnnServeSpec extends SparkSuite {
     import spark.implicits._
     val corpus = corpusVecs.toDF("vec_id", "cv")
 
-    // The FULL encode-once lifecycle: build (train + encode), persist,
-    // load in the serving role, serve every micro-batch from the stored
-    // codes — the corpus-linear encode never runs inside a trigger.
-    val idxPath = tmp("ann-serve-pq-index")
-    ModelIO.savePqIndex(idxPath, SimilarityOps.buildPqIndex(corpus,
-      dims = 8, nlist = 4, m = 4, ksub = 8, trainIters = 5,
-      trainFraction = 1.0, materialized = true))
-    val index = ModelIO.loadPqIndex(spark, idxPath)
+    // The encode-once lifecycle: build (train + encode) once, serve
+    // every micro-batch from the stored codes — the corpus-linear
+    // encode never runs inside a trigger.
+    val index = SimilarityOps.buildPqIndex(corpus, dims = 8, nlist = 4,
+      m = 4, ksub = 8, trainIters = 5, trainFraction = 1.0,
+      materialized = true)
 
     val got = scala.collection.mutable.Set.empty[(Long, Int, Long, Double)]
     val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)

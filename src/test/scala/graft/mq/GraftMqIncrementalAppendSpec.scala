@@ -237,7 +237,7 @@ class GraftMqIncrementalAppendSpec extends SparkSuite {
 
   test("restart: stream checkpoint + persisted index resume the loop exactly") {
     // The full DRIVER-RESTART story: the loop's durable state is the
-    // stream checkpoint (committed offsets) plus the ModelIO-persisted
+    // stream checkpoint (committed offsets) plus the parquet-persisted
     // index, written as a NEW GENERATION directory per trigger — never
     // overwriting the generation the merge lineage still reads, the
     // same no-overwrite-input discipline object stores want. A restart
@@ -256,8 +256,7 @@ class GraftMqIncrementalAppendSpec extends SparkSuite {
     import spark.implicits._
     val ref = Seq(200L -> tB).toDF("doc_id", "text")
     val idxRoot = tmp("restart-idx")
-    graft.ops.ModelIO.saveRefIndex(s"$idxRoot/gen0",
-      DedupOps.buildJaccardRefIndex(ref))
+    RefIndexFiles.save(s"$idxRoot/gen0", DedupOps.buildJaccardRefIndex(ref))
     val gen = new java.util.concurrent.atomic.AtomicInteger(0)
     val ckpt = tmp("restart-ckpt")
     val got = scala.collection.mutable.Set.empty[(Long, Long, Double)]
@@ -276,8 +275,7 @@ class GraftMqIncrementalAppendSpec extends SparkSuite {
           val docs = batch.select(
             split(col("payload"), ":", 2).getItem(0).cast("long").as("doc_id"),
             split(col("payload"), ":", 2).getItem(1).as("text"))
-          val index = graft.ops.ModelIO.loadRefIndex(spark,
-            s"$idxRoot/gen${gen.get}")
+          val index = RefIndexFiles.load(spark, s"$idxRoot/gen${gen.get}")
           val pairs = DedupOps.jaccardPairsAgainstIndex(docs, index,
               threshold = 0.5)
             .collect().map(r => (r.getAs[Long]("new_id"),
@@ -285,7 +283,7 @@ class GraftMqIncrementalAppendSpec extends SparkSuite {
           got.synchronized { got ++= pairs; () }
           val killed = pairs.map(_._1).toSet
           val keep = docs.filter(!col("doc_id").isin(killed.toSeq: _*))
-          graft.ops.ModelIO.saveRefIndex(s"$idxRoot/gen${gen.get + 1}",
+          RefIndexFiles.save(s"$idxRoot/gen${gen.get + 1}",
             DedupOps.appendToRefIndex(index, keep, materialized = true))
           gen.incrementAndGet()
           batchDocs.synchronized {
@@ -325,7 +323,7 @@ class GraftMqIncrementalAppendSpec extends SparkSuite {
     assert(got.toSet == replayPairs,
       s"restarted fold ${got.toSet} != one-shot replay $replayPairs")
     // And the final persisted generation IS build(ref ∪ survivors).
-    val finalIdx = graft.ops.ModelIO.loadRefIndex(spark, s"$idxRoot/gen${gen.get}")
+    val finalIdx = RefIndexFiles.load(spark, s"$idxRoot/gen${gen.get}")
     val allDocs = Seq(0 -> tA, 1 -> tC, 2 -> tA2, 3 -> tB2, 4 -> tC, 5 -> tE)
     val rebuilt = DedupOps.buildJaccardRefIndex(
       ref.unionByName(allDocs.collect {

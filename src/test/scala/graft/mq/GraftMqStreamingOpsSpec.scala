@@ -346,11 +346,11 @@ class GraftMqStreamingOpsSpec extends SparkSuite {
 
   test("streaming DSIR scoring: persisted model weighs micro-batches identically to the batch run") {
     // The serve half of the DSIR train-once contract over the streaming
-    // surface: the bucket model trains ONCE on the static corpus, rides
-    // ModelIO to disk, and every MQ micro-batch of arriving documents is
-    // weighed by the LOADED model via foreachBatch. Scoring is per-doc
-    // state-free under a fixed model, so micro-batch unions must EQUAL
-    // the whole-batch run.
+    // surface: the bucket model trains ONCE on the static corpus, is
+    // written to parquet, and every MQ micro-batch of arriving documents
+    // is weighed by the read-back model via foreachBatch. Scoring is
+    // per-doc state-free under a fixed model, so micro-batch unions must
+    // EQUAL the whole-batch run.
     val src = "dsir-serve-src"
     InMemoryMqBroker.drop(src)
     val state = InMemoryMqBroker.getOrCreate(src, 1)
@@ -359,8 +359,8 @@ class GraftMqStreamingOpsSpec extends SparkSuite {
     val model0 = graft.ops.CurationOps.trainDsirModel(docs,
       docs.filter(col("lang") === "en"), buckets = 32)
     val modelPath = tmp("dsir-serve-model") + "/m"
-    graft.ops.ModelIO.saveDsirModel(modelPath, model0)
-    val model = graft.ops.ModelIO.loadDsirModel(spark, modelPath)
+    model0.write.parquet(modelPath)
+    val model = spark.read.parquet(modelPath)
     val rows = docs.filter(col("doc_id") < 12)
       .select(col("doc_id"), col("text")).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
@@ -398,9 +398,9 @@ class GraftMqStreamingOpsSpec extends SparkSuite {
 
   test("streaming incremental dedup serves from a persisted reference index") {
     // The serve half of the DedupRefIndex contract over the streaming
-    // surface: the accumulated corpus's shingle index builds ONCE, rides
-    // ModelIO to disk, and every MQ micro-batch of arriving documents
-    // pairs against the LOADED index via jaccardPairsAgainstIndex.
+    // surface: the accumulated corpus's shingle index builds ONCE, is
+    // written to parquet, and every MQ micro-batch of arriving documents
+    // pairs against the read-back index via jaccardPairsAgainstIndex.
     // Verdicts are per-doc state-free under a fixed index (default
     // maxShingleDf — no cross-batch df coupling), so micro-batch unions
     // must EQUAL the whole-batch run.
@@ -411,9 +411,9 @@ class GraftMqStreamingOpsSpec extends SparkSuite {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val isRef = col("doc_id") % 2 === 0
     val idxPath = tmp("jidx-serve") + "/idx"
-    graft.ops.ModelIO.saveRefIndex(idxPath,
+    RefIndexFiles.save(idxPath,
       graft.ops.DedupOps.buildJaccardRefIndex(docs.filter(isRef)))
-    val index = graft.ops.ModelIO.loadRefIndex(spark, idxPath)
+    val index = RefIndexFiles.load(spark, idxPath)
     val batchDocs = docs.filter(!isRef).filter(col("doc_id") < 40)
       .select("doc_id", "text")
     batchDocs.orderBy("doc_id").collect().zipWithIndex.foreach { case (r, i) =>

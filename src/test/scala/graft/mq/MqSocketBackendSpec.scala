@@ -316,32 +316,56 @@ class MqSocketBackendSpec extends SparkSuite {
     } finally proxy.close()
   }
 
-  test("a rogue client's oversized length is refused typed — no garbage-length allocation") {
+  /** Sends `frame` as a rogue client would and asserts the server's
+    * answer: exactly one generic-error response whose message contains
+    * `expect`, then EOF — the typed goodbye of a killed session. The
+    * server must then still serve healthy clients.
+    */
+  private def assertRogueRefused(topic: String, expect: String)(
+      frame: java.io.DataOutputStream => Unit): Unit = {
     import java.io.{DataInputStream, DataOutputStream}
     import java.net.Socket
-    val topic = "sock-rogue"
     fill(topic, 1, 1)
     val Array(h, p) = server.address.split(":", 2)
     val s = new Socket(h, p.toInt)
     try {
       val out = new DataOutputStream(s.getOutputStream)
       val in = new DataInputStream(s.getInputStream)
+      frame(out)
+      out.flush()
+      assert(in.readByte() == MqSocketBroker.Magic)
+      assert(in.readByte() == 2, "expected the generic-error status")
+      val msg = in.readUTF()
+      assert(msg.contains(expect), msg)
+      assert(in.read() == -1, "server must close the desynced connection")
+    } finally s.close()
+    import spark.implicits._
+    assert(reader(topic).load().select($"value".cast("string")).as[String]
+      .collect().toSet == Set("m0"))
+  }
+
+  test("a rogue client's oversized length is refused typed — no garbage-length allocation") {
+    val topic = "sock-rogue"
+    assertRogueRefused(topic, "exceeds cap") { out =>
       // APPEND with a ~1.9 GB key length: the server must kill the
       // session with a typed protocol error, not attempt the allocation.
       out.writeByte(MqSocketBroker.Magic.toInt)
       out.writeByte(7); out.writeUTF(topic); out.writeInt(0)
       out.writeInt(Int.MaxValue - 100)
-      out.flush()
-      assert(in.readByte() == MqSocketBroker.Magic)
-      assert(in.readByte() == 2, "expected the generic-error status")
-      val msg = in.readUTF()
-      assert(msg.contains("exceeds cap"), msg)
-      assert(in.read() == -1, "server must close the desynced connection")
-    } finally s.close()
-    // The server survives the rogue: healthy clients still work.
-    import spark.implicits._
-    assert(reader(topic).load().select($"value".cast("string")).as[String]
-      .collect().toSet == Set("m0"))
+    }
+  }
+
+  test("an unknown op closes the session typed — its payload is never read as a frame") {
+    val topic = "sock-rogue-op"
+    assertRogueRefused(topic, "unknown op 104") { out =>
+      // Op 104 whose payload happens to look like an ENDS frame: answering
+      // the error and reading on would serve that payload as a second
+      // request.
+      out.writeByte(MqSocketBroker.Magic.toInt)
+      out.writeByte(104); out.writeUTF(topic)
+      out.writeByte(MqSocketBroker.Magic.toInt)
+      out.writeByte(4); out.writeUTF(topic)
+    }
   }
 
   test("an oversized count in a response is refused typed on the client") {

@@ -4,21 +4,16 @@ import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Pins the epoch-append lifecycle of [[DedupOps.DedupRefIndex]]
   * (SURVEY §8 round 14): `appendToRefIndex(build(A), B)` must be
   * result-identical to `build(A ∪ B)` on BOTH axes — including
   * overlapping-fingerprint classes, where a hand-union of the tables
-  * would corrupt rep counts — and appending onto a LOADED index must
+  * would corrupt rep counts — and appending onto a PRICED index must
   * keep the stored class-size max exact, so the serve path's member
   * expansion can never be silently skipped by stale metadata (the
   * round-13 ADVICE defect).
   */
 class DedupRefIndexAppendSpec extends SparkSuite {
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).resolve("model").toString
 
   private def docsDf(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
@@ -103,38 +98,27 @@ class DedupRefIndexAppendSpec extends SparkSuite {
       viaAppend.map(_(1)).contains(10L) && viaAppend.map(_(1)).contains(12L))
   }
 
-  test("append onto a LOADED index keeps the stored class max exact (stale-meta defect)") {
-    // Build on singletons only: the saved meta records max_class = 1.
+  test("append onto a priced index keeps the stored class max exact (stale-meta defect)") {
+    // Build on singletons only: the priced index records maxClass = 1.
     val a = docsDf(10L -> tA, 11L -> tB)
-    val p = tmpDir("refidx-append")
-    ModelIO.saveRefIndex(p, DedupOps.buildJaccardRefIndex(a, materialized = true))
-    val loaded = ModelIO.loadRefIndex(spark, p)
-    assert(loaded.maxClass.contains(1L))
+    val priced = DedupOps.priceRefIndex(DedupOps.buildJaccardRefIndex(a))
+    assert(priced.maxClass.contains(1L))
     // The append grows class tA to size 2. A stale max of 1 would make
     // the serve path skip member expansion and drop the pair against the
     // non-canonical member — the exact silent-skew the ADVICE named.
-    val appended = DedupOps.appendToRefIndex(loaded, docsDf(20L -> tA))
+    val appended = DedupOps.appendToRefIndex(priced, docsDf(20L -> tA))
     assert(appended.maxClass.contains(2L),
       s"appended maxClass ${appended.maxClass} is stale")
     val served = pairRows(DedupOps.jaccardPairsAgainstIndex(
       docsDf(100L -> tD), appended, threshold = 0.5))
     assert(served.map(_(1)) == Set(10L, 20L),
       s"served $served must include the appended non-canonical member 20")
-    // And the appended index round-trips: the save re-prices meta from
-    // the written reps, the loaded serve is identical.
-    val p2 = tmpDir("refidx-append-rt")
-    ModelIO.saveRefIndex(p2, DedupOps.appendToRefIndex(loaded,
-      docsDf(20L -> tA), materialized = true))
-    val reloaded = ModelIO.loadRefIndex(spark, p2)
-    assert(reloaded.maxClass.contains(2L) && reloaded.shingleN.contains(3))
-    assert(pairRows(DedupOps.jaccardPairsAgainstIndex(
-      docsDf(100L -> tD), reloaded, threshold = 0.5)) == served)
   }
 
   test("priceRefIndex bakes the exact class max into an in-session index") {
-    // The resident-index lifecycle (unsaved, serves many batches):
-    // pricing must record the same constant ModelIO's save/load round
-    // trip would, and a priced serve must equal the lazy serve.
+    // The resident-index lifecycle (serves many batches): pricing must
+    // record the exact class max, and a priced serve must equal the
+    // lazy serve.
     val idx = DedupOps.appendToRefIndex(
       DedupOps.buildJaccardRefIndex(docsDf(10L -> tA, 11L -> tB, 12L -> tA)),
       docsDf(5L -> tA, 20L -> tC))
@@ -157,8 +141,7 @@ class DedupRefIndexAppendSpec extends SparkSuite {
     // postings = Σ set sizes over reps: one entry per distinct shingle
     // SET. The append adds tC (new class) and more tA members (existing
     // class — contributes nothing); the maintained constant must equal
-    // the from-scratch price of the merged index AND the save/load
-    // round-trip's meta.
+    // the from-scratch price of the merged index.
     val base = DedupOps.priceRefIndex(
       DedupOps.buildJaccardRefIndex(docsDf(10L -> tA, 11L -> tB)))
     assert(base.postings.exists(_ > 0L))
@@ -168,11 +151,6 @@ class DedupRefIndexAppendSpec extends SparkSuite {
       docsDf(10L -> tA, 11L -> tB, 20L -> tA, 21L -> tC)))
     assert(appended.postings == rebuilt.postings,
       s"maintained ${appended.postings} != rebuilt ${rebuilt.postings}")
-    val p = tmpDir("refidx-postings-rt")
-    ModelIO.saveRefIndex(p, DedupOps.appendToRefIndex(base,
-      docsDf(20L -> tA, 21L -> tC), materialized = true))
-    assert(ModelIO.loadRefIndex(spark, p).postings == rebuilt.postings,
-      "save/load meta postings diverges from the maintained constant")
     // The semantic axis stays unpriced on postings (None end to end).
     assert(DedupOps.priceRefIndex(DedupOps.buildEmbeddingRefIndex(
       embDf(1L -> Seq(1.0f, 0.0f), 2L -> Seq(0.0f, 1.0f)))).postings.isEmpty)

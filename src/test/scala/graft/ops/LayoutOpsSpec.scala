@@ -7,26 +7,6 @@ import java.nio.file.Files
 
 class LayoutOpsSpec extends SparkSuite {
 
-  test("writePartitioned: hive layout, partition pruning on read-back, file-size bound") {
-    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    val out = Files.createTempDirectory("layout-part").toString
-    LayoutOps.writePartitioned(docs, out, Seq("lang"), maxRecordsPerFile = 50L)
-
-    val langDirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("lang=")).sorted
-    assert(langDirs.nonEmpty, "expected lang=<value> directories")
-
-    val back = spark.read.parquet(out).filter(col("lang") === "en")
-    val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan)
-    assert(back.count() == docs.filter(col("lang") === "en").count())
-    // maxRecordsPerFile: no parquet file exceeds the bound
-    val counts = spark.read.parquet(out)
-      .select(input_file_name().as("f")).groupBy("f").count()
-      .agg(max("count")).head.getLong(0)
-    assert(counts <= 50L, s"file exceeded maxRecordsPerFile: $counts rows")
-  }
-
   test("writeZOrdered: every file spans a compact rectangle in BOTH dims; lossless") {
     import spark.implicits._
     // Uniform 64x64 grid (4096 rows) — the shape where z-order's locality
@@ -248,27 +228,6 @@ class LayoutOpsSpec extends SparkSuite {
     val again = LayoutOps.readShardManifest(spark, path, "n_tok", "doc_id")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(again == manifest)
-  }
-
-  test("writeRangeSharded: files cover disjoint sorted ranges; row values survive") {
-    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-      .select("doc_id", "text")
-    val out = Files.createTempDirectory("layout-range").toString
-    LayoutOps.writeRangeSharded(docs, out, "doc_id", shards = 4)
-
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count())
-    // Each file's [min,max] doc_id range must not overlap any other file's
-    // — that disjointness is exactly what lets footer stats prune files.
-    val ranges = back.groupBy(input_file_name().as("f"))
-      .agg(min("doc_id").as("lo"), max("doc_id").as("hi"))
-      .orderBy("lo")
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(ranges.length >= 2, s"expected multiple shards, got ${ranges.length}")
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 < lo2, s"overlap: $hi1 >= $lo2")
-      case _ =>
-    }
   }
 
   test("compactParquet: fewer files, lossless, range-prunable under sortCol") {

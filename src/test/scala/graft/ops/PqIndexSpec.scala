@@ -7,13 +7,11 @@ import org.apache.spark.sql.functions._
 /** The IVF-PQ index lifecycle (SURVEY §8 round 15): encode-once /
   * serve-many. [[SimilarityOps.ivfTopKPq]] re-encodes the corpus inside
   * every call; [[SimilarityOps.buildPqIndex]] pays that corpus-linear
-  * pass once, [[SimilarityOps.ivfTopKPqIndexed]] serves every
-  * subsequent query batch from the stored codes, [[ModelIO.savePqIndex]]
-  * persists the artifact across sessions, and
-  * [[SimilarityOps.appendToPqIndex]] grows it between epochs under
-  * FROZEN models. Every serve below must be result-IDENTICAL to the
-  * inline-encode call: encoding is a deterministic per-row map under
-  * fixed models, so when it runs cannot change any score.
+  * pass once, and [[SimilarityOps.ivfTopKPqIndexed]] serves every
+  * subsequent query batch from the stored codes. Every serve below must
+  * be result-IDENTICAL to the inline-encode call: encoding is a
+  * deterministic per-row map under fixed models, so when it runs cannot
+  * change any score.
   */
 class PqIndexSpec extends SparkSuite {
 
@@ -45,10 +43,6 @@ class PqIndexSpec extends SparkSuite {
     df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
       r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine"))).toSet
 
-  private def encRows(df: DataFrame): Set[(Int, Long, Seq[Byte])] =
-    df.collect().map(r => (r.getAs[Int]("list_id"), r.getAs[Long]("vec_id"),
-      r.getAs[Seq[Byte]]("codes"))).toSet
-
   test("serve from a built index ≡ the inline-encode call") {
     val c = corpus
     val (cents, cbs) = models(c)
@@ -62,37 +56,6 @@ class PqIndexSpec extends SparkSuite {
       k = 3, nprobe = 2, excludeSelf = false, rerank = 4))
     assert(served == direct, s"indexed serve $served != direct $direct")
     assert(direct.nonEmpty)
-  }
-
-  test("ModelIO round-trip serves identically; a torn save fails loudly") {
-    val c = corpus
-    val (cents, cbs) = models(c)
-    val idx = SimilarityOps.buildPqIndex(c, dims = dims, nlist = 4,
-      m = m, ksub = ksub, centroids = Some(cents), codebooks = Some(cbs),
-      materialized = true)
-    val path = tmp("pq-index")
-    ModelIO.savePqIndex(path, idx)
-    val loaded = ModelIO.loadPqIndex(spark, path)
-    assert(loaded.dims == dims && loaded.m == m)
-    assert(loaded.centroids.map { case (i, a) => (i, a.toSeq) } ==
-      idx.centroids.map { case (i, a) => (i, a.toSeq) })
-    assert(loaded.codebooks.map { case (s, ws) =>
-        (s, ws.map { case (j, arr) => (j, arr.toSeq) })
-      } == idx.codebooks.map { case (s, ws) =>
-        (s, ws.map { case (j, arr) => (j, arr.toSeq) })
-      })
-    assert(encRows(loaded.encoded) == encRows(idx.encoded))
-    val direct = rows(SimilarityOps.ivfTopKPqIndexed(queries, idx, c,
-      k = 3, nprobe = 2, excludeSelf = false))
-    val served = rows(SimilarityOps.ivfTopKPqIndexed(queries, loaded, c,
-      k = 3, nprobe = 2, excludeSelf = false))
-    assert(served == direct)
-    // Torn save: the meta commit marker is missing → load fails loudly
-    // instead of serving a half-written index.
-    val fsPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(fsPath, true)
-    intercept[Exception] { ModelIO.loadPqIndex(spark, path) }
   }
 
   test("an index built on an empty corpus serves the standard empty result") {
@@ -133,25 +96,5 @@ class PqIndexSpec extends SparkSuite {
       excludeSelf = false, rerank = 4,
       centroids = Some(cents), codebooks = Some(cbs)))
     assert(served == direct)
-  }
-
-  test("append(build(A), B) ≡ build(A ∪ B) under the frozen models") {
-    val c = corpus
-    val (cents, cbs) = models(c)
-    val evens = c.filter(col("vec_id") % 2 === 0)
-    val odds = c.filter(col("vec_id") % 2 =!= 0)
-    val appended = SimilarityOps.appendToPqIndex(
-      SimilarityOps.buildPqIndex(evens, dims = dims, nlist = 4, m = m,
-        ksub = ksub, centroids = Some(cents), codebooks = Some(cbs)),
-      odds, materialized = true)
-    val full = SimilarityOps.buildPqIndex(c, dims = dims, nlist = 4,
-      m = m, ksub = ksub, centroids = Some(cents), codebooks = Some(cbs))
-    assert(encRows(appended.encoded) == encRows(full.encoded),
-      "appended encoding differs from the one-shot encode")
-    val served = rows(SimilarityOps.ivfTopKPqIndexed(queries, appended, c,
-      k = 3, nprobe = 2, excludeSelf = false))
-    val oneShot = rows(SimilarityOps.ivfTopKPqIndexed(queries, full, c,
-      k = 3, nprobe = 2, excludeSelf = false))
-    assert(served == oneShot)
   }
 }
