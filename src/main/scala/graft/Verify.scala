@@ -25,6 +25,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // Names the query on stderr before it runs, so Spark's WARN lines
+      // (e.g. "Broadcasting large task binary") can be tied to a query.
+      System.err.println(s"[verify] $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       // NonFatal only: an OOM/LinkageError leaves the SparkContext

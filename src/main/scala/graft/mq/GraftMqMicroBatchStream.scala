@@ -229,11 +229,6 @@ object GraftMqPlanner {
   }
 }
 
-/** Batch (non-streaming) read over a snapshot of the topic — the `toBatch`
-  * parity Kafka has (/root/reference/README.md:268-278). Snapshot end is
-  * captured at Batch construction; generated backend reads one synthetic
-  * batch of rowsPerBatch per partition.
-  */
 /** First-start offset resolution shared by the streaming source (no
   * checkpoint yet) and the batch scan (README.md:372-397 modes):
   * earliest, latest, Kafka-style per-partition specific offsets
@@ -305,6 +300,11 @@ object GraftMqStart {
     } else MqBackends.session(opts).offsetForTimestamp(p, ts)
 }
 
+/** Batch (non-streaming) read over a snapshot of the topic — the `toBatch`
+  * parity Kafka has (reference README.md:268-278). Snapshot end is
+  * captured at Batch construction; generated backend reads one synthetic
+  * batch of rowsPerBatch per partition.
+  */
 class GraftMqBatch(opts: GraftMqOptions,
     readSchema: org.apache.spark.sql.types.StructType,
     bounds: GraftMqScanBounds = GraftMqScanBounds(),

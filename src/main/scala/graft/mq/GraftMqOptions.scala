@@ -64,11 +64,11 @@ import java.util.Locale
   *                           a contended broker fails the task loudly
   *                           instead of hanging the trigger loop
   *
-  * Read-path choices are not options; each is made from what the code can
-  * observe: a transport backend (`supportsPrefetch`) prefetches one chunk
-  * ahead, every schema without `headers` is read columnar, and batch
+  * There is one read path and no option chooses between paths: every scan
+  * reads rows through [[GraftMqPartitionReader]], each buffer refill is
+  * one live fetch under `pollTimeoutMs`, and only the batch
   * `count(*)`/`min/max(offset)` shapes that [[GraftMqScanBuilder]] can
-  * translate are answered from offset ranges.
+  * translate are answered from offset ranges instead.
   *
   * Malformed values fail at parse time with an IllegalArgumentException
   * that names the option.

@@ -20,44 +20,20 @@ case class GraftMqInputPartition(
     until: Long,
     opts: GraftMqOptions) extends InputPartition
 
-/** Reader factory for both execution shapes. Row readers are always
-  * available; COLUMNAR reads (`SupportsColumnarReads` via
-  * `supportColumnarReads`) are offered for the flat Kafka-grade columns —
-  * key/value/topic/partition/offset/timestamp/timestampType. A schema
-  * carrying the nested `headers` column takes the row path: header reads
-  * are metadata-rare, and a hand-rolled array<struct> vector writer is
-  * complexity the flat hot path (payload analytics) doesn't need. The
-  * answer must be byte-identical either way — spec-asserted
-  * (GraftMqColumnarSpec drives both readers over the same partition).
-  *
-  * The choice is per-SCAN, not per-partition (Spark requires every
-  * partition of a scan to agree), and the columnar batch feeds the exact
-  * same engine surface as any vectorized file source: a ColumnarToRow (or
-  * whole-stage-codegen'd scan) boundary above the scan exec.
+/** Reader factory: every scan reads rows through
+  * [[GraftMqPartitionReader]] (Spark's defaults decline columnar reads).
   */
 case class GraftMqPartitionReaderFactory(readSchema: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftMqPartitionReader(partition.asInstanceOf[GraftMqInputPartition], readSchema)
-
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    !readSchema.fieldNames.contains("headers")
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    require(supportColumnarReads(partition),
-      "graft-mq: columnar read requested for an unsupported schema")
-    new GraftMqColumnarPartitionReader(
-      partition.asInstanceOf[GraftMqInputPartition], readSchema)
-  }
 }
 
-/** Shared bounded cursor over one partition's `[from, until)` range: the
-  * chunked broker fetch, `failOnDataLoss` semantics (abort vs
-  * skip-to-earliest-retained) and generated-backend synthesis live HERE,
-  * once — the row and columnar readers are thin shells over it, so the
-  * two paths cannot drift on the semantics that matter (data loss,
-  * range exactness).
+/** Bounded cursor over one partition's `[from, until)` range — the
+  * reader's fetch side: the chunked broker fetch through a pooled
+  * consumer, `failOnDataLoss` semantics (abort vs skip-to-earliest-
+  * retained), generated-backend synthesis and range exactness.
+  * [[GraftMqPartitionReader]] only turns its messages into rows.
   */
 private[mq] final class MqMessageCursor(p: GraftMqInputPartition) extends Logging {
   private var offset = p.from
@@ -218,79 +194,6 @@ class GraftMqPartitionReader(p: GraftMqInputPartition, readSchema: StructType)
   }
 
   override def close(): Unit = cursor.close()
-}
-
-/** Vectorized reader: fills on-heap column vectors in `BatchSize`-row
-  * slabs — the batch shape every downstream vectorized consumer (and
-  * ColumnarToRow's codegen'd drain loop) expects, replacing per-row
-  * `GenericInternalRow` allocation with columnar appends. Row/columnar
-  * equivalence is guaranteed by construction (the [[MqMessageCursor]] is
-  * the single source of iteration semantics) and asserted by spec.
-  */
-class GraftMqColumnarPartitionReader(p: GraftMqInputPartition, readSchema: StructType)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  private val BatchSize = 4096
-
-  private val fieldCodes: Array[Int] = readSchema.fieldNames.map {
-    case "key" => 0
-    case "value" => 1
-    case "topic" => 2
-    case "partition" => 3
-    case "offset" => 4
-    case "timestamp" => 5
-    case "timestampType" => 6
-    case other => throw new IllegalArgumentException(
-      s"graft-mq: column '$other' not supported by the columnar reader")
-  }
-  private val topicBytes = p.topic.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  private val cursor = new MqMessageCursor(p)
-  private val vectors =
-    org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-      .allocateColumns(BatchSize, readSchema)
-  private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
-    vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
-  private var exhausted = false
-
-  override def next(): Boolean = {
-    if (exhausted) return false
-    var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
-    var n = 0
-    var msg: MqMessage = null
-    while (n < BatchSize && { msg = cursor.advance(); msg != null }) {
-      var c = 0
-      while (c < fieldCodes.length) {
-        val v = vectors(c)
-        fieldCodes(c) match {
-          case 0 =>
-            if (msg.key == null) v.putNull(n)
-            else v.putByteArray(n, msg.key, 0, msg.key.length)
-          case 1 =>
-            if (msg.value == null) v.putNull(n)
-            else v.putByteArray(n, msg.value, 0, msg.value.length)
-          case 2 => v.putByteArray(n, topicBytes, 0, topicBytes.length)
-          case 3 => v.putInt(n, p.partition)
-          case 4 => v.putLong(n, cursor.lastOffset)
-          case 5 => v.putLong(n, msg.timestamp) // TimestampType = epoch micros
-          case 6 => v.putInt(n, 0)
-        }
-        c += 1
-      }
-      n += 1
-    }
-    if (msg == null) exhausted = true
-    batch.setNumRows(n)
-    n > 0
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-
-  override def close(): Unit = {
-    cursor.close()
-    batch.close()
-  }
 }
 
 /** Pure-function payload generator: message at (seed, partition, offset) is

@@ -101,14 +101,17 @@ class GraftMqDataWriter(opts: GraftMqOptions, schema: StructType, partitionId: I
   require(keyIdx < 0 || keyIsString || schema(keyIdx).dataType == BinaryType,
     s"graft-mq sink: 'key' must be string or binary, got ${schema(keyIdx).dataType}")
 
+  // String columns go out as their raw bytes, as Kafka's sink writes
+  // them: a decode/encode round trip through java.lang.String would turn
+  // bytes that are not valid UTF-8 into U+FFFD.
   override def write(row: InternalRow): Unit = {
     val value =
       if (row.isNullAt(valueIdx)) null
-      else if (valueIsString) row.getUTF8String(valueIdx).toString.getBytes("UTF-8")
+      else if (valueIsString) row.getUTF8String(valueIdx).getBytes
       else row.getBinary(valueIdx)
     val key =
       if (keyIdx < 0 || row.isNullAt(keyIdx)) null
-      else if (keyIsString) row.getUTF8String(keyIdx).toString.getBytes("UTF-8")
+      else if (keyIsString) row.getUTF8String(keyIdx).getBytes
       else row.getBinary(keyIdx)
     val ts = if (tsIdx >= 0 && !row.isNullAt(tsIdx)) row.getLong(tsIdx)
              else opts.defaultTimestampMicros

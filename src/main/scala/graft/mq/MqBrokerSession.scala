@@ -65,14 +65,6 @@ trait MqBrokerSession {
     * against the live topic lookup).
     */
   def transportAlive: Boolean = true
-
-  /** Whether the pooled consumer should issue a one-chunk-ahead
-    * prefetch mid-buffer (r20 — VERDICT r19 #4): worth it exactly when
-    * [[read]] pays a network round trip that can overlap with compute.
-    * The in-process log reads in microseconds — a prefetch there only
-    * burns a fetch-pool slot.
-    */
-  def supportsPrefetch: Boolean = false
 }
 
 /** Backend resolution: options → the session the planner/writer share.

@@ -48,88 +48,27 @@ final class MqConsumer private[mq] (
   private var chunk: IndexedSeq[MqMessage] = IndexedSeq.empty
   private var chunkStart: Long = 0L
 
-  // Chunk-ahead prefetch (r20 — VERDICT r19 #4): on a transport backend
-  // each synchronous refill pays a full RPC latency stall (the measured
-  // 10-30% socket tax); issuing the NEXT chunk's fetch when the cursor
-  // crosses mid-buffer overlaps network and compute. A prefetch is just
-  // an early refill — the retained-buffer contract and the pollTimeoutMs
-  // bound are unchanged (the bound applies at harvest, with the fetch
-  // already in flight). One slot: at most one chunk is armed, starting
-  // where the buffer ends.
-  private var prefetchFrom: Long = 0L
-  private var prefetched: java.util.concurrent.Future[IndexedSeq[MqMessage]] = null
-  private var lastChunkSize: Int = 0
-
-  /** The buffered message at `o`, or null if `o` is outside the cache.
-    * Crossing the buffer midpoint on a prefetch-worthy backend arms the
-    * next chunk's fetch (only after a FULL chunk — a partial chunk means
-    * the fetch reached the log end, so the next range is speculative).
-    * A saturated fetch pool declines the prefetch; the synchronous
-    * refill still works.
-    */
+  /** The buffered message at `o`, or null if `o` is outside the cache. */
   def cached(o: Long): MqMessage =
-    if (o >= chunkStart && o < chunkStart + chunk.size) {
-      if (prefetched == null && state.supportsPrefetch &&
-          chunk.size == lastChunkSize && o - chunkStart >= (chunk.size >> 1)) {
-        val (from, size) = (chunkStart + chunk.size, lastChunkSize)
-        prefetched = MqConsumerPool.tryPrefetchSubmit(
-          () => state.read(partition, from, from + size))
-        if (prefetched != null) {
-          prefetchFrom = from
-          stats.prefetches.incrementAndGet()
-        }
-      }
-      chunk((o - chunkStart).toInt)
-    } else null
-
-  /** Drop the armed prefetch, interrupting its thread (the session close
-    * that accompanies invalidation/eviction is what actually unblocks an
-    * interrupt-deaf transport read).
-    */
-  private[mq] def cancelPrefetch(): Unit =
-    if (prefetched != null) { prefetched.cancel(true); prefetched = null }
+    if (o >= chunkStart && o < chunkStart + chunk.size) chunk((o - chunkStart).toInt)
+    else null
 
   /** Earliest retained offset — the `failOnDataLoss=false` resume point. */
   def earliestOffset: Long = state.earliestOffsets(partition)
 
-  /** Refill the cache with `[from, from + chunkSize)` under the
-    * `pollTimeoutMs` bound — served by an armed prefetch when one covers
-    * `from`, else a live [[MqConsumerPool.timedRead]]. Deliberately NOT
-    * clamped to the task's `until`: the surplus past the range bound is
-    * this pool's payoff — it serves the next micro-batch's first fetch
-    * (the broker clamps at its own log end, so nothing is fabricated).
-    * Returns the number of messages now buffered from `from`.
+  /** Refill the cache with `[from, from + chunkSize)` — one live
+    * [[MqConsumerPool.timedRead]] under the `pollTimeoutMs` bound.
+    * Deliberately NOT clamped to the task's `until`: the surplus past the
+    * range bound is this pool's payoff — it serves the next micro-batch's
+    * first fetch (the broker clamps at its own log end, so nothing is
+    * fabricated). Returns the number of messages now buffered from `from`.
     */
   def refill(from: Long, chunkSize: Int, pollTimeoutMs: Long): Int = {
-    lastChunkSize = chunkSize
-    val pre = harvestPrefetch(from, pollTimeoutMs)
-    val fetched =
-      if (pre != null) pre
-      else MqConsumerPool.timedRead(this, from, from + chunkSize, pollTimeoutMs)
+    val fetched = MqConsumerPool.timedRead(this, from, from + chunkSize, pollTimeoutMs)
     chunkStart = from
     chunk = fetched
     stats.brokerFetches.incrementAndGet()
     fetched.size
-  }
-
-  /** The armed prefetch's result if it covers `from` and is NON-EMPTY;
-    * null → do a live read. An empty prefetch is discarded: it may have
-    * raced a producer (fetched before rows the planner has since
-    * admitted existed), and a range's TERMINATION decision must only
-    * ever come from a live fetch. Exceptions (timeout at the bound,
-    * out-of-range, stale generation) propagate exactly like a live
-    * read's — the cursor invalidates this consumer either way.
-    */
-  private def harvestPrefetch(from: Long,
-      pollTimeoutMs: Long): IndexedSeq[MqMessage] = {
-    val fut = prefetched
-    prefetched = null
-    if (fut == null) return null
-    if (prefetchFrom != from) { fut.cancel(true); return null }
-    val res = MqConsumerPool.await(fut, pollTimeoutMs,
-      s"prefetched fetch on $topic-$partition from $from")
-    if (res.isEmpty) null
-    else { stats.prefetchHits.incrementAndGet(); res }
   }
 }
 
@@ -145,6 +84,11 @@ final class MqPoolStats {
   val invalidated = new AtomicLong
   val evicted = new AtomicLong
   val staleDiscards = new AtomicLong
+  /** Always 0: the consumer no longer prefetches. Kept only because the
+    * frozen perfbench `Probe` still reads them (as `mq.prefetches` and
+    * `mq.prefetch_hit_ratio`); they go when ROADMAP direction 2
+    * replaces `Probe`.
+    */
   val prefetches = new AtomicLong
   val prefetchHits = new AtomicLong
 }
@@ -256,14 +200,6 @@ object MqConsumerPool extends Logging {
 
   /** Return a healthy consumer (buffer retained) to the idle set. */
   def release(c: MqConsumer): Unit = synchronized {
-    // Cancel any armed prefetch at release (ADVICE r20 #3): the buffer
-    // is already materialized and the prefetch only benefits the NEXT
-    // borrow (which re-arms on its first mid-buffer crossing), but a
-    // broker that hangs after the fetch was issued would otherwise pin
-    // a capped fetch-pool thread for as long as the consumer sits idle
-    // — pollTimeoutMs only applies at harvest, which an idle consumer
-    // never reaches.
-    c.cancelPrefetch()
     val key = Key(c.topic, c.partition)
     val q = idle.getOrElseUpdate(key, mutable.ArrayDeque.empty)
     q.append(c)
@@ -281,7 +217,6 @@ object MqConsumerPool extends Logging {
   private def evict(key: Key, q: mutable.ArrayDeque[MqConsumer]): Unit = {
     val dropped = q.removeHead() // oldest buffer goes first
     dropped.stats.evicted.incrementAndGet()
-    dropped.cancelPrefetch()
     dropped.state.close() // transport sessions die with their consumer
   }
 
@@ -294,7 +229,6 @@ object MqConsumerPool extends Logging {
     */
   def invalidate(c: MqConsumer): Unit = {
     c.stats.invalidated.incrementAndGet()
-    c.cancelPrefetch()
     c.state.close()
   }
 
@@ -347,57 +281,13 @@ object MqConsumerPool extends Logging {
       s"fetch on ${c.topic}-${c.partition} [$from, $until) under pollTimeoutMs=$pollTimeoutMs")
   }
 
-  /** Submit to the capped fetch pool, null when saturated — the
-    * best-effort path (consumer prefetch) skips rather than queues.
-    */
-  private[mq] def trySubmit[A](body: () => A): java.util.concurrent.Future[A] =
-    try fetchPool.submit(new java.util.concurrent.Callable[A] {
-      override def call(): A = body()
-    })
-    catch { case _: java.util.concurrent.RejectedExecutionException => null }
-
-  /** [[trySubmit]] with the prefetch starvation guard (r22 — VERDICT r21
-    * #5): speculative prefetches may only occupy the LOWER half of the
-    * fetch-thread cap, so live fetches (timedRead/bounded, which FAIL
-    * loudly at the cap) always have at least [[FetchPoolMaxThreads]]/2
-    * threads they never compete with prefetches for (one armed prefetch
-    * per consumer, but consumers are unbounded).
-    *
-    * The budget is a RESERVATION on [[prefetchesInFlight]], not a read of
-    * `getActiveCount`: a read-then-submit lets concurrent submitters all
-    * pass the check and overshoot together. A slot is held from the
-    * reservation until the body's thread leaves `run` (a prefetch
-    * cancelled before it starts still passes through `run`, so no slot
-    * leaks), i.e. for exactly as long as it can occupy a fetch thread.
-    * The occupancy check stays in front: prefetches also stand aside
-    * while live fetches already fill half the pool.
-    */
-  private[mq] def tryPrefetchSubmit[A](body: () => A): java.util.concurrent.Future[A] =
-    if (fetchPool.getActiveCount >= FetchPoolMaxThreads / 2) null
-    else if (prefetchesInFlight.incrementAndGet() > FetchPoolMaxThreads / 2) {
-      prefetchesInFlight.decrementAndGet(); null
-    } else {
-      val task = new java.util.concurrent.FutureTask[A](() => body()) {
-        override def run(): Unit =
-          try super.run() finally prefetchesInFlight.decrementAndGet()
-      }
-      try { fetchPool.execute(task); task }
-      catch {
-        case _: java.util.concurrent.RejectedExecutionException =>
-          prefetchesInFlight.decrementAndGet(); null
-      }
-    }
-
-  /** Prefetch bodies holding a fetch-pool slot (see [[tryPrefetchSubmit]]). */
-  private val prefetchesInFlight = new java.util.concurrent.atomic.AtomicInteger
-
   /** Await a fetch-pool future under a hard bound: timeout cancels the
     * body (interrupting its thread — a transport read that ignores the
     * interrupt is freed by the session close that follows invalidation)
     * and throws [[MqPollTimeoutException]]; body exceptions (e.g.
     * offset-out-of-range) unwrap verbatim.
     */
-  private[mq] def await[A](fut: java.util.concurrent.Future[A], timeoutMs: Long,
+  private def await[A](fut: java.util.concurrent.Future[A], timeoutMs: Long,
       what: String): A =
     try fut.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
     catch {

@@ -355,11 +355,6 @@ object MqSocketBroker {
 
     override def numPartitions: Int = np
 
-    /** Socket sessions overlap network and compute via the pooled
-      * consumer's one-chunk-ahead prefetch ([[MqConsumer]]).
-      */
-    override def supportsPrefetch: Boolean = true
-
     private[MqSocketBroker] def transportAliveBasic: Boolean =
       !broken && !socket.isClosed
 

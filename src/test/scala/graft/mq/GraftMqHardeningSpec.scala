@@ -45,6 +45,23 @@ class GraftMqHardeningSpec extends SparkSuite {
     assert(back == Set(("k1", "v1"), ("k2", "v2")))
   }
 
+  test("sink writes string key and value bytes exactly, invalid UTF-8 included") {
+    val topic = "hard-raw-bytes"
+    InMemoryMqBroker.drop(topic)
+    InMemoryMqBroker.getOrCreate(topic, 1)
+    spark.sql("SELECT cast(X'FE62' AS string) AS key, cast(X'FF61' AS string) AS value")
+      .write.format("graft-mq").mode("append")
+      .option("topic", topic).option("numPartitions", "1").save()
+    val back = spark.read.format("graft-mq")
+      .option("topic", topic).option("numPartitions", "1")
+      .option("includeMetadata", "true").load()
+      .select("key", "value").collect()
+    assert(back.length == 1)
+    // A decode/encode round trip would give EF BF BD (U+FFFD) for 0xFF.
+    assert(back(0).getAs[Array[Byte]]("value").toSeq == Seq(0xFF.toByte, 0x61.toByte))
+    assert(back(0).getAs[Array[Byte]]("key").toSeq == Seq(0xFE.toByte, 0x62.toByte))
+  }
+
   test("broker rejects a mismatched partition count instead of corrupting the topic") {
     InMemoryMqBroker.drop("hard-mismatch")
     InMemoryMqBroker.getOrCreate("hard-mismatch", 2)

@@ -518,145 +518,19 @@ class MqSocketBackendSpec extends SparkSuite {
       .as[String].collect().length == 80)
   }
 
-  test("the socket consumer prefetches one chunk ahead; results stay value-exact") {
+  test("the socket consumer refills with one live fetch per chunk; results stay value-exact") {
     import spark.implicits._
-    val topic = "sock-prefetch"
+    val topic = "sock-chunks"
     fill(topic, 1, 10000) // chunk size 4096 → three refills
     val key = s"${server.address}/$topic"
     val st = MqConsumerPool.stats(key, 0)
-    val (p0, h0, f0) = (st.prefetches.get, st.prefetchHits.get, st.brokerFetches.get)
+    val f0 = st.brokerFetches.get
     val got = reader(topic).load()
       .select($"value".cast("string")).as[String].collect()
     assert(got.length == 10000)
     assert(got.toSet == (0 until 10000).map(i => s"m$i").toSet)
-    // Chunk 1 is a live fetch; crossing its midpoint arms chunk 2's
-    // prefetch, whose harvest arms chunk 3's — two prefetched refills.
     assert(st.brokerFetches.get - f0 == 3, s"fetches=${st.brokerFetches.get - f0}")
-    assert(st.prefetches.get - p0 == 2, s"prefetches=${st.prefetches.get - p0}")
-    assert(st.prefetchHits.get - h0 == 2, s"hits=${st.prefetchHits.get - h0}")
     assert(MqConsumerPool.idleCount(key, 0) == 1)
-  }
-
-  test("prefetch submits are refused once they would claim the live-fetch thread reserve") {
-    // Fill the LOWER half of the fetch-thread cap with parked bodies (the
-    // budget prefetches may occupy), then assert tryPrefetchSubmit
-    // declines while plain trySubmit (the live path) still runs.
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val half = MqConsumerPool.FetchPoolMaxThreads / 2
-    val parked = (0 until half).map { _ =>
-      MqConsumerPool.trySubmit { () => gate.await(); 0 }
-    }
-    try {
-      assert(parked.forall(_ != null), "live submits below the cap must succeed")
-      val deadline = System.nanoTime() + 5000000000L
-      while (MqConsumerPool.activeFetchThreads < half && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(MqConsumerPool.activeFetchThreads >= half)
-      assert(MqConsumerPool.tryPrefetchSubmit(() => 0) == null,
-        "prefetch submit must be refused at half-cap occupancy")
-      val live = MqConsumerPool.trySubmit(() => 42)
-      assert(live != null && live.get() == 42,
-        "live fetches must still find a thread above the prefetch budget")
-    } finally {
-      gate.countDown()
-      parked.filter(_ != null).foreach(_.get())
-    }
-  }
-
-  test("racing prefetch submitters never hold more than half the fetch-thread cap") {
-    // Released together, every submitter can pass the occupancy check
-    // before any body has started; only the reservation bounds them.
-    val half = MqConsumerPool.FetchPoolMaxThreads / 2
-    val submitters = 4 * half
-    val start = new java.util.concurrent.CountDownLatch(1)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val running = new java.util.concurrent.atomic.AtomicInteger
-    val peak = new java.util.concurrent.atomic.AtomicInteger
-    val body = () => {
-      peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
-      try gate.await(30, java.util.concurrent.TimeUnit.SECONDS)
-      finally running.decrementAndGet()
-    }
-    val futs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.concurrent.Future[Boolean]]
-    val threads = (0 until submitters).map { _ =>
-      val t = new Thread(() => {
-        start.await()
-        val f = MqConsumerPool.tryPrefetchSubmit(body)
-        if (f != null) futs.add(f)
-      })
-      t.start(); t
-    }
-    try {
-      start.countDown()
-      threads.foreach(_.join(10000))
-      assert(futs.size >= 1 && futs.size <= half,
-        s"${futs.size} prefetches admitted against a budget of $half")
-      val deadline = System.nanoTime() + 5000000000L
-      while (running.get < futs.size && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(peak.get <= half, s"${peak.get} prefetch bodies ran at once (budget $half)")
-    } finally {
-      gate.countDown()
-      futs.forEach(f => f.get())
-    }
-    // Every slot is handed back once the bodies' threads leave them.
-    val deadline = System.nanoTime() + 5000000000L
-    var after = MqConsumerPool.tryPrefetchSubmit(() => 7)
-    while (after == null && System.nanoTime() < deadline) {
-      Thread.sleep(10); after = MqConsumerPool.tryPrefetchSubmit(() => 7)
-    }
-    assert(after != null && after.get() == 7)
-  }
-
-  private def socketOpts(topic: String, pollTimeoutMs: Long = 120000L) =
-    GraftMqOptions(topic = topic, backend = "socket", numPartitions = 1,
-      rowsPerBatch = 10L, maxRowsPerBatch = None, minPartitions = None,
-      seed = 42L, wordsPerMessage = 4, failOnDataLoss = true,
-      includeMetadata = false, startingOffsets = "earliest",
-      pollTimeoutMs = pollTimeoutMs, brokerSocket = Some(server.address))
-
-  test("a hung prefetch times out at the harvest bound; invalidate frees its thread") {
-    val topic = "sock-prefhang"
-    val state = fill(topic, 1, 10000)
-    val c = MqConsumerPool.borrow(socketOpts(topic, pollTimeoutMs = 800), 0)
-    try {
-      assert(c.refill(0, 4096, 2000) == 4096)
-      // The delay lands BEFORE the midpoint crossing arms the prefetch,
-      // so the PREFETCHED fetch itself is the hung one — deterministic.
-      state.injectFetchDelay(0, 60000)
-      assert(c.cached(2048) != null) // arms the prefetch of [4096, 8192)
-      val key = s"${server.address}/$topic"
-      val st = MqConsumerPool.stats(key, 0)
-      assert(st.prefetches.get >= 1)
-      // Harvest: the in-flight fetch cannot complete inside the bound —
-      // the prefetch inherits the live read's timeout semantics exactly.
-      intercept[MqPollTimeoutException] { c.refill(4096, 4096, 800) }
-    } finally {
-      MqConsumerPool.invalidate(c) // closes the socket → frees the reader
-      state.injectFetchDelay(0, 0)
-    }
-    val deadline = System.nanoTime() + 10000000000L
-    while (MqConsumerPool.activeFetchThreads > 0 && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(MqConsumerPool.activeFetchThreads == 0,
-      "hung prefetch thread was not freed by invalidate's close")
-  }
-
-  test("retention overtaking a prefetched range surfaces typed at harvest") {
-    val topic = "sock-preftrunc"
-    val state = fill(topic, 1, 10000)
-    val c = MqConsumerPool.borrow(socketOpts(topic), 0)
-    try {
-      assert(c.refill(0, 4096, 2000) == 4096)
-      // Truncate past the NEXT chunk's start before the prefetch is
-      // armed: the prefetched read [4096, 8192) begins below retention
-      // (6000), so the broker's out-of-range crosses the wire into the
-      // in-flight future and unwraps VERBATIM at harvest — the same
-      // typed error a live read would throw, feeding the cursor's
-      // failOnDataLoss handling unchanged.
-      state.truncateTo(6000)
-      assert(c.cached(2048) != null) // arms the prefetch
-      intercept[MqOffsetOutOfRangeException] { c.refill(4096, 4096, 2000) }
-    } finally MqConsumerPool.invalidate(c)
   }
 
   test("appendAll above the wire batch cap splits transparently and lands exactly once") {
