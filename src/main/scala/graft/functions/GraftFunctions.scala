@@ -108,20 +108,6 @@ object GraftFunctions {
   def approx_top_k(c: Column, k: Int, capacity: Int): Column =
     col(ApproxTopK(expr(c), k, capacity).toAggregateExpression())
 
-  /** Bloom-filter aggregate over long keys (binary result; fixed
-    * numBits/8-byte state, map-side OR-merge) — the batch side of the
-    * broadcast Bloom join gate.
-    */
-  def bloom_agg(c: Column, numBits: Int, numHashes: Int = 5): Column =
-    col(BloomAgg(expr(c), numBits, numHashes).toAggregateExpression())
-
-  /** Membership probe against a [[bloom_agg]] filter — false means
-    * definitely absent (no false negatives), so filtering the big side
-    * of a join with it is result-identical.
-    */
-  def bloom_might_contain(bloom: Column, key: Column): Column =
-    col(BloomMightContain(expr(bloom), expr(key)))
-
   /** SQL registrations for [[graft.GraftExtensions]]. */
   val registrations: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     reg("cosine_sim", classOf[CosineSimilarity], arity = 2,

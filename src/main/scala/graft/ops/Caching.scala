@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * (per-doc signatures/shingles — see the optimizer-inlining note in
   * [[DedupOps]]): the op persists its intermediates, materializes its
   * result eagerly (`localCheckpoint` by default; a RELIABLE checkpoint
-  * when `spark.graft.checkpointDir` is set — see [[materialize]]), and
+  * when the SparkContext has a checkpoint dir — see [[materialize]]), and
   * unpersists before returning.
   *
   * Result sizes come in two classes, both bounded relative to the
@@ -27,7 +27,7 @@ import org.apache.spark.sql.DataFrame
   * checkpointed result's own blocks are released by Spark's
   * `ContextCleaner` once the returned frame becomes unreachable.
   */
-private[graft] object Caching extends org.apache.spark.internal.Logging {
+private[graft] object Caching {
 
   /** Persist `frames`, evaluate `body` eagerly (checkpoint), release —
     * including any frames a nested helper registered via
@@ -87,13 +87,12 @@ private[graft] object Caching extends org.apache.spark.internal.Logging {
     * local mode and on a healthy cluster, but NOT fault-tolerant: losing
     * an executor loses blocks whose lineage the checkpoint truncated, so
     * a long chained pipeline (pipeline_curate_v3) would fail rather than
-    * recompute. Setting `spark.graft.checkpointDir` switches every op's
-    * materialization to a RELIABLE checkpoint under that path
-    * (HDFS/object store on a real cluster) — same results, same
-    * laziness contract, executor loss survivable. The SparkContext-level
-    * checkpoint dir is set from the conf on first use and left alone
-    * afterwards (one directory per session). LIFECYCLE: Spark only
-    * deletes reliable checkpoint data when
+    * recompute. When the SparkContext has a checkpoint dir (Spark's own
+    * `spark.checkpoint.dir` or `setCheckpointDir`), every op's
+    * materialization is a RELIABLE checkpoint under it (HDFS/object
+    * store on a real cluster) — same results, same laziness contract,
+    * executor loss survivable. LIFECYCLE: Spark only deletes reliable
+    * checkpoint data when
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (a
     * context-creation-time conf, default false) — deployments running
     * this mode long-lived must either enable that cleaner or lifecycle
@@ -101,71 +100,8 @@ private[graft] object Caching extends org.apache.spark.internal.Logging {
     * as with any Spark reliable-checkpoint workload; otherwise each
     * op materialization accumulates its result files under the dir.
     */
-  private[ops] def materialize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(CheckpointDirKey).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        val sc = spark.sparkContext
-        sc.getCheckpointDir match {
-          case None =>
-            sc.setCheckpointDir(dir)
-            // Record BOTH the conf value this set came from and what
-            // Spark ACTUALLY stored (the dir comes back qualified plus a
-            // random UUID subdir), keyed by the context's applicationId —
-            // no strong SparkContext ref, so cycled sessions stay
-            // collectable. Keeping the conf value means a MID-SESSION
-            // conf change is a mismatch again (ADVICE r15): the new value
-            // is being ignored, and first-wins only silences the warning
-            // for the value that actually won.
-            sc.getCheckpointDir.foreach(actual =>
-              dirSetHere.put(sc.applicationId, dir -> actual))
-          // First-wins is the contract (one directory per session), but a
-          // dir set by OTHER code — before first use, or overriding ours
-          // afterwards — means the configured key is NOT where
-          // checkpoints land; say so ONCE per (conf value, actual dir)
-          // pair rather than leave the mismatch unobservable at runtime
-          // (or spam it per materialization). Two suppressors: the
-          // CURRENT conf value is the one our own setCheckpointDir
-          // recorded AND the current dir is what that set produced
-          // (compared actual-vs-actual, so the qualified+UUID shape
-          // cannot false-positive), or external code set the SAME
-          // configured path itself (its parent qualifies to the conf
-          // value — checkpoints land where configured, nothing to warn
-          // about).
-          case Some(existing)
-              if dirSetHere.getOrDefault(sc.applicationId, null) != (dir -> existing)
-                && !underConfigured(sc, dir, existing) =>
-            if (warnedMismatch.add(dir -> existing))
-              logWarning(s"$CheckpointDirKey=$dir ignored: SparkContext " +
-                s"checkpoint dir already set to $existing; checkpoints land there")
-          case _ => ()
-        }
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(eager = true)
-    }
-  }
-
-  /** True iff `existing` (qualified dir + UUID subdir) sits directly
-    * under the configured `dir` once qualified through the same
-    * filesystem — the external-code-set-the-same-path case. */
-  private def underConfigured(sc: org.apache.spark.SparkContext,
-      dir: String, existing: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val q = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p)
-      Option(new org.apache.hadoop.fs.Path(existing).getParent).contains(q)
-    } catch { case scala.util.control.NonFatal(_) => false }
-
-  /** applicationId → (conf value, actual checkpoint dir) from
-    * [[materialize]]'s own setCheckpointDir — one entry per context in
-    * practice. */
-  private val dirSetHere =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Mismatches already reported — the warning fires once per distinct
-    * (configured, actual) pair, not once per materialization. */
-  private val warnedMismatch =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
-
-  val CheckpointDirKey = "spark.graft.checkpointDir"
+  private[ops] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 }

@@ -15,12 +15,11 @@ import org.apache.spark.sql.functions._
   *  - per-document work (hashing, signatures) is a map-side projection;
   *  - the verify step runs only on candidate pairs, which banding keeps
   *    ~linear in the number of true near-dups;
-  *  - skew guards: the shingle-index ops cap degenerate ubiquitous
-  *    shingles (`maxShingleDf`), and the banded LSH self-joins grid-split
-  *    hot buckets ([[selfJoinWithinBuckets]]) so a popular bucket of
-  *    DISTINCT members — the case duplicate collapse cannot touch —
-  *    spreads across ~(n/splitTarget)² bounded tasks instead of
-  *    serializing one reducer.
+  *  - skew guard: the banded LSH self-joins grid-split hot buckets
+  *    ([[selfJoinWithinBuckets]]) so a popular bucket of DISTINCT
+  *    members — the case duplicate collapse cannot touch — spreads
+  *    across ~(n/splitTarget)² bounded tasks instead of serializing one
+  *    reducer.
   */
 object DedupOps {
 
@@ -497,15 +496,9 @@ object DedupOps {
   /** Exact n-gram-Jaccard pairs via a shingle inverted index: explode
     * distinct shingles, self-equi-join on the shingle, count shared
     * shingles per pair (= |intersection|), then Jaccard from the per-doc
-    * set sizes. No cross join anywhere; `maxShingleDf` drops degenerate
-    * ubiquitous shingles (stopword-run guard, counted over distinct SETS
-    * after the [[withSetCollapse]] duplicate collapse — duplication alone
-    * no longer pushes a shingle over the cap) — at this data's vocabulary
-    * no shingle comes close, so the result is still exact. With an ACTIVE
-    * cap the result is inexact by documented design, and the collapse
-    * shifts it further: within-class pairs (identical texts — true dups
-    * by definition) are always emitted, where the pre-collapse index
-    * dropped them too once every shared shingle was capped.
+    * set sizes, over the distinct SETS left by the [[withSetCollapse]]
+    * duplicate collapse. No cross join anywhere, and every shingle
+    * counts: the result is exact.
     */
   /** Partition count for a posting-list join whose OUTPUT explodes
     * quadratically per bucket, or None when the session default already
@@ -543,12 +536,10 @@ object DedupOps {
     sized.agg(coalesce(sum(col(n)), lit(0L))).head().getLong(0)
 
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.5, shingleN: Int = 3,
-      maxShingleDf: Int = Int.MaxValue,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     withSetCollapse(shingleSets(docs, shingleN, idCol, textCol), threshold) {
       (base, postings) =>
-        jaccardFromCounts(pairIntersectionCounts(base, maxShingleDf, postings),
-          threshold)
+        jaccardFromCounts(pairIntersectionCounts(base, postings), threshold)
     }
 
   /** Overlap-coefficient near-dup pairs: |∩| / min(|A|, |B|) ≥ threshold
@@ -569,11 +560,10 @@ object DedupOps {
     * construction.
     */
   def overlapPairs(docs: DataFrame, threshold: Double = 0.8, shingleN: Int = 3,
-      maxShingleDf: Int = Int.MaxValue,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     withSetCollapse(shingleSets(docs, shingleN, idCol, textCol), threshold,
         scoreCol = "overlap") { (base, postings) =>
-      pairIntersectionCounts(base, maxShingleDf, postings)
+      pairIntersectionCounts(base, postings)
         .withColumn("overlap", round(col("n_inter").cast("double") /
           least(col("n_a"), col("n_b")).cast("double"), 6))
         .filter(col("overlap") >= threshold)
@@ -584,8 +574,7 @@ object DedupOps {
     * inverted-index self-join on fnv64(shingle) → one row per
     * (doc_a < doc_b) candidate with `(n_a, n_b, n_inter)`. All the
     * measured scale shapes live HERE once — corpus-sized partitioning for
-    * the exploding self-join, the optional `maxShingleDf` skew guard, and
-    * the volume-sized pair aggregation (r18: the partial/final agg pair
+    * the exploding self-join and the volume-sized pair aggregation (r18: the partial/final agg pair
     * at AQE-chosen task counts spilled 22 GB at sf10; repartitioning the
     * incidence stream by the PAIR key at Σ df·(df−1)/2-sized parallelism
     * bounds every agg map by construction) — so every scoring tail
@@ -596,8 +585,7 @@ object DedupOps {
     *                  collapse wrapper in the same 1-row job as the
     *                  expansion switch (r21), so no sizing job runs here.
     */
-  private def pairIntersectionCounts(base: DataFrame, maxShingleDf: Int,
-      postings: Long): DataFrame = {
+  private def pairIntersectionCounts(base: DataFrame, postings: Long): DataFrame = {
     // The inverted index joins on fnv64(shingle) — an 8-byte key instead
     // of a ~20-byte string roughly halves the heaviest shuffle. Distinct
     // shingles colliding would miscount an intersection; at 64 bits the
@@ -613,26 +601,12 @@ object DedupOps {
     val inv = base.select(col("id"), size(col("sh")).as("n"),
         explode(col("sh")).as("sh_str"))
       .select(col("id"), col("n"), GraftFunctions.fnv64(col("sh_str")).as("shingle"))
-    // Skew guard via groupBy+co-partitioned join (not a window: a window
-    // would sort the whole inverted index inside each shuffle partition).
-    // Skipped when inactive — Jaccard stays exact and the index saves a
-    // pass. NOTE: with the cap active, pairs dominated by capped shingles
-    // lose intersection counts — at 100 TB that is the intended trade
-    // (ubiquitous shingles carry no near-dup signal).
-    val filtered =
-      if (maxShingleDf == Int.MaxValue) inv
-      else {
-        val dfCounts = inv.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxShingleDf)
-          .select("shingle")
-        inv.join(dfCounts, Seq("shingle"), "left_semi")
-      }
     // Corpus-sized partitioning for the exploding self-join (see
     // [[explodedJoinPartitions]]); filter/alias preserve the hash
     // partitioning, so both join sides stay co-partitioned and the join
     // itself adds no exchange.
     val sized = explodedJoinPartitions(base.sparkSession, postings)
-      .map(p => filtered.repartition(p, col("shingle"))).getOrElse(filtered)
+      .map(p => inv.repartition(p, col("shingle"))).getOrElse(inv)
     val a = sized.as("a"); val b = sized.as("b")
     val joined = a.join(b,
       col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
@@ -690,9 +664,7 @@ object DedupOps {
     * final expansion is output-sized. The asymmetric expansion needs no
     * within-clique branch — a new doc identical to a ref doc pairs
     * through the rep pair itself (equal sets → jaccard 1.0), and copies
-    * WITHIN one side never pair by contract. `maxShingleDf` counts
-    * document frequency over BOTH collapsed sides: a shingle ubiquitous
-    * in either corpus carries no near-dup signal.
+    * WITHIN one side never pair by contract.
     */
   /** @param refGateBits size (in bits) of the broadcast Bloom filter of
     *                     BATCH shingle keys that gates the REFERENCE
@@ -705,18 +677,19 @@ object DedupOps {
     *                     the asymmetry this op exists for, now enforced
     *                     map-side. The filter itself is fixed-size state
     *                     (bits/8 bytes however many shingles stream
-    *                     through) built by one batch-sized aggregate and
-    *                     broadcast as a single row; the 2²²-bit default
-    *                     (512 KiB) holds ~400k batch shingles under 1% fp.
+    *                     through) built by one batch-sized Spark
+    *                     `BloomFilterAggregate` sized for bits/10 keys
+    *                     (k = 7 hashes) and broadcast as a single row;
+    *                     the 2²²-bit default (512 KiB) holds ~400k batch
+    *                     shingles under 1% fp.
     */
   def jaccardPairsAgainstRef(newDocs: DataFrame, refDocs: DataFrame,
       threshold: Double = 0.5, shingleN: Int = 3,
-      maxShingleDf: Int = Int.MaxValue,
       idCol: String = "doc_id", textCol: String = "text",
       refGateBits: Int = 1 << 22): DataFrame =
     jaccardPairsAgainstIndex(newDocs,
       buildJaccardRefIndex(refDocs, shingleN, idCol, textCol),
-      threshold, shingleN, maxShingleDf, idCol, textCol, refGateBits)
+      threshold, shingleN, idCol, textCol, refGateBits)
 
   /** REFERENCE INDEX for incremental dedup — the accumulated corpus
     * side of [[jaccardPairsAgainstIndex]] (shingle-set representatives)
@@ -897,7 +870,6 @@ object DedupOps {
     * delegates here). */
   def jaccardPairsAgainstIndex(newDocs: DataFrame, refIndex: DedupRefIndex,
       threshold: Double = 0.5, shingleN: Int = 3,
-      maxShingleDf: Int = Int.MaxValue,
       idCol: String = "doc_id", textCol: String = "text",
       refGateBits: Int = 1 << 22): DataFrame = {
     require(threshold > 0 && threshold <= 1)
@@ -918,26 +890,13 @@ object DedupOps {
       def inv(reps: DataFrame): DataFrame =
         reps.select(col("id"), size(col("sh")).as("n"), explode(col("sh")).as("s"))
           .select(col("id"), col("n"), GraftFunctions.fnv64(col("s")).as("shingle"))
-      val nInv = inv(nReps)
-      // Bloom gate BEFORE the df count: for any shingle the batch holds,
-      // every reference row passes (no false negatives), so cross-side
-      // df — the only df that can reach a pair — is unchanged; ref-only
-      // shingles may survive the df filter they'd otherwise fail, but
-      // they match nothing in nIdx and cannot reach the output.
-      val rInv =
+      val nIdx = inv(nReps)
+      // For any shingle the batch holds, every reference row passes the
+      // gate (no false negatives); the rest match nothing in nIdx.
+      val rIdx =
         if (refGateBits <= 0) inv(rReps)
         else bloomGateAgainst(inv(rReps), col("shingle"),
-          nInv, col("shingle"), refGateBits)
-      val (nIdx, rIdx) =
-        if (maxShingleDf == Int.MaxValue) (nInv, rInv)
-        else {
-          val keep = nInv.select("shingle").unionAll(rInv.select("shingle"))
-            .groupBy("shingle").agg(count(lit(1)).as("df"))
-            .filter(col("df") <= maxShingleDf)
-            .select("shingle")
-          (nInv.join(keep, Seq("shingle"), "left_semi"),
-            rInv.join(keep, Seq("shingle"), "left_semi"))
-        }
+          nIdx, col("shingle"), refGateBits)
       // Corpus-sized partitioning for the exploding cross-side posting
       // join (see [[explodedJoinPartitions]]; sized from the cached
       // reps' shingle totals — an upper bound on the gated index).
@@ -1238,21 +1197,33 @@ object DedupOps {
       .select(col("id"), col("v"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
 
   /** Drop rows of `big` whose `bigKey` cannot appear among `small`'s
-    * `smallKey`s, via a Bloom filter of the small side
-    * ([[graft.functions.BloomAgg]]): result-identical by
-    * no-false-negatives, and the big (reference-corpus) side shrinks
-    * MAP-SIDE, before any shuffle. The filter reaches the rows as a
-    * SCALAR SUBQUERY (evaluated once, injected into a plain Filter) —
-    * a 1-row join here is constant-folded by Catalyst into a
-    * BroadcastNestedLoopJoin, which is indistinguishable in a plan audit
-    * from the pair-enumeration failure mode these ops ban outright.
+    * `smallKey`s (both BIGINT), via Spark's runtime Bloom filter of the
+    * small side (`BloomFilterAggregate` probed by
+    * `BloomFilterMightContain`, the pair behind Spark's
+    * `InjectRuntimeFilter`): result-identical by no-false-negatives,
+    * and the big (reference-corpus) side shrinks MAP-SIDE, before any
+    * shuffle. The filter is sized for `bits / 10` keys, so Spark picks
+    * k = 7 hashes: the 2²²-bit default (512 KiB) holds ~400k keys under
+    * 1% false positives. An empty small side yields a NULL filter, and
+    * the probe's NULL drops every row — exactly the empty answer. The
+    * filter reaches the rows as a SCALAR SUBQUERY (evaluated once,
+    * injected into a plain Filter) — a 1-row join here is
+    * constant-folded by Catalyst into a BroadcastNestedLoopJoin, which
+    * is indistinguishable in a plan audit from the pair-enumeration
+    * failure mode these ops ban outright.
     */
   private[graft] def bloomGateAgainst(big: DataFrame, bigKey: Column,
-      small: DataFrame, smallKey: Column, bits: Int): DataFrame =
-    big.filter(GraftFunctions.bloom_might_contain(
-      org.apache.spark.sql.graft.Bridge.scalarSubquery(
-        small.agg(GraftFunctions.bloom_agg(smallKey, bits).as("_bl"))),
-      bigKey))
+      small: DataFrame, smallKey: Column, bits: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.graft.Bridge
+    val filter = new BloomFilterAggregate(Bridge.expression(smallKey),
+      Literal(math.max(1L, bits / 10L)), Literal(bits.toLong))
+    big.filter(Bridge.column(BloomFilterMightContain(
+      Bridge.expression(Bridge.scalarSubquery(
+        small.agg(Bridge.column(filter.toAggregateExpression()).as("_bl")))),
+      Bridge.expression(bigKey))))
+  }
 
   /** md5-hex fingerprint → 60-bit long, the Bloom key every fp-keyed
     * gate shares (one definition so the key derivation cannot diverge
@@ -1362,7 +1333,10 @@ object DedupOps {
     *                     no batch row joins nothing). Matters most at
     *                     wide bucket spaces (large bitsPerBand) and
     *                     small daily batches, where most of the
-    *                     accumulated index is unmatchable.
+    *                     accumulated index is unmatchable. Same filter
+    *                     as [[jaccardPairsAgainstRef]]'s: sized for
+    *                     bits/10 keys (k = 7), so the 2²²-bit default
+    *                     (512 KiB) holds ~400k batch keys under 1% fp.
     */
   def embeddingPairsAgainstRef(newEmb: DataFrame, refEmb: DataFrame,
       threshold: Double, dims: Int,

@@ -654,7 +654,9 @@ object TextOps {
     * identical to `refFps.union(paragraphFingerprints(batch))
     * .distinct()` given already-distinct state, at batch-plus-gated
     * cost instead of a corpus-wide distinct shuffle per epoch.
-    * `bloomBits <= 0` disables the gate (full anti-join). The gated
+    * `bloomBits <= 0` disables the gate (full anti-join); the filter is
+    * sized for bloomBits/10 fingerprints (k = 7), so the 2²²-bit default
+    * (512 KiB) holds ~400k batch fingerprints under 1% fp. The gated
     * path RUNS A SPARK JOB inside this call: the batch's fingerprints
     * feed both the Bloom aggregate and the anti-join's left side, so
     * they are pinned once (batch-sized) instead of re-fingerprinting
@@ -688,7 +690,9 @@ object TextOps {
     * the reference side is gated MAP-SIDE by a Bloom filter of the
     * batch's fingerprints before it shuffles
     * ([[DedupOps.bloomGateAgainst]], result-identical by
-    * no-false-negatives), so the fp equi-join moves reference rows only
+    * no-false-negatives; `bloomBits` sizes it for bloomBits/10
+    * fingerprints at k = 7, so the 2²²-bit default holds ~400k under
+    * 1% fp), so the fp equi-join moves reference rows only
     * for fingerprints the batch might actually contain. Keep-first
     * within the batch is the same skew-safe min-aggregate as the
     * symmetric op.
@@ -703,7 +707,7 @@ object TextOps {
         .otherwise(raise_error(lit("dedupParagraphsAgainstRef: null paragraph " +
           "element — paragraph arrays must not contain nulls")).cast("string")))
     Caching.withCached(ex) {
-      // The Bloom kernel keys on BIGINT — gate on the fingerprint's
+      // The Bloom filter keys on BIGINT — gate on the fingerprint's
       // 60-bit hex prefix (injective enough for a gate; the JOIN on the
       // full fp still decides membership, so any prefix collision only
       // costs a gated-through row, never a wrong verdict).

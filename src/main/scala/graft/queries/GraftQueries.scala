@@ -1101,12 +1101,8 @@ object GraftQueries {
       .orderBy("doc_a", "doc_b"),
     Some(jaccardOracle))
 
-  // Registered with maxShingleDf at its default (inactive): the cap is a
-  // 100 TB skew guard that DROPS ubiquitous shingles, so switching it on
-  // makes intersection counts — and the oracle comparison — inexact by
-  // design. At this corpus's vocabulary no shingle approaches a skewed
-  // document frequency, so the exact and capped results coincide anyway;
-  // a production deployment would set it to ~corpus_docs/100.
+  // Exact by construction: every shingle counts toward the
+  // intersection, so the oracle comparison is value-exact.
   private val d05 = Q("dedup_jaccard_exact",
     (s, dir) => DedupOps.jaccardPairs(t(s, dir, "documents"), threshold = 0.5)
       .orderBy("doc_a", "doc_b"),
@@ -1353,18 +1349,22 @@ object GraftQueries {
     }
     def clear(): Unit = m.clear()
     private[queries] def entryCount: Int = m.size
+    RunArtifactCache.all.add(this)
+  }
+
+  /** Every [[RunArtifactCache]], registered as it is constructed — the
+    * one list [[clearRunArtifacts]] and [[runArtifactEntryCount]] walk,
+    * so a new cache cannot be left out of the clear (Capture's cold run
+    * would then serve it memoized). */
+  private object RunArtifactCache {
+    val all = new java.util.concurrent.CopyOnWriteArrayList[RunArtifactCache[_]]
   }
 
   /** Test hook: total live entries across all run-artifact caches —
     * pins the supersession eviction (a mutated dir must REPLACE its
     * generation, not add one). */
   private[graft] def runArtifactEntryCount: Int =
-    Seq(v3StageCache, ivfCentroidCache, pqCodebookCache, pqEncodedCache,
-      bpeMergeCache, perceptronCache, semdedupCentroidCache,
-      nearDupComponentsCache, embeddingPairsCache, semanticComponentsCache,
-      dupSpansCache, paraAppendFpsCache)
-      .map(_.entryCount).sum + lexAppendIndexCache.entryCount +
-      semAppendIndexCache.entryCount
+    RunArtifactCache.all.stream().mapToInt(_.entryCount).sum()
 
   private def inputSignature(s: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -1415,14 +1415,8 @@ object GraftQueries {
     * session, so a long-lived DRIVER hosting many short-lived sessions
     * should call this between sessions (entries are a handful of narrow
     * frames each; the driver contract uses one session per process). */
-  private[graft] def clearRunArtifacts(): Unit = {
-    v3StageCache.clear(); ivfCentroidCache.clear(); pqCodebookCache.clear()
-    pqEncodedCache.clear(); bpeMergeCache.clear(); perceptronCache.clear()
-    semdedupCentroidCache.clear(); nearDupComponentsCache.clear()
-    embeddingPairsCache.clear(); semanticComponentsCache.clear()
-    dupSpansCache.clear(); lexAppendIndexCache.clear()
-    semAppendIndexCache.clear(); paraAppendFpsCache.clear()
-  }
+  private[graft] def clearRunArtifacts(): Unit =
+    RunArtifactCache.all.forEach(_.clear())
 
   /** The three EPOCH-APPENDED reference states the
     * curate_incremental_append* queries serve from, memoized per
@@ -2372,8 +2366,8 @@ object GraftQueries {
     * model: a pipeline RUN materializes its stage outputs once, and the
     * funnel report reads that run's artifacts instead of re-running the
     * pipeline. The expensive stage frames are eager checkpoints
-    * ([[graft.ops.Caching]] — executor-local blocks, or reliable under
-    * `spark.graft.checkpointDir`), so a second consumer is a block read;
+    * ([[graft.ops.Caching]] — executor-local blocks, or reliable when
+    * the SparkContext has a checkpoint dir), so a second consumer is a block read;
     * every stage is deterministic, so either build order is
     * value-identical and the driver's oracle comparison is unaffected.
     * Memory: a handful of narrow per-doc frames per input dir for the

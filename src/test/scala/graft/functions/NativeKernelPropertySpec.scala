@@ -87,27 +87,6 @@ class NativeKernelPropertySpec extends AnyFunSuite {
     })
   }
 
-  test("bloom codec: no false negatives; partial-merge == union build, byte-identical") {
-    val keys = Gen.listOf(Gen.choose(Long.MinValue, Long.MaxValue))
-    val params = for {
-      bits <- Gen.oneOf(64, 128, 1024)
-      hashes <- Gen.choose(1, 8)
-    } yield (bits, hashes)
-    check(Prop.forAll(keys, keys, params) { case (a, b, (bits, hashes)) =>
-      val ba = BloomCodec.create(bits, hashes); a.foreach(BloomCodec.add(ba, _))
-      val bb = BloomCodec.create(bits, hashes); b.foreach(BloomCodec.add(bb, _))
-      val merged = BloomCodec.mergeInto(ba.clone(), bb)
-      val direct = BloomCodec.create(bits, hashes)
-      (a ++ b).foreach(BloomCodec.add(direct, _))
-      // Every inserted key must probe true (the gate's correctness
-      // contract), and OR-of-partials must equal the single-pass build
-      // bit for bit (the aggregate's mergeability contract).
-      (a ++ b).forall(BloomCodec.mightContain(merged, _)) &&
-        a.forall(BloomCodec.mightContain(ba, _)) &&
-        java.util.Arrays.equals(merged, direct)
-    })
-  }
-
   test("pq_encode == reference folded-norm argmax; tables consistent with encode") {
     import org.apache.spark.sql.types.FloatType
     val vecGen = Gen.choose(2, 4).flatMap(msub =>

@@ -401,9 +401,9 @@ class GraftMqStreamingOpsSpec extends SparkSuite {
     // surface: the accumulated corpus's shingle index builds ONCE, is
     // written to parquet, and every MQ micro-batch of arriving documents
     // pairs against the read-back index via jaccardPairsAgainstIndex.
-    // Verdicts are per-doc state-free under a fixed index (default
-    // maxShingleDf — no cross-batch df coupling), so micro-batch unions
-    // must EQUAL the whole-batch run.
+    // Verdicts are per-doc state-free under a fixed index (no
+    // cross-batch coupling), so micro-batch unions must EQUAL the
+    // whole-batch run.
     val src = "jidx-serve-src"
     InMemoryMqBroker.drop(src)
     val state = InMemoryMqBroker.getOrCreate(src, 1)

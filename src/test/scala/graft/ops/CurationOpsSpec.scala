@@ -453,11 +453,11 @@ class CurationOpsSpec extends SparkSuite {
       (2L, Seq("fresh one", "fresh two")),// "fresh one" is doc 1's now → keep-first
       (3L, Seq("OLD NEWS"))               // everything known → empty rewrite
     ).toDF("doc_id", "paras")
-    def run(bits: Int) = TextOps.dedupParagraphsAgainstRef(batch, refFps,
-        bloomBits = bits).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Long]("n_kept"), r.getAs[Long]("n_ref_hits"),
-          r.getAs[String]("text_deduped")))).toMap
+    def run(bits: Int, in: org.apache.spark.sql.DataFrame = batch) =
+      TextOps.dedupParagraphsAgainstRef(in, refFps, bloomBits = bits).collect()
+        .map(r => r.getAs[Long]("doc_id") ->
+          ((r.getAs[Long]("n_kept"), r.getAs[Long]("n_ref_hits"),
+            r.getAs[String]("text_deduped")))).toMap
     val got = run(1 << 20)
     assert(got(1L) == ((1L, 1L, "fresh one")))
     assert(got(2L) == ((1L, 0L, "fresh two")))
@@ -465,6 +465,16 @@ class CurationOpsSpec extends SparkSuite {
     // A saturated Bloom gates nothing but the join still decides
     // membership — results identical by no-false-negatives at ANY sizing.
     assert(run(8) == got)
+    // One partial filter per batch partition, merged: same answer.
+    val split = batch.repartition(3)
+    assert(split.rdd.getNumPartitions == 3)
+    assert(run(1 << 20, split) == got && run(8, split) == got)
+    // No batch paragraph at all: the filter is NULL and gates out the
+    // whole reference, and every document still gets its (empty) row.
+    val noParas = Seq((1L, Seq.empty[String]), (2L, Seq.empty[String]))
+      .toDF("doc_id", "paras")
+    val expected = Map(1L -> ((0L, 0L, "")), 2L -> ((0L, 0L, "")))
+    assert(run(1 << 20, noParas) == expected && run(8, noParas) == expected)
   }
 
   test("dedupParagraphsAgainstRef: empty-array docs keep their output row") {

@@ -223,13 +223,26 @@ class OpsSpec extends SparkSuite {
     assert(got == expected, s"got $got")
   }
 
+  /** Runs `body` with AQE partition coalescing off, so each shuffle
+    * keeps the session's 4 partitions: a Bloom gate over a batch-side
+    * aggregate then builds one partial filter per partition and merges
+    * them. */
+  private def uncoalesced[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val previous = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally previous.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("cross-corpus jaccard: Bloom ref-gate is result-identical at any sizing") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val newSources = Seq("src0", "src1")
     val newBatch = docs.filter(col("source").isin(newSources: _*))
     val ref = docs.filter(!col("source").isin(newSources: _*))
-    def pairs(gateBits: Int): Set[(Long, Long, Double)] =
-      DedupOps.jaccardPairsAgainstRef(newBatch, ref, threshold = 0.5,
+    def pairs(gateBits: Int, batch: org.apache.spark.sql.DataFrame = newBatch)
+        : Set[(Long, Long, Double)] =
+      DedupOps.jaccardPairsAgainstRef(batch, ref, threshold = 0.5,
           refGateBits = gateBits)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val ungated = pairs(0)
@@ -239,27 +252,30 @@ class OpsSpec extends SparkSuite {
     // cannot pair, false negatives do not exist.
     assert(pairs(1 << 22) == ungated, "default Bloom gate changed results")
     assert(pairs(64) == ungated, "saturated Bloom gate changed results")
-    // Also through the df-filtered path (gate sits before the df count).
-    val u2 = DedupOps.jaccardPairsAgainstRef(newBatch, ref, threshold = 0.5,
-        maxShingleDf = 50, refGateBits = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val g2 = DedupOps.jaccardPairsAgainstRef(newBatch, ref, threshold = 0.5,
-        maxShingleDf = 50, refGateBits = 1 << 22)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(g2 == u2, "Bloom gate changed results under the df filter")
+    // A batch spread over 4 partitions: the merged partial filters gate
+    // exactly like the one-partition filter.
+    assert(uncoalesced(pairs(1 << 22)) == ungated, "merged Bloom gate changed results")
+    // An empty batch builds a NULL filter, which drops every ref row.
+    val empty = docs.filter(col("source") === "no-such-source")
+    assert(pairs(1 << 22, empty).isEmpty && pairs(0, empty).isEmpty)
   }
 
   test("cross-corpus embedding pairs: Bloom band-bucket ref-gate is result-identical") {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val newBatch = emb.filter(col("vec_id") % 5 === 0)
     val ref = emb.filter(col("vec_id") % 5 =!= 0)
-    def pairs(gateBits: Int): Set[(Long, Long)] =
-      DedupOps.embeddingPairsAgainstRef(newBatch, ref, threshold = 0.9,
+    def pairs(gateBits: Int, batch: org.apache.spark.sql.DataFrame = newBatch)
+        : Set[(Long, Long)] =
+      DedupOps.embeddingPairsAgainstRef(batch, ref, threshold = 0.9,
           dims = 64, refGateBits = gateBits)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ungated = pairs(0)
     assert(pairs(1 << 22) == ungated, "default Bloom band gate changed results")
     assert(pairs(64) == ungated, "saturated Bloom band gate changed results")
+    assert(uncoalesced(pairs(1 << 22)) == ungated, "merged Bloom band gate changed results")
+    val empty = emb.filter(col("vec_id") < 0)
+    assert(pairs(1 << 22, empty).isEmpty && pairs(0, empty).isEmpty,
+      "empty batch (NULL filter) produced pairs")
   }
 
   test("cross-corpus embedding pairs == symmetric band-gated pairs crossing the split") {

@@ -64,7 +64,7 @@ class PlanAssertionsSpec extends SparkSuite {
     // The reference-side inverted index must pass the broadcast Bloom
     // gate before it shuffles into the candidate join (result-identical
     // by no-false-negatives; the map-side scale asymmetry of the op).
-    assert(p.contains("bloom_might_contain"),
+    assert(p.contains("might_contain("),
       s"expected the Bloom ref-gate in the incremental-dedup plan:\n$p")
   }
 
@@ -81,7 +81,7 @@ class PlanAssertionsSpec extends SparkSuite {
       assert(!p.contains("CartesianProduct"), s"$q: $p")
       assert(!"BroadcastNestedLoopJoin [^,]*, Inner".r.findFirstIn(p).isDefined,
         s"$q: $p")
-      assert(p.contains("bloom_might_contain"),
+      assert(p.contains("might_contain("),
         s"$q: expected the Bloom ref-gate in the appended-index serve:\n$p")
     }
   }

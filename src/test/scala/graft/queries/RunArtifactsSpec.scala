@@ -33,6 +33,12 @@ class RunArtifactsSpec extends SparkSuite {
     val a = first.collect().map(_.toSeq)
     val c = third.collect().map(_.toSeq)
     assert(a.sameElements(c), "rebuilt labeling diverged from the original")
+    // The clear empties EVERY cache: with a second one populated too
+    // (the embedding pair graph), no entry survives it.
+    GraftQueries.queries("dedup_embedding_pairs")(spark, sf())
+    GraftQueries.clearRunArtifacts()
+    assert(GraftQueries.runArtifactEntryCount == 0,
+      s"${GraftQueries.runArtifactEntryCount} run-artifact entries survived the clear")
   }
 
   test("mutating the input dir forces a rebuild (listing-metadata guard, best-effort)") {
